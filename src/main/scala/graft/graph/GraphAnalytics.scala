@@ -1,7 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.core.Loop
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Whole-graph analytics beyond the reference's traversal surface —
   * PageRank and k-core, the two classic "which nodes matter / which
@@ -42,129 +44,149 @@ object GraphAnalytics {
     * broadcast of the aggregated result. No all-pairs anything;
     * per-iteration cost is O(|E|) map-side + one shuffle of O(|V|).
     *
-    * LIFECYCLE (the r5 driver run hash-flaked on this entry, so the
-    * loop is deliberately boring): exactly ONE eager localCheckpoint
-    * frame per iteration, each depending only on the previous frame and
-    * the cached edge set; the previous frame is released with a
-    * BLOCKING unpersist only after the successor's materialization
-    * returned. One driver action per iteration reads the materialized
-    * state and doubles as a SELF-CHECK: row count must equal |V| and
-    * total rank mass must stay within floor-loss distance of `scale`
-    * (integer PageRank conserves mass up to ≤1/row flooring) — a lost
-    * or duplicated storage block fails loudly here instead of
-    * surfacing as a silent hash mismatch downstream.
+    * One eager carry per iteration ([[graft.core.Loop]] has the round
+    * lifecycle); every round and the final frame pass the conservation
+    * self-check of [[rankFold]].
     */
   def pagerankFixedPoint(edges: DataFrame, iters: Int = 5,
                          scale: Long = 1000000000000L,
-                         pairsDistinct: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    // `pairsDistinct`: caller vouches (src, dst) is already
-    // duplicate-free AND persisted (e.g. CodeGraph.edgePairs) — skips
-    // a redundant distinct shuffle + a second in-memory copy
-    val parentCached = pairsDistinct &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pairs0 =
-      if (pairsDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct()
-    // self-persisted pairs are laid out by src like the stored edge
-    // index (CodeGraph.edgePairs), so per-iteration probes on src
-    // exchange ONLY the O(V) state side — never the edge set
-    val pairs = if (parentCached) pairs0
-      else pairs0.repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nodes = pairs.select(col("src").as("id"))
-        .union(pairs.select(col("dst").as("id"))).distinct()
-      val outdeg = pairs.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("outdeg"))
-      // topology frame (id, outdeg): fixed across iterations; outdeg
-      // NULL marks the dangling set (the reference formulation computed
-      // it as a separate anti-join table). Iteration 0's rank is a lazy
-      // literal over this frame — no second checkpoint just to attach
-      // a constant column.
-      val topo = nodes.join(outdeg, Seq("id"), "left").localCheckpoint(true)
-      val n = topo.count() // free: topo is materialized
-      val base = scale / n
-      val teleport = 15L * base / 100L
-      // while the share table is V-bounded, SHIP IT into the E-sized
-      // join — the edge set never shuffles; past the threshold the
-      // shuffled path takes over, probing the src-partitioned edge
-      // layout (only the O(V) share table moves). Integer sums make the
-      // result identical on either path.
-      val small = n <= 1000000L
-      var state = topo.withColumn("rank", lit(base))
-      var frame: DataFrame = null // checkpointed frame backing `state`
-      // per-iteration state shuffles are V-sized; the contribution
-      // shuffle's input is E-scale — size from both (pairs is
-      // materialized, its count is a cache scan)
-      graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, n,
-        pairs.count()) {
+                         pairsDistinct: Boolean = false): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Eager) { loop =>
+      withSrcPairs(edges, pairsDistinct) { pairs =>
+        rankFold(loop, "pagerank", "pagerank_iter", pairs,
+          outTopology(pairs, count(lit(1)).as("outdeg")),
+          Seq(expr("rank div outdeg").as("share")), col("share"), iters, scale)(
+          uniformTeleport(scale))
+      }
+    }
+
+  /** What a PageRank-family caller adds to [[rankFold]] once n = |V| is
+    * known: the round-0 rank, the teleport term of rank', which nodes
+    * take the dangling share (`dangIn`, SQL over `dsh`, 0 elsewhere) and
+    * the divisor that splits the dangling mass.
+    */
+  private final case class Teleport(rank0: Column, term: Column,
+                                    dangIn: String, dangDiv: Long)
+
+  /** Global PageRank's teleport: base = scale div n everywhere. */
+  private def uniformTeleport(scale: Long)(n: Long): Teleport =
+    Teleport(lit(scale / n), lit(15L * (scale / n) / 100L), "dsh", n)
+
+  /** (id, degree) over every endpoint of `edges`; `degree` aggregates
+    * each node's out-edges and is NULL on the dangling set.
+    */
+  private def outTopology(edges: DataFrame, degree: Column): DataFrame =
+    endpoints(edges).join(edges.groupBy(col("src").as("id")).agg(degree),
+      Seq("id"), "left")
+
+  private def endpoints(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct()
+
+  /** The (src, dst) pair view of `edges` for the loops that probe on src,
+    * lent to `f`. `pairsDistinct`: the caller vouches (src, dst) is
+    * duplicate-free; if its frame is also persisted (e.g.
+    * CodeGraph.edgePairs) it is used as is — no distinct shuffle, no
+    * second in-memory copy.
+    */
+  private def withSrcPairs[T](edges: DataFrame, pairsDistinct: Boolean)(
+      f: DataFrame => T): T = {
+    val pairs = edges.select(col("src"), col("dst"))
+    bySrc(if (pairsDistinct) pairs else pairs.distinct(),
+      pairsDistinct && edges.storageLevel != StorageLevel.NONE)(f)
+  }
+
+  /** Lend `edges` to `f` laid out by src like the stored edge index, so
+    * per-iteration probes on src exchange ONLY the O(V) state side —
+    * never the edge set. Persisted for `f` and released after it, unless
+    * the caller's frame is already `cached`.
+    */
+  private def bySrc[T](edges: DataFrame, cached: Boolean)(f: DataFrame => T): T = {
+    val laid = if (cached) edges
+      else edges.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+    try f(laid) finally if (!cached) laid.unpersist()
+  }
+
+  /** The fold every PageRank-family round runs — a Pregel superstep as
+    * one message join plus one group-by combine (Pregelix's shape).
+    *
+    * `topology` is (id, degree, extra...): `degree` is NULL on dangling
+    * nodes, and every column beyond `id` is carried unchanged from round
+    * to round. A round:
+    *  - folds the dangling mass and the conservation SELF-CHECK into ONE
+    *    1-row frame (`dsh`): row count must equal n and total mass stay
+    *    within floor-loss distance of `scale` (integer PageRank conserves
+    *    mass up to ≤ 1 unit per row), else an in-plan raise_error fails
+    *    the round — a lost or duplicated storage block fails loudly
+    *    instead of surfacing as a silent hash mismatch. Fused into the
+    *    state rebuild as a broadcast (r14), it costs no driver action;
+    *  - SHIPS the `shipped` columns of the live (non-dangling) rows into
+    *    the E-sized join with `edges` on src while V is broadcastable
+    *    (r14 — the LPA/components pattern): the checkpointed state
+    *    carries no size stats, so without the hint the planner
+    *    sort-merge-joins and RE-EXCHANGES the edge set at the loop width
+    *    every iteration (JobProbe: a 32-task E-sort stage per
+    *    iteration); `inc` is each contribution, read off the joined row;
+    *  - rebuilds the state as ONE partial-agg shuffle: old-state rows
+    *    (inc 0, real carried columns) union contribution rows (inc, NULL
+    *    carried columns); max() recovers the carried columns, sum(inc)
+    *    the incoming mass. Every contribution dst is a node and every
+    *    node has a state row, so the groupBy is total over V. Integer
+    *    sums make the result identical on the broadcast or shuffled path.
+    * The final frame, which the caller writes, is checked once more.
+    */
+  private def rankFold(loop: Loop, name: String, tag: String,
+                       edges: DataFrame, topology: DataFrame,
+                       shipped: Seq[Column], inc: Column, iters: Int,
+                       scale: Long)(teleport: Long => Teleport): DataFrame = {
+    val topo = loop.seed(topology)
+    val n = topo.count() // free: topo is materialized
+    val tp = teleport(n)
+    val carried = topo.columns.toSeq.filter(_ != "id")
+    val degree = col(carried.head)
+    val minMass = scale - scale / 100L
+    def ship(df: DataFrame) = if (n <= 1000000L) broadcast(df) else df
+    var state = topo.withColumn("rank", tp.rank0)
+    // per-iteration state shuffles are V-sized; the contribution
+    // shuffle's input is E-scale — size from both (edges is
+    // materialized, its count is a cache scan)
+    loop.rounds(n, edges.count()) {
       for (it <- 1 to iters) {
-        // dangling mass + the conservation self-check, FUSED into the
-        // state-rebuild job as a 1-row broadcast (r14): the separate
-        // .first() action cost one driver round-trip per iteration —
-        // 2 jobs/iter where the rebuild alone suffices. The check
-        // stays LOUD via an in-plan raise_error (the graph_msf
-        // pack-check pattern), evaluated on the single aggregated row
-        // before the rank expression reads dsh; dsh = dang div n is
-        // the identical floor division (oracle's `// n`).
         val inv = state.agg(
           count(lit(1)).as("cnt"),
           sum("rank").as("total"),
-          coalesce(sum(when(col("outdeg").isNull, col("rank"))), lit(0L))
-            .as("dang"))
+          coalesce(sum(when(degree.isNull, col("rank"))), lit(0L)).as("dang"))
           .select(expr(
             s"CASE WHEN cnt = ${n}L AND total > 0L AND total <= ${scale}L" +
-              s" AND total >= ${scale - scale / 100L}L THEN dang div ${n}L" +
-              " ELSE CAST(raise_error(concat('pagerank invariant broken " +
+              s" AND total >= ${minMass}L THEN dang div ${tp.dangDiv}L" +
+              s" ELSE CAST(raise_error(concat('$name invariant broken " +
               s"before iter $it: rows=', cnt, ' (expected $n), mass=', " +
               s"total, ' (expected ~$scale) — a state frame lost or " +
               "duplicated storage blocks')) AS BIGINT) END").as("dsh"))
-        val shares = state.filter(col("outdeg").isNotNull)
-          .select(col("id").as("src"), expr("rank div outdeg").as("share"))
-        // SHIP the V-sized share table into the E-sized join while V
-        // is broadcastable (r14 — the LPA/components pattern, finally
-        // applied here): the checkpointed state carries no size stats,
-        // so without the hint the planner sort-merge-joins and
-        // RE-EXCHANGES the edge set at the loop width every iteration
-        // (JobProbe: a 32-task E-sort stage per iteration). Broadcast
-        // makes the join map-side over the cached edge partitions; the
-        // only shuffle left per iteration is the V-sized partial-agg
-        // state rebuild. Integer sums: identical result on either path.
-        val contrib =
-          pairs.join(if (small) broadcast(shares) else shares, Seq("src"))
-            .select(col("dst").as("id"),
-              lit(null).cast("long").as("outdeg"), col("share").as("inc"))
-        // state rebuild as ONE partial-agg shuffle: old-state rows (inc
-        // 0, real outdeg) union contribution rows (inc share, null
-        // outdeg); max(outdeg) recovers the topology, sum(inc) the
-        // incoming mass. Every contribution dst is a node, and every
-        // node has a state row, so the groupBy is total over V.
-        val next0 = state.select(col("id"), col("outdeg"), lit(0L).as("inc"))
+        val live = state.filter(degree.isNotNull)
+          .select(col("id").as("src") +: shipped: _*)
+        val contrib = edges.join(ship(live), Seq("src"))
+          .select(col("dst").as("id") +:
+            carried.map(lit(null).cast("long").as(_)) :+ inc.as("inc"): _*)
+        val folds = carried.map(c => max(c).as(c)) :+ sum("inc").as("inc")
+        state = loop.carry(tag, state
+          .select(col("id") +: carried.map(col) :+ lit(0L).as("inc"): _*)
           .unionByName(contrib)
           .groupBy("id")
-          .agg(max("outdeg").as("outdeg"), sum("inc").as("inc"))
+          .agg(folds.head, folds.tail: _*)
           .crossJoin(broadcast(inv))
-          .select(col("id"), col("outdeg"),
-            (lit(teleport) +
-              expr("85 * (inc + dsh) div 100")).as("rank"))
-        graft.core.PlanTrace.round("pagerank_iter", next0)
-        val next = next0.localCheckpoint(true)
-        if (frame != null) graft.core.Checkpoints.drop(frame)
-        else graft.core.Checkpoints.drop(topo) // iter 1 consumed it
-        frame = next
-        state = next
+          .select(col("id") +: carried.map(col) :+ (tp.term +
+            expr(s"85 * (inc + ${tp.dangIn}) div 100")).as("rank"): _*))
       }
-      } // withLoopShuffle
-      // validate the FINAL frame too — it is what the caller writes
-      val fin = state.agg(count(lit(1)).as("cnt"), sum("rank").as("total"))
-        .first()
-      if (fin.getLong(0) != n || fin.getLong(1) <= 0L ||
-          fin.getLong(1) > scale || fin.getLong(1) < scale - scale / 100L)
-        throw new IllegalStateException(
-          s"pagerank invariant broken on final state: rows=${fin.getLong(0)} " +
-            s"(expected $n), mass=${fin.getLong(1)} (expected ~$scale)")
-      state.select("id", "rank")
-    } finally if (!parentCached) pairs.unpersist()
+    }
+    val fin = state.agg(count(lit(1)).as("cnt"), sum("rank").as("total"))
+      .first()
+    if (fin.getLong(0) != n || fin.getLong(1) <= 0L ||
+        fin.getLong(1) > scale || fin.getLong(1) < minMass)
+      throw new IllegalStateException(
+        s"$name invariant broken on final state: rows=${fin.getLong(0)} " +
+          s"(expected $n), mass=${fin.getLong(1)} (expected ~$scale)")
+    state.select("id", "rank")
   }
 
   /** DuckDB oracle for [[pagerankFixedPoint]]: the SAME iteration
@@ -211,10 +233,11 @@ object GraphAnalytics {
     * proportionally to weight — share(u→v) = rank(u)·w(u,v) div W(u),
     * W(u) = Σ out-weights — the variant real graphs need when edges
     * carry multiplicity (call counts, co-occurrence counts,
-    * interaction strength). Same geometry per iteration: ONE
-    * state⋈edges equi-join probing the src-partitioned weighted edge
+    * interaction strength). Same geometry per iteration ([[rankFold]]):
+    * ONE state⋈edges equi-join probing the src-partitioned weighted edge
     * set + ONE O(V) partial-agg state rebuild; dangling mass and the
-    * conservation self-check ride the same single driver action.
+    * conservation self-check ride the fused invariant row, and the
+    * final frame is checked too.
     * Integer floor-divs lose < 1 unit per edge per iteration —
     * well inside the scale/100 invariant tolerance. Caller contract:
     * `w ≥ 1` and `max(rank)·max(w) < 2^63` (at the default scale,
@@ -223,74 +246,25 @@ object GraphAnalytics {
     * `edgesW` columns: src, dst, w (one row per weighted edge).
     */
   def pagerankWeighted(edgesW: DataFrame, iters: Int = 5,
-                       scale: Long = 1000000000000L): DataFrame = graft.core.Checkpoints.withoutAqe(edgesW.sparkSession) {
-    val ew = edgesW.select(col("src"), col("dst"),
+                       scale: Long = 1000000000000L): DataFrame =
+    Loop.run(edgesW.sparkSession, Loop.Eager) { loop =>
+      val weighted = edgesW.select(col("src"), col("dst"),
         col("w").cast("long").as("w"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // enforce the caller contract UP FRONT: w = 0 silently leaks rank
-      // mass (rank·0 div wout) and w < 0 corrupts the distribution until
-      // the conservation invariant trips iterations later with a
-      // confusing message — one O(E) partial agg on the just-persisted
-      // edge set (also its materializing action) fails at the input
-      val minW = ew.agg(coalesce(min("w"), lit(1L))).first().getLong(0)
-      require(minW >= 1L,
-        s"pagerankWeighted requires every edge weight >= 1, got min(w)=$minW")
-      val nodes = ew.select(col("src").as("id"))
-        .union(ew.select(col("dst").as("id"))).distinct()
-      val wout = ew.groupBy(col("src").as("id")).agg(sum("w").as("wout"))
-      val topo = nodes.join(wout, Seq("id"), "left").localCheckpoint(true)
-      val n = topo.count()
-      val base = scale / n
-      val teleport = 15L * base / 100L
-      var state = topo.withColumn("rank", lit(base))
-      var frame: DataFrame = null
-      graft.core.Checkpoints.withLoopShuffle(edgesW.sparkSession, n,
-        ew.count()) {
-        for (it <- 1 to iters) {
-          // fused 1-row invariant/dangling broadcast — see
-          // [[pagerankFixedPoint]] (r14)
-          val inv = state.agg(
-            count(lit(1)).as("cnt"),
-            sum("rank").as("total"),
-            coalesce(sum(when(col("wout").isNull, col("rank"))), lit(0L))
-              .as("dang"))
-            .select(expr(
-              s"CASE WHEN cnt = ${n}L AND total > 0L AND total <= ${scale}L" +
-                s" AND total >= ${scale - scale / 100L}L THEN dang div ${n}L" +
-                " ELSE CAST(raise_error(concat('weighted pagerank invariant " +
-                s"broken before iter $it: rows=', cnt, ' (expected $n), " +
-                s"mass=', total, ' (expected ~$scale)')) AS BIGINT) END")
-              .as("dsh"))
-          // ship the V-sized rank table into the E join while small
-          // (r14 — see pagerankFixedPoint)
-          val rnk = state.filter(col("wout").isNotNull)
-            .select(col("id").as("src"), col("rank"), col("wout"))
-          val contrib = ew
-            .join(if (n <= 1000000L) broadcast(rnk) else rnk, Seq("src"))
-            .select(col("dst").as("id"),
-              lit(null).cast("long").as("wout"),
-              expr("(rank * w) div wout").as("inc"))
-          val next0 = state.select(col("id"), col("wout"), lit(0L).as("inc"))
-            .unionByName(contrib)
-            .groupBy("id")
-            .agg(max("wout").as("wout"), sum("inc").as("inc"))
-            .crossJoin(broadcast(inv))
-            .select(col("id"), col("wout"),
-              (lit(teleport) +
-                expr("85 * (inc + dsh) div 100")).as("rank"))
-          graft.core.PlanTrace.round("pagerank_weighted_iter", next0)
-          val next = next0.localCheckpoint(true)
-          if (frame != null) graft.core.Checkpoints.drop(frame)
-          else graft.core.Checkpoints.drop(topo)
-          frame = next
-          state = next
-        }
+      bySrc(weighted, cached = false) { ew =>
+        // enforce the caller contract UP FRONT: w = 0 silently leaks rank
+        // mass (rank·0 div wout) and w < 0 corrupts the distribution until
+        // the conservation invariant trips iterations later with a
+        // confusing message — one O(E) partial agg on the just-persisted
+        // edge set (also its materializing action) fails at the input
+        val minW = ew.agg(coalesce(min("w"), lit(1L))).first().getLong(0)
+        require(minW >= 1L,
+          s"pagerankWeighted requires every edge weight >= 1, got min(w)=$minW")
+        rankFold(loop, "weighted pagerank", "pagerank_weighted_iter", ew,
+          outTopology(ew, sum("w").as("wout")),
+          Seq(col("rank"), col("wout")), expr("(rank * w) div wout"), iters,
+          scale)(uniformTeleport(scale))
       }
-      state.select("id", "rank")
-    } finally ew.unpersist()
-  }
+    }
 
   /** DuckDB oracle for [[pagerankWeighted]] — the identical iteration
     * unrolled over the weighted edge CTE (`weightedSql` must yield
@@ -343,89 +317,64 @@ object GraphAnalytics {
     */
   def hitsFixedPoint(edges: DataFrame, iters: Int = 5,
                      scale: Long = 1000000000000L,
-                     pairsDistinct: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    val parentCached = pairsDistinct &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pairs0 =
-      if (pairsDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct()
-    val pairs = if (parentCached) pairs0
-      else pairs0.repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nodes = pairs.select(col("src").as("id"))
-        .union(pairs.select(col("dst").as("id"))).distinct()
-        .localCheckpoint(true)
-      val n = nodes.count()
-      val init = scale / n
-      // SPARSE state carry (r14): a node absent from a raw-sum frame
-      // has score 0 and contributes NOTHING to either propagation sum
-      // or normalization scalar — so the per-iteration zero-fill
-      // (nodes ⋈ hub ⋈ authority + one eager checkpoint job, two
-      // V-scale joins per iteration) is dead weight. Carry only the
-      // raw-sum frames (2 jobs/iteration — each normalization
-      // aggregate doubles as the lazy checkpoint's materializing
-      // action, the bfsLoop pattern) and zero-fill ONCE at the end;
-      // values are identical by construction (guide §1.2: remove
-      // passes that compute what you throw away).
-      var hubs: DataFrame = nodes.select(col("id"), lit(init).as("hub"))
-      var lastHRaw: DataFrame = null
-      var aNewFin: DataFrame = null
-      var hNewFin: DataFrame = null
-      // SHIP the V-sized score tables into both E-sized joins while V
-      // is broadcastable (r14 — see pagerankFixedPoint): without the
-      // hint the stat-less checkpointed state forces a sort-merge join
-      // that re-exchanges the edge set at the loop width per direction
-      // per iteration; broadcast keeps both probes map-side over the
-      // cached edge partitions (the dst-keyed probe could never reuse
-      // the src layout anyway).
-      val smallV = n <= 1000000L
-      def shipIf(df: DataFrame) = if (smallV) broadcast(df) else df
-      graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, n,
-        pairs.count()) {
-        for (t <- 1 to iters) {
-          // authorities from the previous hubs
-          val aRaw0 = pairs
-            .join(shipIf(hubs.select(col("id").as("src"), col("hub"))),
-              Seq("src"))
-            .groupBy(col("dst").as("id")).agg(sum("hub").as("raw"))
-          graft.core.PlanTrace.round("hits_authraw_iter", aRaw0)
-          val aRaw = aRaw0.localCheckpoint(false)
-          val sumA = aRaw.agg(coalesce(sum("raw"), lit(0L))).first().getLong(0)
-          // prev hRaw's last consumer was this aRaw job
-          if (lastHRaw != null) graft.core.Checkpoints.drop(lastHRaw)
-          val aNew = aRaw.select(col("id"),
-            expr(s"CAST(raw AS DECIMAL(38,0)) * ${scale}L" +
-              s" div ${math.max(1L, sumA)}L").as("authority"))
-          // hubs from the NEW authorities (standard HITS sequencing)
-          val hRaw0 = pairs
-            .join(shipIf(aNew.select(col("id").as("dst"), col("authority"))),
-              Seq("dst"))
-            .groupBy(col("src").as("id")).agg(sum("authority").as("raw"))
-          graft.core.PlanTrace.round("hits_hubraw_iter", hRaw0)
-          val hRaw = hRaw0.localCheckpoint(false)
-          val sumH = hRaw.agg(coalesce(sum("raw"), lit(0L))).first().getLong(0)
-          // this aRaw's last consumer was the hRaw job — unless it is
-          // the final iteration's, which the output assembly reads
-          if (t < iters) graft.core.Checkpoints.drop(aRaw)
-          else aNewFin = aNew
-          val hNew = hRaw.select(col("id"),
-            expr(s"CAST(raw AS DECIMAL(38,0)) * ${scale}L" +
-              s" div ${math.max(1L, sumH)}L").as("hub"))
-          lastHRaw = hRaw
-          if (t == iters) hNewFin = hNew
-          hubs = hNew
+                     pairsDistinct: Boolean = false): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
+      withSrcPairs(edges, pairsDistinct) { pairs =>
+        val nodes = loop.pin(endpoints(pairs))
+        val n = nodes.count()
+        // SPARSE state carry (r14): a node absent from a raw-sum frame
+        // has score 0 and contributes NOTHING to either propagation sum
+        // or normalization scalar — so the per-iteration zero-fill
+        // (nodes ⋈ hub ⋈ authority + one eager checkpoint job, two
+        // V-scale joins per iteration) is dead weight. Carry only the
+        // raw-sum frames as lazy carries (2 jobs/iteration — each
+        // normalization aggregate doubles as the materializing action,
+        // the bfsLoop pattern) and zero-fill ONCE at the end; values are
+        // identical by construction (guide §1.2: remove passes that
+        // compute what you throw away).
+        var hubs: DataFrame = nodes.select(col("id"), lit(scale / n).as("hub"))
+        var auths: DataFrame = null
+        // SHIP the V-sized score tables into both E-sized joins while V
+        // is broadcastable (r14 — see rankFold): without the hint the
+        // stat-less checkpointed state forces a sort-merge join that
+        // re-exchanges the edge set at the loop width per direction per
+        // iteration; broadcast keeps both probes map-side over the
+        // cached edge partitions (the dst-keyed probe could never reuse
+        // the src layout anyway).
+        val smallV = n <= 1000000L
+        def shipIf(df: DataFrame) = if (smallV) broadcast(df) else df
+        def total(raw: DataFrame) =
+          raw.agg(coalesce(sum("raw"), lit(0L))).first().getLong(0)
+        def normalized(raw: DataFrame, total: Long, as: String) =
+          raw.select(col("id"), expr(s"CAST(raw AS DECIMAL(38,0)) * ${scale}L" +
+            s" div ${math.max(1L, total)}L").as(as))
+        loop.rounds(n, pairs.count()) {
+          for (t <- 1 to iters) {
+            // authorities from the previous hubs
+            val aRaw = loop.carry("hits_authraw_iter", pairs
+              .join(shipIf(hubs.select(col("id").as("src"), col("hub"))),
+                Seq("src"))
+              .groupBy(col("dst").as("id")).agg(sum("hub").as("raw")))
+            auths = normalized(aRaw, loop.settle(total(aRaw)), "authority")
+            // hubs from the NEW authorities (standard HITS sequencing)
+            val hRaw = loop.carry("hits_hubraw_iter", pairs
+              .join(shipIf(auths.select(col("id").as("dst"), col("authority"))),
+                Seq("dst"))
+              .groupBy(col("src").as("id")).agg(sum("authority").as("raw")))
+            // the final authorities feed the output assembly: keep them
+            hubs = normalized(hRaw, loop.settle(total(hRaw), release = t < iters),
+              "hub")
+          }
         }
+        // the ONE zero-fill join pass, over the final frames only
+        nodes
+          .join(hubs, Seq("id"), "left")
+          .join(auths.withColumnRenamed("id", "id2"),
+            col("id") === col("id2"), "left")
+          .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
+            coalesce(col("authority"), lit(0L)).as("authority"))
       }
-      // the ONE zero-fill join pass, over the final frames only
-      nodes
-        .join(hNewFin, Seq("id"), "left")
-        .join(aNewFin.withColumnRenamed("id", "id2"),
-          col("id") === col("id2"), "left")
-        .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
-          coalesce(col("authority"), lit(0L)).as("authority"))
-    } finally if (!parentCached) pairs.unpersist()
-  }
+    }
 
   /** DuckDB oracle for [[hitsFixedPoint]] — the identical iteration
     * (integer renormalization included) unrolled as MATERIALIZED CTEs.
@@ -758,14 +707,7 @@ object GraphAnalytics {
   def minimumSpanningForest(edges: DataFrame, rounds: Int = 8,
                             metaDriverMax: Long = 1000000L,
                             canonicalInput: Boolean = false,
-                            driverTailMax: Long = 1000000L,
-                            probe: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    def timed[T](label: String)(f: => T): T =
-      if (!probe) f else {
-        val t0 = System.nanoTime(); val res = f
-        println(f"    [msf] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        res
-      }
+                            driverTailMax: Long = 1000000L): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
     // canonical undirected edge list: a < b, min weight per pair.
     // `canonicalInput` lets a caller that KNOWS its pairs are already
     // unique per undirected pair (e.g. a stored distinct edge index of
@@ -776,7 +718,7 @@ object GraphAnalytics {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"), col("w"))
       .filter(col("a") =!= col("b"))
-    val canon = timed("canon") {
+    val canon =
       if (canonicalInput) {
         // canonical input still MATERIALIZES once unless the caller's
         // frame is already persisted: the canonical projection may sit
@@ -795,7 +737,6 @@ object GraphAnalytics {
       }
       else canonRaw.groupBy("a", "b").agg(min("w").as("w"))
         .localCheckpoint(true)
-    }
     // TRUE Borůvka contraction: after each round the graph is
     // re-expressed over component labels — (ca, cb) meta-endpoints with
     // the original endpoints (oa, ob) carried so forest edges stay
@@ -818,10 +759,8 @@ object GraphAnalytics {
     // approx distincts (≤2× over when most nodes appear on both
     // sides) — sizing only needs the magnitude, and withLoopShuffle
     // rounds to a partition count anyway.
-    val sizeRow = timed("size scan") {
-      canon.agg(count(lit(1)), approx_count_distinct(col("a")),
-        approx_count_distinct(col("b"))).head()
-    }
+    val sizeRow = canon.agg(count(lit(1)), approx_count_distinct(col("a")),
+      approx_count_distinct(col("b"))).head()
     val nEdges = sizeRow.getLong(0)
     val nNodes = math.min(sizeRow.getLong(1) + sizeRow.getLong(2),
       2 * nEdges)
@@ -869,9 +808,7 @@ object GraphAnalytics {
     }
     // metadata-scale input: no distributed rounds at all, one Kruskal
     if (driverTailMax > 0 && nEdges <= driverTailMax) {
-      val rows = timed("driver tail (whole graph)") {
-        live.select("ca", "cb", "w", "oa", "ob").collect()
-      }
+      val rows = live.select("ca", "cb", "w", "oa", "ob").collect()
       forest = forest.unionByName(kruskalTail(rows))
       crossing = 0
     }
@@ -887,14 +824,13 @@ object GraphAnalytics {
       // contraction are duplicate-insensitive, and the forest dedups
       // ONCE at assembly.
       val e = struct(col("w"), col("oa"), col("ob"), col("ca"), col("cb"))
-      val chosen = timed(s"r$r chosen") {
-        val ch = live.select(col("ca").as("comp"), e.as("e"))
-          .union(live.select(col("cb").as("comp"), e.as("e")))
-          .groupBy("comp").agg(min("e").as("e"))
-          .select(col("e.w").as("w"), col("e.oa").as("oa"),
-            col("e.ob").as("ob"), col("e.ca").as("ca"), col("e.cb").as("cb"))
-        graft.core.PlanTrace.round("msf_chosen_round", ch)
-        ch.localCheckpoint(true) }
+      val ch = live.select(col("ca").as("comp"), e.as("e"))
+        .union(live.select(col("cb").as("comp"), e.as("e")))
+        .groupBy("comp").agg(min("e").as("e"))
+        .select(col("e.w").as("w"), col("e.oa").as("oa"),
+          col("e.ob").as("ob"), col("e.ca").as("ca"), col("e.cb").as("cb"))
+      graft.core.PlanTrace.round("msf_chosen_round", ch)
+      val chosen = ch.localCheckpoint(true)
       forest = forest.unionByName(
         chosen.select(col("oa").as("a"), col("ob").as("b"), col("w")))
       // nChosen counts CHOOSING components (a doubly-chosen edge rides
@@ -902,7 +838,7 @@ object GraphAnalytics {
       // 2x the distinct chosen edges; using it for the metaDriverMax
       // gate is therefore CONSERVATIVE — overcounting can only push the
       // merge to the distributed path early, never collect too much.
-      val nChosen = timed(s"r$r count") { chosen.count() } // materialized: free
+      val nChosen = chosen.count() // materialized: free
       if (nChosen == 0) crossing = 0
       else {
         // merged-set relabeling (set -> its MIN member, the same
@@ -912,7 +848,7 @@ object GraphAnalytics {
         // — a dozen distributed jobs to merge a few thousand labels is
         // pure overhead); past metaDriverMax the distributed
         // pointer-jumping CC takes over.
-        val mapping = timed(s"r$r mapping") {
+        val mapping =
           if (nChosen <= metaDriverMax) {
             // id-type-generic (String ids OR a caller's packed LONG
             // encoding — narrow integer keys make every loop shuffle
@@ -956,7 +892,6 @@ object GraphAnalytics {
               chosen.select(col("ca").as("src"), col("cb").as("dst")),
               rounds = 6, pairsDistinct = false)
               .select(col("id").as("c"), col("component").as("c2"))
-        }
         // contract: relabel endpoints, drop intra-component edges, keep
         // the lightest (w, oa, ob) edge per component pair. The
         // broadcast hint only applies to the driver-sized mapping; the
@@ -967,23 +902,22 @@ object GraphAnalytics {
           if (nChosen <= metaDriverMax) broadcast(s0) else s0
         }
         val prevLive = live
-        live = timed(s"r$r contract") {
-          val ct = live
-            .join(side("ca", "ma"), Seq("ca"), "left")
-            .join(side("cb", "mb"), Seq("cb"), "left")
-            .select(coalesce(col("ma"), col("ca")).as("na"),
-              coalesce(col("mb"), col("cb")).as("nb"),
-              col("w"), col("oa"), col("ob"))
-            .filter(col("na") =!= col("nb"))
-            .select(least(col("na"), col("nb")).as("ca"),
-              greatest(col("na"), col("nb")).as("cb"),
-              col("w"), col("oa"), col("ob"))
-            .groupBy("ca", "cb").agg(min(m).as("m"))
-            .select(col("ca"), col("cb"), col("m.w").as("w"),
-              col("m.oa").as("oa"), col("m.ob").as("ob"))
-          graft.core.PlanTrace.round("msf_contract_round", ct)
-          ct.localCheckpoint(true) }
-        crossing = timed(s"r$r crossing") { live.count() }
+        val ct = live
+          .join(side("ca", "ma"), Seq("ca"), "left")
+          .join(side("cb", "mb"), Seq("cb"), "left")
+          .select(coalesce(col("ma"), col("ca")).as("na"),
+            coalesce(col("mb"), col("cb")).as("nb"),
+            col("w"), col("oa"), col("ob"))
+          .filter(col("na") =!= col("nb"))
+          .select(least(col("na"), col("nb")).as("ca"),
+            greatest(col("na"), col("nb")).as("cb"),
+            col("w"), col("oa"), col("ob"))
+          .groupBy("ca", "cb").agg(min(m).as("m"))
+          .select(col("ca"), col("cb"), col("m.w").as("w"),
+            col("m.oa").as("oa"), col("m.ob").as("ob"))
+        graft.core.PlanTrace.round("msf_contract_round", ct)
+        live = ct.localCheckpoint(true)
+        crossing = live.count()
         // prev round's live frame is dead (chosen frames stay: forest
         // is a lazy union over them; round 1's prev is a projection of
         // canon, where drop() is a strict no-op)
@@ -992,9 +926,7 @@ object GraphAnalytics {
         // (already materialized) live frame and finish with Kruskal
         // instead of paying ~5 more jobs per geometric-tail round
         if (crossing > 0 && crossing <= driverTailMax) {
-          val rows = timed(s"r$r driver tail") {
-            live.select("ca", "cb", "w", "oa", "ob").collect()
-          }
+          val rows = live.select("ca", "cb", "w", "oa", "ob").collect()
           forest = forest.unionByName(kruskalTail(rows))
           graft.core.Checkpoints.drop(live)
           crossing = 0
@@ -2112,94 +2044,22 @@ object GraphAnalytics {
     */
   def pprFixedPoint(edges: DataFrame, seeds: Seq[String], iters: Int = 5,
                     scale: Long = 1000000000000L,
-                    pairsDistinct: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
+                    pairsDistinct: Boolean = false): DataFrame = {
     require(seeds.nonEmpty, "ppr needs at least one seed")
     val nSeeds = seeds.size.toLong
-    val parentCached = pairsDistinct &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pairs0 =
-      if (pairsDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct()
-    // self-persisted pairs are laid out by src like the stored edge
-    // index (CodeGraph.edgePairs), so per-iteration probes on src
-    // exchange ONLY the O(V) state side — never the edge set
-    val pairs = if (parentCached) pairs0
-      else pairs0.repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nodes = pairs.select(col("src").as("id"))
-        .union(pairs.select(col("dst").as("id"))).distinct()
-      val outdeg = pairs.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("outdeg"))
-      val tshare = scale / nSeeds
-      val isSeed = col("id").isin(seeds: _*)
-      // same single-frame-per-iteration lifecycle + conservation
-      // self-check as [[pagerankFixedPoint]] (the r5 flake pair); the
-      // state additionally carries the fixed teleport column. Iteration
-      // 0's rank is a lazy copy of tele over the materialized topology.
-      val topo = nodes.join(outdeg, Seq("id"), "left")
-        .withColumn("tele", when(isSeed, lit(tshare)).otherwise(lit(0L)))
-        .localCheckpoint(true)
-      val n = topo.count() // free: topo is materialized
-      val small = n <= 1000000L
-      var state = topo.withColumn("rank", col("tele"))
-      var frame: DataFrame = null
-      // same two-input sizing as pagerank
-      graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, n,
-        pairs.count()) {
-      for (it <- 1 to iters) {
-        // fused 1-row invariant/dangling broadcast — see
-        // [[pagerankFixedPoint]] (r14); dsh = dang div nSeeds, the
-        // oracle's `// nSeeds`
-        val inv = state.agg(
-          count(lit(1)).as("cnt"),
-          sum("rank").as("total"),
-          coalesce(sum(when(col("outdeg").isNull, col("rank"))), lit(0L))
-            .as("dang"))
-          .select(expr(
-            s"CASE WHEN cnt = ${n}L AND total > 0L AND total <= ${scale}L" +
-              s" AND total >= ${scale - scale / 100L}L THEN dang div ${nSeeds}L" +
-              " ELSE CAST(raise_error(concat('ppr invariant broken " +
-              s"before iter $it: rows=', cnt, ' (expected $n), mass=', " +
-              s"total, ' (expected ~$scale) — a state frame lost or " +
-              "duplicated storage blocks')) AS BIGINT) END").as("dsh"))
-        val shares = state.filter(col("outdeg").isNotNull)
-          .select(col("id").as("src"), expr("rank div outdeg").as("share"))
-        // ship the V-sized share table into the E join while small
-        // (r14 — see pagerankFixedPoint)
-        val contrib =
-          pairs.join(if (small) broadcast(shares) else shares, Seq("src"))
-            .select(col("dst").as("id"),
-              lit(null).cast("long").as("outdeg"),
-              lit(null).cast("long").as("tele"), col("share").as("inc"))
-        val next0 = state
-          .select(col("id"), col("outdeg"), col("tele"), lit(0L).as("inc"))
-          .unionByName(contrib)
-          .groupBy("id")
-          .agg(max("outdeg").as("outdeg"), max("tele").as("tele"),
-            sum("inc").as("inc"))
-          .crossJoin(broadcast(inv))
-          .select(col("id"), col("outdeg"), col("tele"),
-            (expr("15 * tele div 100") +
-              expr("85 * (inc + if(tele > 0L, dsh, 0L)) div 100"))
-              .as("rank"))
-        graft.core.PlanTrace.round("ppr_iter", next0)
-        val next = next0.localCheckpoint(true)
-        if (frame != null) graft.core.Checkpoints.drop(frame)
-        else graft.core.Checkpoints.drop(topo) // iter 1 consumed it
-        frame = next
-        state = next
+    Loop.run(edges.sparkSession, Loop.Eager) { loop =>
+      withSrcPairs(edges, pairsDistinct) { pairs =>
+        // the state additionally carries the fixed teleport column;
+        // round 0's rank is a lazy copy of it over the seeded topology
+        val topology = outTopology(pairs, count(lit(1)).as("outdeg"))
+          .withColumn("tele",
+            when(col("id").isin(seeds: _*), lit(scale / nSeeds)).otherwise(lit(0L)))
+        rankFold(loop, "ppr", "ppr_iter", pairs, topology,
+          Seq(expr("rank div outdeg").as("share")), col("share"), iters, scale)(
+          _ => Teleport(col("tele"), expr("15 * tele div 100"),
+            "if(tele > 0L, dsh, 0L)", nSeeds))
       }
-      } // withLoopShuffle
-      val fin = state.agg(count(lit(1)).as("cnt"), sum("rank").as("total"))
-        .first()
-      if (fin.getLong(0) != n || fin.getLong(1) <= 0L ||
-          fin.getLong(1) > scale || fin.getLong(1) < scale - scale / 100L)
-        throw new IllegalStateException(
-          s"ppr invariant broken on final state: rows=${fin.getLong(0)} " +
-            s"(expected $n), mass=${fin.getLong(1)} (expected ~$scale)")
-      state.select("id", "rank")
-    } finally if (!parentCached) pairs.unpersist()
+    }
   }
 
   /** DuckDB oracle for [[pprFixedPoint]] — the same iteration unrolled,
@@ -2261,23 +2121,10 @@ object GraphAnalytics {
     * frontier).
     */
   def randomWalks(edges: DataFrame, steps: Int = 3,
-                  pairsDistinct: Boolean = false): DataFrame = {
-    val parentCached = pairsDistinct &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pairs0 =
-      if (pairsDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct()
-    // self-persisted pairs are laid out by src like the stored edge
-    // index (CodeGraph.edgePairs), so per-iteration probes on src
-    // exchange ONLY the O(V) state side — never the edge set
-    val pairs = if (parentCached) pairs0
-      else pairs0.repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nodes = pairs.select(col("src").as("id"))
-        .union(pairs.select(col("dst").as("id"))).distinct()
-      var state = nodes.select(col("id").as("walk_id"), col("id").as("cur"),
-        array(col("id")).as("path")).localCheckpoint(true)
+                  pairsDistinct: Boolean = false): DataFrame =
+    withSrcPairs(edges, pairsDistinct) { pairs =>
+      var state = endpoints(pairs).select(col("id").as("walk_id"),
+        col("id").as("cur"), array(col("id")).as("path")).localCheckpoint(true)
       // the LPA/pagerank broadcast pattern (r14): the walk state is
       // O(V) and its checkpoint erased the stats the planner would
       // need, so the per-step candidate join was re-sorting/exchanging
@@ -2323,8 +2170,7 @@ object GraphAnalytics {
       state.select(col("walk_id"),
         concat_ws("->", col("path")).as("path"),
         (size(col("path")) - 1).cast("long").as("hops"))
-    } finally if (!parentCached) pairs.unpersist()
-  }
+    }
 
   /** Skip-gram training pairs from [[randomWalks]] output — the step
     * that turns walks into the (center, context) co-occurrence corpus a
@@ -3297,7 +3143,7 @@ object GraphAnalytics {
     */
   def featureProp(pairs: DataFrame, iters: Int = 2,
                   scale: Long = 1000000L,
-                  undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(pairs.sparkSession) {
+                  undirectedPairs: Boolean = false): DataFrame = Loop.run(pairs.sparkSession, Loop.Lazy) { loop =>
     require(iters >= 1, "featureProp needs iters >= 1")
     val parentCached = undirectedPairs &&
       pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
@@ -3309,10 +3155,9 @@ object GraphAnalytics {
       p0.select(col("src").as("a"), col("dst").as("b"))
         .union(p0.select(col("dst").as("a"), col("src").as("b")))
     }
-    val und = if (parentCached) und0raw else und0raw.localCheckpoint(true)
-    val deg = und.groupBy(col("a").as("id"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val und = if (parentCached) und0raw else loop.pin(und0raw)
+    val deg = loop.pin(und.groupBy(col("a").as("id"))
+      .agg(count(lit(1)).as("deg")))
     var state = deg.select(col("id"), (col("deg") * scale).as("h"))
     // ship the V-sized frames into the E join / the V merge while
     // broadcastable (r14 — the pagerank/LPA pattern): the checkpointed
@@ -3320,11 +3165,16 @@ object GraphAnalytics {
     // and re-exchanges the edge set per iteration
     val smallV = deg.count() <= 1000000L
     def shipIf(df: DataFrame) = if (smallV) broadcast(df) else df
+    // lazy carries: the round frames materialize in the caller's write.
+    // No `loop.rounds`: the rounds keep the session shuffle width, as in
+    // r14 — the narrower loop width measured no faster (fresh-JVM,
+    // sf0.1, a 16-partition session on a 4-core host: 6.9 s median at
+    // the loop width vs 6.4 s at the session width, 4 pairs)
     for (_ <- 1 to iters) {
       val msgs = und
         .join(shipIf(state.select(col("id").as("a"), col("h"))), Seq("a"))
         .select(col("b").as("id"), col("h"))
-      val next0 = state.select(col("id"), col("h"))
+      state = loop.carry("feature_prop_iter", state.select(col("id"), col("h"))
         .unionAll(msgs)
         // accumulate in DECIMAL(38,0): a hub-heavy graph (~1e6-degree
         // nodes) can overflow a LONG sum, which non-ANSI Spark wraps
@@ -3334,9 +3184,7 @@ object GraphAnalytics {
         .agg(sum(col("h").cast("decimal(38,0)")).as("hs"))
         .join(shipIf(deg), Seq("id"))
         .select(col("id"),
-          expr("hs div (deg + 1)").cast("long").as("h"))
-      graft.core.PlanTrace.round("feature_prop_iter", next0)
-      state = next0.localCheckpoint(false)
+          expr("hs div (deg + 1)").cast("long").as("h")))
     }
     state.join(shipIf(deg), Seq("id"))
       .select(col("id"), col("deg"), col("h").as("feature"))

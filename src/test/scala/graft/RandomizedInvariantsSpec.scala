@@ -321,9 +321,33 @@ class RandomizedInvariantsSpec extends SparkSpec {
     }
   }
 
-  test("pagerank fixed-point: mass bounds and rank ordering on random DAGs") {
+  test("pagerank family: mass bounds, rank ordering and exact integer replay") {
     import graft.graph.GraphAnalytics
     val scale = 1000000000000L
+    val iters = 5
+    // in-memory replay of the fixed-point iteration over weighted edges
+    // (w = 1 for the unweighted variants): share = rank·w div W(u),
+    // dangling mass div |S| goes to the teleport set S (every node for
+    // the global variants), rank' = 15·tele div 100 + 85·(inc + dsh) div 100
+    def replay(es: Seq[(String, String, Long)], seeds: Seq[String]): Map[String, Long] = {
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+      val tele = if (seeds.isEmpty) nodes.map(_ -> scale / nodes.size).toMap
+        else nodes.map(v => v -> (if (seeds.contains(v)) scale / seeds.size else 0L)).toMap
+      val wout = es.groupBy(_._1).map { case (u, out) => u -> out.map(_._3).sum }
+      var rank = tele
+      for (_ <- 1 to iters) {
+        val dsh = nodes.filterNot(wout.contains).map(rank).sum /
+          (if (seeds.isEmpty) nodes.size else seeds.size)
+        val inc = es.groupBy(_._2).map { case (v, in) =>
+          v -> in.map(e => rank(e._1) * e._3 / wout(e._1)).sum }
+        rank = nodes.map(v => v -> (15L * tele(v) / 100L + 85L * (inc.getOrElse(v, 0L) +
+          (if (tele(v) > 0L) dsh else 0L)) / 100L)).toMap
+      }
+      rank
+    }
+    def unit(pairs: Seq[(String, String)]) = pairs.distinct.map(p => (p._1, p._2, 1L))
+    def collect(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Long)].collect().toMap
     for (seed <- Seq(51, 52)) {
       val rnd = new scala.util.Random(seed)
       // random DAG (edges only low->high) with a guaranteed hub sink
@@ -344,6 +368,28 @@ class RandomizedInvariantsSpec extends SparkSpec {
       val sink = pr(f"n${n - 1}%02d")
       assert(pr.filterKeys(_ != f"n${n - 1}%02d").values.forall(_ < sink),
         s"seed=$seed")
+      assert(pr === replay(unit(pairs), Nil), s"seed=$seed (DAG replay)")
+    }
+    // random directed graphs with cycles, duplicate pairs, self-loops
+    // and dangling nodes (only n00..n23 have out-edges)
+    for (seed <- Seq(61, 62)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 30
+      val pairs = (1 to 90).map(_ =>
+        (f"n${rnd.nextInt(n - 6)}%02d", f"n${rnd.nextInt(n)}%02d"))
+      val es = pairs.map(p => (p._1, p._2, 1L + rnd.nextInt(9)))
+      val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+      val pr = collect(GraphAnalytics.pagerankFixedPoint(
+        pairs.toDF("src", "dst"), iters = iters, scale = scale))
+      assert(pr === replay(unit(pairs), Nil), s"seed=$seed (pagerank)")
+      for (seeds <- Seq(Seq(nodes.head), Seq(nodes(1), nodes(5), nodes.last))) {
+        val ppr = collect(GraphAnalytics.pprFixedPoint(
+          pairs.toDF("src", "dst"), seeds, iters = iters, scale = scale))
+        assert(ppr === replay(unit(pairs), seeds), s"seed=$seed (ppr $seeds)")
+      }
+      val wpr = collect(GraphAnalytics.pagerankWeighted(
+        es.toDF("src", "dst", "w"), iters = iters, scale = scale))
+      assert(wpr === replay(es, Nil), s"seed=$seed (weighted)")
     }
   }
 
