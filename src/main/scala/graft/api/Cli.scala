@@ -301,6 +301,18 @@ object Cli {
     }
   }
 
+  /** Run a query command against `dir`: against the workspace store's
+    * resident current graph when `dir` holds store state
+    * ([[WorkspaceStore.currentGraph]]), else against the graph derived
+    * from the fixture tables under `dir`.
+    */
+  def executeQuery(spark: SparkSession, dir: String, cmd: Command): DataFrame = {
+    val (blocks, edges) =
+      if (WorkspaceStore.exists(spark, dir)) WorkspaceStore.currentGraph(spark, dir)
+      else (CodeGraph.nodeBlocks(spark, dir), CodeGraph.edges(spark, dir))
+    execute(blocks, edges, cmd)
+  }
+
   def isQueryCommand(cmd: Command): Boolean = cmd match {
     case _: FindCmd | _: ShowCmd | _: TraceCmd => true
     case _ => false
@@ -433,7 +445,7 @@ object Cli {
             println(s"""{"listening":${srv.boundPort}}""")
             srv.awaitTermination()
           case "stop" => println(CliServer.request(host, port, "stop"))
-          case _ => println(CliServer.request(host, port, "ping"))
+          case _ => println(CliServer.request(host, port, "stats"))
         }
       case Right(cmd) =>
         val fmt = cmd match {
@@ -448,13 +460,7 @@ object Cli {
         }
         val result =
           if (!isQueryCommand(cmd)) executeWorkspace(spark, dir, cmd)
-          // query commands run against linked workspaces when the dir
-          // holds store state, else against the derived fixture graph
-          else if (WorkspaceStore.exists(spark, dir)) {
-            val (blocks, edges) = WorkspaceStore.currentGraph(spark, dir)
-            execute(blocks, edges, cmd)
-          } else
-            execute(CodeGraph.nodeBlocks(spark, dir), CodeGraph.edges(spark, dir), cmd)
+          else executeQuery(spark, dir, cmd)
         println(render(result, fmt))
     }
     spark.stop()

@@ -22,7 +22,12 @@ import org.apache.spark.sql.SparkSession
   *     tokenized (double quotes group words);
   *   - one response per line: `{"ok":true,"result":[...]}` with the
   *     rows as JSON objects, or `{"ok":false,"error":"..."}`;
-  *   - `stop` shuts the server down (reference `kausal server stop`).
+  *   - `stop` shuts the server down (reference `kausal server stop`);
+  *   - `stats` answers the server's counters ([[CliServer.Counters]]):
+  *     requests, errors and a latency histogram per command over both
+  *     protocols, plus the session [[graft.query.QueryCache]]'s hits,
+  *     misses and invalidations. Counting costs one `nanoTime` pair per
+  *     request.
   *
   * Connections are handled sequentially — the single-threaded core is
   * the reference's own concurrency model ("Single-Threaded Core: no
@@ -40,6 +45,7 @@ final class CliServer(spark: SparkSession, stateDir: String, port: Int = 0,
     port, 50, java.net.InetAddress.getByName(host))
   @volatile private var running = true
   private val thread = new Thread(() => acceptLoop(), "graft-cli-server")
+  private val counters = new CliServer.Counters
 
   /** Ephemeral-port friendly: the actually-bound port. */
   def boundPort: Int = socket.getLocalPort
@@ -103,7 +109,15 @@ final class CliServer(spark: SparkSession, stateDir: String, port: Int = 0,
         try socket.close() catch { case _: java.io.IOException => () }
         return
       }
-      out.println(dispatch(toks))
+      if (toks == Seq("stats")) out.println(statsJson())
+      else {
+        val t0 = System.nanoTime()
+        val resp = dispatch(toks)
+        counters.record(toks.headOption.filter(CliServer.LineCommands)
+          .getOrElse("other"), System.nanoTime() - t0,
+          resp.startsWith("""{"ok":true"""))
+        out.println(resp)
+      }
       line = if (running) in.readLine() else null
     }
   }
@@ -134,6 +148,7 @@ final class CliServer(spark: SparkSession, stateDir: String, port: Int = 0,
             encodeErrorResponse(ErrorResponse(ErrorCode.InvalidRequest, err)))
           open = false
         case Right((h, payload)) =>
+          val t0 = System.nanoTime()
           val (t, p) =
             try respondBinary(h.msgType, payload)
             catch {
@@ -142,6 +157,8 @@ final class CliServer(spark: SparkSession, stateDir: String, port: Int = 0,
                   ErrorCode.ServerError,
                   s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")))
             }
+          counters.record(CliServer.binaryCommand(h.msgType),
+            System.nanoTime() - t0, t != MsgType.ErrorResponse)
           writeMessage(out, t, p)
       }
     }
@@ -159,12 +176,7 @@ final class CliServer(spark: SparkSession, stateDir: String, port: Int = 0,
         encodeOperationResponse(OperationResponse(success = true, "ok")))
     }
     def queryBlocks(cmd: Cli.Command): org.apache.spark.sql.DataFrame =
-      if (WorkspaceStore.exists(spark, stateDir)) {
-        val (blocks, edges) = WorkspaceStore.currentGraph(spark, stateDir)
-        Cli.execute(blocks, edges, cmd)
-      } else Cli.execute(
-        graft.graph.CodeGraph.nodeBlocks(spark, stateDir),
-        graft.graph.CodeGraph.edges(spark, stateDir), cmd)
+      Cli.executeQuery(spark, stateDir, cmd)
     msgType match {
       case MsgType.PingRequest =>
         (MsgType.PongResponse, Array.emptyByteArray)
@@ -309,18 +321,25 @@ final class CliServer(spark: SparkSession, stateDir: String, port: Int = 0,
 
   private val startedNanos = System.nanoTime()
 
+  /** The `stats` reply: one row holding the uptime, the session
+    * cache's counts and the per-command counters.
+    */
+  private def statsJson(): String = {
+    val cache = graft.query.QueryCache.forSession(spark)
+    val (hits, misses, _) = cache.stats
+    val uptime = (System.nanoTime() - startedNanos) / 1000000000L
+    s"""{"ok":true,"result":[{"uptime_s":$uptime,"cache_hits":$hits,""" +
+      s""""cache_misses":$misses,"cache_invalidations":${cache.invalidations},""" +
+      s"""${counters.json}}]}"""
+  }
+
   private def dispatch(toks: Seq[String]): String =
     try Cli.parse(toks) match {
       case Left(err) => CliServer.errorJson(err)
       case Right(cmd) =>
         val df =
           if (!Cli.isQueryCommand(cmd)) Cli.executeWorkspace(spark, stateDir, cmd)
-          else if (WorkspaceStore.exists(spark, stateDir)) {
-            val (blocks, edges) = WorkspaceStore.currentGraph(spark, stateDir)
-            Cli.execute(blocks, edges, cmd)
-          } else Cli.execute(
-            graft.graph.CodeGraph.nodeBlocks(spark, stateDir),
-            graft.graph.CodeGraph.edges(spark, stateDir), cmd)
+          else Cli.executeQuery(spark, stateDir, cmd)
         s"""{"ok":true,"result":${Cli.render(df, "json")}}"""
     } catch {
       case e: Throwable =>
@@ -330,6 +349,69 @@ final class CliServer(spark: SparkSession, stateDir: String, port: Int = 0,
 }
 
 object CliServer {
+
+  /** Line-protocol command words counted under their own name; any
+    * other first token counts as `other`.
+    */
+  private val LineCommands = Set("find", "show", "trace", "link", "unlink",
+    "sync", "status", "ping", "version", "help")
+
+  /** The counter name of a binary request type (the line verb it maps to). */
+  private def binaryCommand(msgType: Int): String = {
+    import BinaryProtocol.MsgType._
+    msgType match {
+      case FindRequest => "find"
+      case ShowCallersRequest | ShowCalleesRequest => "show"
+      case TraceRequest => "trace"
+      case LinkRequest => "link"
+      case UnlinkRequest => "unlink"
+      case SyncRequest => "sync"
+      case ClearWorkspaceRequest => "clear"
+      case StatusRequest => "status"
+      case PingRequest => "ping"
+      case _ => "other"
+    }
+  }
+
+  /** Requests, errors and latency per command: a fixed log-bucket
+    * histogram whose bucket i < [[Counters.Bounds]].length counts the
+    * requests that took at most `Bounds(i)` ms (and more than the
+    * bound before it); the last bucket counts the slower rest.
+    */
+  private[api] final class Counters {
+    // per command: requests, errors, total ns, then the bucket counts
+    private val byCommand = scala.collection.mutable.TreeMap.empty[String, Array[Long]]
+
+    def record(command: String, nanos: Long, ok: Boolean): Unit = synchronized {
+      val c = byCommand.getOrElseUpdate(command,
+        new Array[Long](3 + Counters.Bounds.length + 1))
+      c(0) += 1
+      if (!ok) c(1) += 1
+      c(2) += nanos
+      c(3 + Counters.bucket(nanos)) += 1
+    }
+
+    /** `"bucket_le_ms":[...],"commands":[...]`, commands by name. */
+    def json: String = synchronized {
+      val cmds = byCommand.map { case (k, c) =>
+        f"""{"command":"$k","requests":${c(0)},"errors":${c(1)},""" +
+          f""""total_ms":${c(2) / 1e6}%.3f,"buckets":${c.drop(3).mkString("[", ",", "]")}}"""
+      }
+      s""""bucket_le_ms":${Counters.Bounds.mkString("[", ",", "]")},""" +
+        s""""commands":${cmds.mkString("[", ",", "]")}"""
+    }
+  }
+
+  private[api] object Counters {
+    /** Bucket upper bounds: 1, 2, 4, ... 65,536 ms. */
+    val Bounds: Seq[Long] = (0 to 16).map(1L << _)
+
+    def bucket(nanos: Long): Int = {
+      val ms = (nanos + 999999L) / 1000000L // rounded up
+      if (ms <= 1) 0
+      else math.min(64 - java.lang.Long.numberOfLeadingZeros(ms - 1), Bounds.length)
+    }
+  }
 
   /** Shell-style request tokenizer: whitespace-separated, double quotes
     * group words (`find --name "Foo Bar"`). No escapes — names with

@@ -2,10 +2,13 @@ package graft.api
 
 import graft.core.{Mvcc, Schemas}
 import graft.ingest.{DispatchParser, Ingest, SemanticResolver, SourceParser}
+import graft.query.QueryCache
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet-backed persistent workspace state for the CLI's
   * `link/unlink/sync/status` commands — the Spark analogue of the
@@ -161,17 +164,20 @@ object WorkspaceStore {
     * read-modify-write over all three tables: two concurrent syncs
     * could both read epoch N and both write N+1, silently losing one
     * writer's rows. Mutations therefore serialize on a lock file
-    * created with overwrite=false (atomic create-exclusive on HDFS;
-    * best-effort on the local Hadoop FS — the documented contract is
-    * cooperating writers through this API, and the lock converts the
-    * silent-interleave failure into either serialization or a loud
-    * error). A crashed holder's lock goes stale after `staleMs` and is
-    * broken by the next acquirer; acquisition past `waitMs` fails
-    * LOUDLY naming the lock path rather than proceeding unprotected.
-    * The reference reaches the same single-writer guarantee through
-    * its daemon: all CLI mutations funnel through one server process
-    * (`cli_protocol.zig`); a shared filesystem has to earn it with a
-    * lock instead.
+    * created exclusively: on `file:` paths with `Files.createFile`
+    * (O_EXCL — the local Hadoop FS's `create(overwrite = false)` is
+    * check-then-create, so two threads could both take the lock), on
+    * other schemes with `create(overwrite = false)` (atomic
+    * create-exclusive on HDFS). The lock converts the silent-interleave
+    * failure into either serialization or a loud error, and it is what
+    * makes the query graph's epoch key ([[currentGraph]]) see one
+    * writer's commit at a time. A crashed holder's lock goes stale
+    * after `staleMs` and is broken by the next acquirer; acquisition
+    * past `waitMs` fails LOUDLY naming the lock path rather than
+    * proceeding unprotected. The reference reaches the same
+    * single-writer guarantee through its daemon: all CLI mutations
+    * funnel through one server process (`cli_protocol.zig`); a shared
+    * filesystem has to earn it with a lock instead.
     */
   private[api] def withWriteLock[T](spark: SparkSession, stateDir: String,
                                     waitMs: Long = 60000L,
@@ -179,14 +185,21 @@ object WorkspaceStore {
     val lockPath = new Path(stateRoot(stateDir) + "/_lock")
     val fs = lockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(lockPath.getParent)
+    val local = fs.getUri.getScheme == "file"
     val deadline = System.currentTimeMillis() + waitMs
     var held = false
     while (!held) {
       try {
-        val out = fs.create(lockPath, false) // throws if it exists
-        out.write((s"${java.lang.ProcessHandle.current().pid()} " +
-          s"${System.currentTimeMillis()}").getBytes("UTF-8"))
-        out.close()
+        val stamp = (s"${java.lang.ProcessHandle.current().pid()} " +
+          s"${System.currentTimeMillis()}").getBytes("UTF-8")
+        if (local) { // both throw if the lock exists
+          val p = java.nio.file.Paths.get(fs.makeQualified(lockPath).toUri)
+          java.nio.file.Files.write(java.nio.file.Files.createFile(p), stamp)
+        } else {
+          val out = fs.create(lockPath, false)
+          out.write(stamp)
+          out.close()
+        }
         held = true
       } catch {
         case _: java.io.IOException =>
@@ -216,14 +229,98 @@ object WorkspaceStore {
     * (reference `manager.zig:192-247`: unlink removes the workspace from
     * the query surface). The registry is driver-sized → broadcast
     * semi-join, a map-side filter on the blocks/edges scan.
+    *
+    * RESIDENT, keyed on the committed store epoch. The view (live
+    * registry rows, live blocks, live edges, and their per-workspace
+    * counts, which [[status]] answers from) is derived once per epoch
+    * and held as one [[QueryCache.versioned]] entry of the session cache,
+    * built lazily by the first query (never by `link`). Each call lists
+    * `registry/`, `blocks/` and `edges/` (one `listStatus` per table,
+    * [[epoch]]); a different set of part-file names than the entry was
+    * built at is a different epoch, so the entry is dropped and
+    * re-derived. Spark names part files with a per-write UUID, so every
+    * writer's commit changes the key — including a writer in another
+    * session or process, whose write never reaches this session's
+    * cache. A same-session write also drops the entry when it is
+    * planned ([[graft.core.Mvcc]] invalidates the session cache), before
+    * `save` commits; the key is what keeps a rebuild between that plan
+    * and the commit from being served after it. The key assumes the
+    * writers serialize on [[withWriteLock]].
+    *
+    * The registry rows are driver-sized and held on the driver; blocks
+    * and edges are a persisted row RDD each, and every call returns
+    * FRESH frames over them (`createDataFrame(rdd, schema)`). Two
+    * Spark behaviours therefore leave it alone:
+    *   - [[load]]'s `refreshByPath` re-caches every persisted plan that
+    *     reads the store path; an RDD-rooted plan reads no path;
+    *   - a caller's `persist` or `unpersist(true)` of a returned frame
+    *     caches or drops that frame's own plan, never the RDD below it.
+    * The RDDs are named, so harness storage sweeps of anonymous RDDs
+    * ([[graft.core.Checkpoints.sweepAnonymous]]) skip them too. Should
+    * their blocks be lost anyway, they recompute from the epoch's own
+    * part files, which the key guarantees are still the current ones.
     */
   def currentGraph(spark: SparkSession, stateDir: String): (DataFrame, DataFrame) = {
-    val st = load(spark, stateDir)
-    val live = broadcast(
-      Schemas.currentView(st.registry).select(col("id").as("workspace")))
-    (Schemas.currentView(st.blocks).join(live, Seq("workspace"), "left_semi"),
-      st.edges.join(live, Seq("workspace"), "left_semi"))
+    val g = resident(spark, stateDir)
+    (g.blocks.frame(spark), g.edges.frame(spark))
   }
+
+  /** One table of the resident current graph: persisted rows, their
+    * schema and the live row count per workspace.
+    */
+  private final case class Pinned(rows: RDD[Row], schema: StructType,
+                                  perWorkspace: scala.collection.Map[String, Long]) {
+    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(rows, schema)
+  }
+
+  /** A live registry row, as `status` reports it. */
+  private final case class Workspace(id: String, rootPath: String, syncedAt: Long)
+
+  private final case class Resident(workspaces: Seq[Workspace], blocks: Pinned,
+                                    edges: Pinned) {
+    def release(): Unit =
+      Seq(blocks, edges).foreach(_.rows.unpersist(blocking = false))
+  }
+
+  /** Persist `df`'s rows; the one job that materializes them also
+    * counts them per workspace.
+    */
+  private def pin(df: DataFrame, name: String): Pinned = {
+    val rows = df.rdd.setName(name).persist(StorageLevel.MEMORY_AND_DISK)
+    val ws = df.schema.fieldIndex("workspace")
+    Pinned(rows, df.schema, rows.map(_.getString(ws)).countByValue())
+  }
+
+  /** The committed epoch the query graph reads: the sorted part-file
+    * names of `registry/`, `blocks/` and `edges/`.
+    */
+  private def epoch(spark: SparkSession, stateDir: String): String = {
+    val root = new Path(stateRoot(stateDir))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("registry", "blocks", "edges").map { t =>
+      val names =
+        try fs.listStatus(new Path(root, t)).map(_.getPath.getName).sorted
+        catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+      names.mkString(s"$t:", ",", "")
+    }.mkString(";")
+  }
+
+  private def resident(spark: SparkSession, stateDir: String): Resident =
+    QueryCache.forSession(spark).versioned(
+      s"store|current-graph|$stateDir", epoch(spark, stateDir)) {
+      import spark.implicits._
+      val st = load(spark, stateDir)
+      val workspaces = Schemas.currentView(st.registry)
+        .select(col("id"), col("root_path"), coalesce(col("synced_at"), lit(0L)))
+        .as[(String, String, Long)].collect().toSeq
+        .map { case (id, root, at) => Workspace(id, root, at) }
+      val live = broadcast(workspaces.map(_.id).toDF("workspace"))
+      val tag = s"graft current graph $stateDir"
+      Resident(workspaces,
+        pin(Schemas.currentView(st.blocks).join(live, Seq("workspace"), "left_semi"),
+          s"$tag blocks"),
+        pin(st.edges.join(live, Seq("workspace"), "left_semi"), s"$tag edges"))
+    }(_.release())
 
   /** INCREMENTAL-sync delta (r8): rows of `fresh` that are NEW or
     * CHANGED versus the stored current view — same id but different
@@ -493,28 +590,22 @@ object WorkspaceStore {
     */
   def status(spark: SparkSession, stateDir: String, verbose: Boolean = false,
              nowSeconds: Long = System.currentTimeMillis() / 1000L): DataFrame = {
-    val st = load(spark, stateDir)
-    val reg = Schemas.currentView(st.registry).select("id", "root_path", "synced_at")
-    val blockCounts = Schemas.currentView(st.blocks)
-      .groupBy(col("workspace")).agg(count(lit(1)).as("block_count"))
-    val edgeCounts = st.edges
-      .groupBy(col("workspace").as("e_ws")).agg(count(lit(1)).as("edge_count"))
-    val base = reg
-      .join(blockCounts, reg("id") === blockCounts("workspace"), "left")
-      .join(edgeCounts, reg("id") === edgeCounts("e_ws"), "left")
-      .select(
-        reg("id").as("workspace"), col("root_path"),
-        coalesce(col("block_count"), lit(0L)).as("block_count"),
-        coalesce(col("edge_count"), lit(0L)).as("edge_count"),
-        when(coalesce(col("synced_at"), lit(0L)) === 0L, "never_synced")
-          .when(lit(nowSeconds) - col("synced_at") <= 3600L, "synced")
-          .otherwise("needs_sync").as("sync_status"),
+    import spark.implicits._
+    val g = resident(spark, stateDir)
+    val base = g.workspaces.sortBy(_.id).map { w =>
+      (w.id, w.rootPath,
+        g.blocks.perWorkspace.getOrElse(w.id, 0L),
+        g.edges.perWorkspace.getOrElse(w.id, 0L),
+        if (w.syncedAt == 0L) "never_synced"
+        else if (nowSeconds - w.syncedAt <= 3600L) "synced"
+        else "needs_sync",
         // the raw epoch seconds behind sync_status: binary status
         // clients render it as last_sync (the reference's
         // WorkspaceInfo.last_sync_timestamp carries the real value,
         // not 0 — format_time_ago over it, protocol.zig:53)
-        coalesce(col("synced_at"), lit(0L)).as("synced_at"))
-      .orderBy("workspace")
+        w.syncedAt)
+    }.toDF("workspace", "root_path", "block_count", "edge_count",
+      "sync_status", "synced_at")
     if (!verbose) base.drop("synced_at")
     else base.withColumn("storage_bytes",
       col("block_count") * lit(2048L) + col("edge_count") * lit(64L))

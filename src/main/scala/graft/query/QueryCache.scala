@@ -20,8 +20,11 @@ final class QueryCache(maxEntries: Int = 1000, ttlMs: Long = 30L * 60 * 1000,
   // TTL measures age since CREATION (the reference's semantics,
   // cache.zig:205-214) — a hot entry still expires and re-derives after
   // ttlMs. LRU recency for overflow eviction comes from the access-order
-  // LinkedHashMap, not from the timestamp.
-  private final case class CacheEntry(df: DataFrame, created: Long)
+  // LinkedHashMap, not from the timestamp. `version` is empty for plain
+  // entries; a [[versioned]] entry is valid only at the version it was
+  // built at. `release` drops the value's residency (unpersist).
+  private final case class CacheEntry(value: AnyRef, version: String,
+                                      release: () => Unit, created: Long)
 
   private val entries = new java.util.LinkedHashMap[String, CacheEntry](
     16, 0.75f, /* accessOrder = */ true)
@@ -34,19 +37,30 @@ final class QueryCache(maxEntries: Int = 1000, ttlMs: Long = 30L * 60 * 1000,
   /** Get-or-compute. The computed DataFrame is persisted eagerly-lazily
     * (first action materializes).
     */
-  def getOrElseUpdate(key: String)(build: => DataFrame): DataFrame = synchronized {
+  def getOrElseUpdate(key: String)(build: => DataFrame): DataFrame =
+    versioned(key, "")(build.persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist())
+
+  /** Get-or-build a resident value that is valid only at `version` (a
+    * store epoch, say). A hit needs the same version within the TTL; an
+    * entry at another version is released and rebuilt, so one key never
+    * holds an outdated copy beside the current one. `release` drops the
+    * value's residency when it is evicted or invalidated. Hits, misses
+    * and evictions count in [[stats]] like every other entry.
+    */
+  def versioned[T <: AnyRef](key: String, version: String)(build: => T)
+                            (release: T => Unit): T = synchronized {
     val now = clock()
     val hit = entries.get(key)
-    if (hit != null && now - hit.created <= ttlMs) {
+    if (hit != null && hit.version == version && now - hit.created <= ttlMs) {
       hitCount += 1
-      hit.df
+      hit.value.asInstanceOf[T]
     } else {
-      if (hit != null) evict(key, hit) // expired
+      if (hit != null) evict(key, hit) // expired or outdated
       missCount += 1
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-      entries.put(key, CacheEntry(df, now))
+      val v = build
+      entries.put(key, CacheEntry(v, version, () => release(v), now))
       if (entries.size() > maxEntries) evictOldest(maxEntries / 4 max 1)
-      df
+      v
     }
   }
 
@@ -55,7 +69,7 @@ final class QueryCache(maxEntries: Int = 1000, ttlMs: Long = 30L * 60 * 1000,
     */
   def invalidateAll(): Unit = synchronized {
     val it = entries.entrySet().iterator()
-    while (it.hasNext) { it.next().getValue.df.unpersist(); evictionCount += 1 }
+    while (it.hasNext) { it.next().getValue.release(); evictionCount += 1 }
     entries.clear()
     invalidationCount += 1
   }
@@ -67,7 +81,7 @@ final class QueryCache(maxEntries: Int = 1000, ttlMs: Long = 30L * 60 * 1000,
   def invalidations: Long = synchronized(invalidationCount)
 
   private def evict(key: String, e: CacheEntry): Unit = {
-    e.df.unpersist()
+    e.release()
     entries.remove(key)
     evictionCount += 1
   }
@@ -80,7 +94,7 @@ final class QueryCache(maxEntries: Int = 1000, ttlMs: Long = 30L * 60 * 1000,
     var k = 0
     while (it.hasNext && k < n) {
       val e = it.next()
-      e.getValue.df.unpersist()
+      e.getValue.release()
       it.remove()
       evictionCount += 1
       k += 1

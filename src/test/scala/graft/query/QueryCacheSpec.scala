@@ -52,6 +52,20 @@ class QueryCacheSpec extends SparkSpec {
     assert(c.getOrElseUpdate("a")(df(7)).count() == 7)
   }
 
+  test("versioned: same version hits; a new version releases the old value and rebuilds") {
+    val c = new QueryCache()
+    val released = scala.collection.mutable.ArrayBuffer.empty[String]
+    def get(version: String) =
+      c.versioned("k", version)(s"built at $version")(released += _)
+    assert(get("e1") == "built at e1")
+    assert(get("e1") == "built at e1" && released.isEmpty)
+    assert(get("e2") == "built at e2")
+    assert(released == Seq("built at e1"))
+    assert(c.stats == (1L, 2L, 1L) && c.size == 1)
+    c.invalidateAll()
+    assert(released == Seq("built at e1", "built at e2") && c.size == 0)
+  }
+
   test("storedArtifact: builds once, survives a checkpoint sweep, re-reads after invalidation") {
     var builds = 0
     def build() = { builds += 1; Seq(("a", 1L), ("b", 2L))
