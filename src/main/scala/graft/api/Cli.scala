@@ -231,7 +231,7 @@ object Cli {
         val seedDf = wsBlocks.filter(
           substring_index(col("unit_id"), ":", -1) === target ||
             col("id") === target)
-          .select("id").distinct()
+          .select("id") // the BFS dedups its seeds
         val (dir, filt) = rel match {
           case "callers" => (Direction.Incoming, EdgeFilter.All)
           case "callees" => (Direction.Outgoing, EdgeFilter.All)
@@ -245,7 +245,7 @@ object Cli {
       case TraceCmd(dirName, target, depth, _, _) =>
         val seedDf = blocks.filter(
           substring_index(col("unit_id"), ":", -1) === target ||
-            col("id") === target).select("id").distinct()
+            col("id") === target).select("id")
         val dir = if (dirName == "callers") Direction.Incoming else Direction.Outgoing
         Traversal.bfs(edges, seedDf,
           TraversalSpec(dir, depth, 1000, EdgeFilter.All, trackPaths = true))

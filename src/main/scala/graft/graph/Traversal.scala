@@ -1,8 +1,15 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkException
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Direction of a traversal, reference `src/query/traversal.zig:162-173`. */
 sealed trait Direction
@@ -35,10 +42,25 @@ final case class TraversalSpec(
   require(maxResults >= 1 && maxResults <= 10000, "max_results must be 1..10000")
 }
 
-/** Iterative DataFrame BFS — the Spark re-expression of the reference's
-  * traversal engine (`src/query/traversal.zig:348-455`). One Spark job per
-  * depth level: frontier ⋈ edges → next frontier, anti-join against
-  * visited for cycle safety, `localCheckpoint` to keep lineage flat.
+/** Iterative level-synchronous BFS — the Spark re-expression of the
+  * reference's traversal engine (`src/query/traversal.zig:348-455`).
+  * Each level runs one of two ways, chosen from the sizes the loop
+  * already knows:
+  *  - **driver levels**, while the visited set and the frontier stay
+  *    under a 100k-row gate (the frontier gate divided by depth + 1 when
+  *    paths are tracked). A level is ONE narrow Spark job: the visited
+  *    ids go out as a broadcast map that ranks the frontier, each edge
+  *    partition returns the new ids it reaches with their best
+  *    predecessor rank, and the driver merges them and picks the
+  *    canonical path. The result is a local frame. This is the served
+  *    `show`/`trace` case: frontiers of a few dozen ids.
+  *  - **distributed levels**, from the level where the state or an
+  *    expansion would cross the gate: frontier ⋈ edges → next frontier,
+  *    anti-join against visited for cycle safety, `localCheckpoint` to
+  *    keep lineage flat. About four jobs per level under adaptive
+  *    execution (frontier broadcast, dedup shuffle stage, visited
+  *    broadcast, the level count).
+  * Both produce the same rows, order and schema.
   *
   * BFS, DFS and A* in the reference visit the same *set* (A*'s heuristic
   * is stubbed to uniform 1.0, `traversal.zig:1282-1290`; SCC delegates to
@@ -50,13 +72,20 @@ final case class TraversalSpec(
   *  - the edge-type filter and direction projection are applied ONCE
   *    before the loop, so every level joins against the smallest possible
   *    edge set, and Parquet dictionary pushdown prunes edge files;
-  *  - the frontier is usually tiny relative to edges → broadcast-hash
-  *    join. The optimizer cannot see that on its own (localCheckpoint
-  *    erases size stats), but the loop knows each frame's EXACT row
-  *    count from its per-level count() — it hints broadcast while the
-  *    frontier/visited are small and falls back to the shuffled join
-  *    past 100k rows (measured on the bench: the hint is the
-  *    difference between a per-level sort-merge of the whole edge
+  *  - a driver level scans the edges once, narrowly, like a broadcast
+  *    join's probe side, and dedups and subtracts the visited set on
+  *    the executors. A level that would overflow the gate costs one
+  *    cancelled job and hands its state to the distributed loop: the
+  *    driver keeps at most gate rows, and receives past that only the
+  *    results of tasks that finish before the cancel lands, each at
+  *    most gate + 1 rows;
+  *  - on the distributed side the frontier is usually tiny relative to
+  *    edges → broadcast-hash join. The optimizer cannot see that on its
+  *    own (localCheckpoint erases size stats), but the loop knows each
+  *    frame's EXACT row count from its per-level count() — it hints
+  *    broadcast while the frontier/visited are small and falls back to
+  *    the shuffled join past 100k rows (measured on the bench: the hint
+  *    is the difference between a per-level sort-merge of the whole edge
   *    table and a map-side hash probe — 2-3x per traversal);
   *  - the edges side never gets re-shuffled when bucketed by join key.
   */
@@ -124,25 +153,7 @@ object Traversal {
                     spec: TraversalSpec): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val reach = bfs(edges, Seq(seedId).toDF("id"),
-      spec.copy(maxResults = 10000, trackPaths = false)).select("id")
-      .localCheckpoint(true)
-    // The replay's adjacency is only correct if the reachable universe
-    // was NOT truncated by the 10k cap (the cap equals the reference's
-    // own max_results ceiling, so a legal query can't exceed it — but a
-    // caller with a deeper spec could). A capped reach would silently
-    // reorder the walk; fail loudly instead.
-    val reachN = reach.count()
-    require(reachN < 10000,
-      s"dfsStackOrder: reachable set hit the 10k cap ($reachN) — " +
-        "visit order would be computed over a truncated adjacency")
-    val adj = hops(filterEdges(edges, spec.edgeFilter), spec.direction)
-      .join(reach.withColumnRenamed("id", "from"), Seq("from"), "left_semi")
-      .join(reach.withColumnRenamed("id", "to"), Seq("to"), "left_semi")
-      .select("from", "to") // joins move their key first — pin the order
-      .distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sorted }
+    val adj = reachableAdjacency(edges, seedId, spec, "dfsStackOrder")
     val visited = scala.collection.mutable.Set.empty[String]
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     val stack = scala.collection.mutable.ArrayBuffer((seedId, 0))
@@ -195,20 +206,7 @@ object Traversal {
                      spec: TraversalSpec): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val reach = bfs(edges, Seq(seedId).toDF("id"),
-      spec.copy(maxResults = 10000, trackPaths = false)).select("id")
-      .localCheckpoint(true)
-    val reachN = reach.count()
-    require(reachN < 10000,
-      s"astarHeapOrder: reachable set hit the 10k cap ($reachN) — " +
-        "visit order would be computed over a truncated adjacency")
-    val adj = hops(filterEdges(edges, spec.edgeFilter), spec.direction)
-      .join(reach.withColumnRenamed("id", "from"), Seq("from"), "left_semi")
-      .join(reach.withColumnRenamed("id", "to"), Seq("to"), "left_semi")
-      .select("from", "to")
-      .distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sorted }
+    val adj = reachableAdjacency(edges, seedId, spec, "astarHeapOrder")
     // Zig std.PriorityQueue replay. Priorities compare by f = d + 1
     // (monotone in d; the seed's f = 0 is never compared — it pops
     // alone). Swap-in-place sifts are compare-equivalent to the
@@ -261,17 +259,59 @@ object Traversal {
     out.toSeq.toDF("id", "depth", "visit_rank")
   }
 
+  /** The input of the [[dfsStackOrder]] and [[astarHeapOrder]] replays:
+    * the subgraph reachable from `seedId` under `spec`, as each node's
+    * successors in ascending id order. `caller` names the replay in the
+    * cap error.
+    */
+  private def reachableAdjacency(edges: DataFrame, seedId: String,
+                                 spec: TraversalSpec,
+                                 caller: String): Map[String, Array[String]] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val reached = bfs(edges, Seq(seedId).toDF("id"),
+      spec.copy(maxResults = 10000, trackPaths = false))
+    // a driver-side BFS already returned a local frame: nothing to
+    // checkpoint, and its rows are counted without a job
+    val (reach, reachN) =
+      if (reached.isLocal) (reached.select("id"), reached.collect().length.toLong)
+      else {
+        val r = reached.select("id").localCheckpoint(true)
+        (r, r.count())
+      }
+    // The replay's adjacency is only correct if the reachable universe
+    // was NOT truncated by the 10k cap (the cap equals the reference's
+    // own max_results ceiling, so a legal query can't exceed it — but a
+    // caller with a deeper spec could). A capped reach would silently
+    // reorder the walk; fail loudly instead.
+    require(reachN < 10000,
+      s"$caller: reachable set hit the 10k cap ($reachN) — " +
+        "visit order would be computed over a truncated adjacency")
+    hops(filterEdges(edges, spec.edgeFilter), spec.direction)
+      .join(reach.withColumnRenamed("id", "from"), Seq("from"), "left_semi")
+      .join(reach.withColumnRenamed("id", "to"), Seq("to"), "left_semi")
+      .select("from", "to") // joins move their key first — pin the order
+      .distinct()
+      .collect().map(r => (r.getString(0), r.getString(1)))
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sorted }
+  }
+
   /** The loop behind [[bfs]], with the result cap widened to Long so
     * internal callers (the bidirectional-search legs, which must NOT
     * truncate their frontiers — a dropped meeting candidate silently
     * lengthens the reported shortest path) can run uncapped. The public
     * API keeps the reference's 10k cap via [[TraversalSpec]].
+    *
+    * `localRows` is the driver-level gate (see the object scaladoc):
+    * 0 runs every level distributed, `Long.MaxValue` every level on the
+    * driver. Only tests set it.
     */
-  private[graph] def bfsLoop(edges: DataFrame, seeds: DataFrame,
+  private[graft] def bfsLoop(edges: DataFrame, seeds: DataFrame,
                              direction: Direction, maxDepth: Int,
                              maxResults: Long,
                              edgeFilter: EdgeFilter = EdgeFilter.All,
-                             trackPaths: Boolean = false): DataFrame = {
+                             trackPaths: Boolean = false,
+                             localRows: Long = BcastRows): DataFrame = {
     // If the edges table is already persisted (the normal case: a
     // materialized graph), the hop projection is a cheap in-memory scan
     // per level — re-persisting it would copy the whole table per query.
@@ -279,84 +319,260 @@ object Traversal {
     val hop0 = hops(filterEdges(edges, edgeFilter), direction)
     val hop = if (parentCached) hop0 else hop0.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE job per level: `count()` is the action that materializes the
-      // level (an eager localCheckpoint would be a second, separate
-      // materialization job — the LAZY variant materializes on the count
-      // and still replaces the logical plan with a flat LogicalRDD up
-      // front). Lineage truncation here is load-bearing: each level's
-      // plan references the previous level twice (frontier join +
-      // visited union), so without it the logical tree doubles per level
-      // — exponential plan text that OOMs plan rendering near depth 20.
-      // Checkpoint blocks are also cleaned by the ContextCleaner once
-      // unreferenced, unlike Dataset persist entries which pin the cache
-      // manager until an explicit unpersist.
       val seed0 = (
         if (trackPaths)
           seeds.select(col("id"), array(col("id")).as("path"))
         else seeds.select(col("id"))
       ).distinct().withColumn("depth", lit(0))
-        .localCheckpoint(false)
-
-      var visited = seed0   // accumulated (id, [path,] depth)
-      var frontier = seed0
-      var depth = 0
-      var total = seed0.count()
-      var frontierSize = total
-      // localCheckpoint erases size stats, so the optimizer can't pick a
-      // broadcast join on its own — but the loop KNOWS each frame's
-      // exact row count from the per-level count(). Hint broadcast while
-      // the frontier/visited stay small (the overwhelmingly common case:
-      // frontiers are tiny next to the edge table); fall back to the
-      // shuffled join automatically past the threshold.
-      val bcastRows = 100000L
-      while (depth < maxDepth && total < maxResults && frontierSize > 0) {
-        depth += 1
-        // with trackPaths every frontier row carries a path ARRAY of
-        // ~depth ids, so a row-count threshold alone under-estimates the
-        // broadcast size by a factor of the depth — scale the cap down
-        // by the rows' width (the 10 MB byte heuristic the optimizer
-        // would have applied is unavailable: checkpoint erased stats)
-        val frontierCap = if (trackPaths) bcastRows / (depth + 1) else bcastRows
-        val expandFrom =
-          if (frontierSize <= frontierCap) broadcast(frontier) else frontier
-        val expandedRaw = expandFrom.join(hop, expandFrom("id") === hop("from"))
-        val visitedIds0 = visited.select(col("id").as("vid"))
-        val visitedIds =
-          if (total <= bcastRows) broadcast(visitedIds0) else visitedIds0
-        // dedup first in the SOURCE, but the placement is the
-        // optimizer's call either way: PushDownLeftSemiAntiJoin moves
-        // the anti below the aggregate (its condition only touches the
-        // grouping key), so writing the anti first produces the
-        // IDENTICAL physical plan (r14 A/B: plans/r14/rounds/
-        // bfs_level_r*.txt matched operator-for-operator across both
-        // source orders). Kept in the r13 order; both orders produce
-        // the identical set.
-        val expanded =
-          if (trackPaths)
-            expandedRaw
-              .select(col("to").as("id"), concat(col("path"), array(col("to"))).as("path"))
-              // one canonical (lexicographically smallest) path per node
-              .groupBy("id").agg(min(col("path")).as("path"))
-              .join(visitedIds, col("id") === col("vid"), "left_anti")
-          else
-            expandedRaw.select(col("to").as("id")).distinct()
-              .join(visitedIds, col("id") === col("vid"), "left_anti")
-        val next0 = expanded
-          .withColumn("depth", lit(depth))
-        graft.core.PlanTrace.round("bfs_level", next0)
-        val next = next0.localCheckpoint(false)
-        // visited stays a lazy union of per-level checkpointed frames
-        visited = visited.union(next)
-        frontier = next
-        frontierSize = next.count()
-        total += frontierSize
-      }
-      // canonical (depth, id) ordering for deterministic truncation;
-      // uncapped internal callers skip the global sort entirely
-      if (maxResults >= Int.MaxValue.toLong) visited
-      else visited.orderBy(col("depth"), col("id")).limit(maxResults.toInt)
+      val start =
+        if (localRows > 0)
+          driverLevels(hop, seeds, seed0, maxDepth, maxResults, trackPaths, localRows)
+        else Right(seeded(seed0))
+      start.fold(identity, distributedLevels(hop, _, maxDepth, maxResults, trackPaths))
     } finally if (!parentCached) hop.unpersist()
   }
+
+  /** Row gate of the BFS loop: below it a frame is broadcast (distributed
+    * levels) or held on the driver (driver levels). For driver levels
+    * the value is measured, not only borrowed from the broadcast hint:
+    * `ScaleProbe bfsgate` (1.2M-edge synthetic graph, 4 cores, medians
+    * of 3) ran one level faster on the driver up to ~110k visited rows
+    * and ~80k new ids (2.27 s vs 2.54 s distributed) and slower from
+    * ~310k and ~210k (5.07 s vs 2.91 s).
+    */
+  private val BcastRows = 100000L
+
+  /** The gate on a level's frontier. With `trackPaths` every frontier row
+    * carries a path of ~depth ids, so a row-count threshold alone
+    * under-estimates the frame's bytes by a factor of the depth — the
+    * cap is scaled down by the rows' width (the 10 MB byte heuristic the
+    * optimizer would have applied is unavailable: checkpoint erased
+    * stats).
+    */
+  private def frontierCap(gate: Long, depth: Int, trackPaths: Boolean): Long =
+    if (trackPaths) gate / (depth + 1) else gate
+
+  /** Where a distributed BFS continues from: the visited set
+    * (id, [path,] depth), the last level and their row counts.
+    */
+  private final case class BfsState(visited: DataFrame, frontier: DataFrame,
+                                    depth: Int, total: Long, frontierSize: Long)
+
+  /** The distributed loop's start: the distinct seeds, checkpointed. */
+  private def seeded(seed0: DataFrame): BfsState = {
+    val s = seed0.localCheckpoint(false)
+    val n = s.count()
+    BfsState(s, s, 0, n, n)
+  }
+
+  /** One distributed level: frontier ⋈ hops, minus the visited set, at
+    * `depth`. Broadcast hints come from the frames' exact row counts.
+    */
+  private def nextLevel(hop: DataFrame, visited: DataFrame, frontier: DataFrame,
+                        depth: Int, total: Long, frontierSize: Long,
+                        trackPaths: Boolean): DataFrame = {
+    val expandFrom =
+      if (frontierSize <= frontierCap(BcastRows, depth, trackPaths)) broadcast(frontier)
+      else frontier
+    val expandedRaw = expandFrom.join(hop, expandFrom("id") === hop("from"))
+    val visitedIds0 = visited.select(col("id").as("vid"))
+    val visitedIds =
+      if (total <= BcastRows) broadcast(visitedIds0) else visitedIds0
+    // dedup first in the SOURCE, but the placement is the
+    // optimizer's call either way: PushDownLeftSemiAntiJoin moves
+    // the anti below the aggregate (its condition only touches the
+    // grouping key), so writing the anti first produces the
+    // IDENTICAL physical plan (r14 A/B: plans/r14/rounds/
+    // bfs_level_r*.txt matched operator-for-operator across both
+    // source orders). Kept in the r13 order; both orders produce
+    // the identical set.
+    val expanded =
+      if (trackPaths)
+        expandedRaw
+          .select(col("to").as("id"), concat(col("path"), array(col("to"))).as("path"))
+          // one canonical (lexicographically smallest) path per node
+          .groupBy("id").agg(min(col("path")).as("path"))
+          .join(visitedIds, col("id") === col("vid"), "left_anti")
+      else
+        expandedRaw.select(col("to").as("id")).distinct()
+          .join(visitedIds, col("id") === col("vid"), "left_anti")
+    expanded.withColumn("depth", lit(depth))
+  }
+
+  /** Levels as distributed joins, from `start` until `maxDepth`,
+    * `maxResults` or an empty frontier.
+    */
+  private def distributedLevels(hop: DataFrame, start: BfsState, maxDepth: Int,
+                                maxResults: Long, trackPaths: Boolean): DataFrame = {
+    // ONE action per level: `count()` materializes the level (an eager
+    // localCheckpoint would be a second, separate materialization job —
+    // the LAZY variant materializes on the count and still replaces the
+    // logical plan with a flat LogicalRDD up front). Adaptive execution
+    // still runs that action as a job per broadcast and shuffle stage.
+    // Lineage truncation here is load-bearing: each level's
+    // plan references the previous level twice (frontier join +
+    // visited union), so without it the logical tree doubles per level
+    // — exponential plan text that OOMs plan rendering near depth 20.
+    // Checkpoint blocks are also cleaned by the ContextCleaner once
+    // unreferenced, unlike Dataset persist entries which pin the cache
+    // manager until an explicit unpersist.
+    var BfsState(visited, frontier, depth, total, frontierSize) = start
+    while (depth < maxDepth && total < maxResults && frontierSize > 0) {
+      depth += 1
+      val next0 = nextLevel(hop, visited, frontier, depth, total, frontierSize, trackPaths)
+      graft.core.PlanTrace.round("bfs_level", next0)
+      val next = next0.localCheckpoint(false)
+      // visited stays a lazy union of per-level checkpointed frames
+      visited = visited.union(next)
+      frontier = next
+      frontierSize = next.count()
+      total += frontierSize
+    }
+    // canonical (depth, id) ordering for deterministic truncation;
+    // uncapped internal callers skip the global sort entirely
+    if (maxResults >= Int.MaxValue.toLong) visited
+    else visited.orderBy(col("depth"), col("id")).limit(maxResults.toInt)
+  }
+
+  /** Levels on the driver while the visited set and the frontier stay
+    * under `gate` rows (the frontier gate scaled as in [[frontierCap]]).
+    * A level is ONE narrow job: the visited ids go out as a broadcast
+    * map that also carries each frontier id's path rank (TorrentBroadcast
+    * runs no job; an `isin` list would grow the plan with the frontier),
+    * and each hop partition returns the new ids its hops reach from the
+    * frontier, each with its best predecessor rank. The driver merges
+    * them and builds the canonical paths. The seeds are collected first,
+    * in one job.
+    *
+    * Returns the result as a local frame with the distributed loop's
+    * schema, sorted by (depth, id) and capped like it; or, when the
+    * seeds, the state or a level's expansion would cross the gate, the
+    * state to continue from with [[distributedLevels]]. What reaches the
+    * driver is bounded as [[collectBounded]] states.
+    */
+  private def driverLevels(hop: DataFrame, seeds: DataFrame, seed0: DataFrame,
+                           maxDepth: Int, maxResults: Long, trackPaths: Boolean,
+                           gate: Long): Either[DataFrame, BfsState] = {
+    val spark = hop.sparkSession
+    import spark.implicits._
+    val cap = if (gate >= Int.MaxValue) Int.MaxValue - 1 else gate.toInt
+    val seedIds = collectBounded(
+      seeds.select(col("id")).as[String].rdd
+        .mapPartitions(it => minRankUpTo(it.map(_ -> 0), cap)), gate) match {
+      case Some(found) => found
+      case None => return Right(seeded(seed0))
+    }
+
+    // every visited row, in visit order; `parents` holds the index of
+    // the row before it on its canonical path (-1 at a seed)
+    val ids = ArrayBuffer.empty[String]
+    val keys = ArrayBuffer.empty[Option[UTF8String]]
+    val depths = ArrayBuffer.empty[Int]
+    val parents = ArrayBuffer.empty[Int]
+    var depth = 0
+    // a level's rows in canonical-path order: all paths of a level have
+    // the same length, so a node's path order is (its predecessor's
+    // rank, its id); the seeds' is their id order
+    def admit(found: Array[(String, Int)], prev: IndexedSeq[Int]): IndexedSeq[Int] = {
+      val best = mutable.HashMap.empty[String, Int]
+      for ((id, r) <- found) best(id) = math.min(r, best.getOrElse(id, r))
+      best.toIndexedSeq.map { case (id, r) => (r, sparkKey(id), id) }
+        .sortBy(t => (t._1, t._2))
+        .map { case (r, key, id) =>
+          ids += id; keys += key; depths += depth
+          parents += (if (trackPaths && prev != null) prev(r) else -1)
+          ids.length - 1
+        }
+    }
+    var frontier = admit(seedIds, null)
+
+    // the distributed loop's schema: its union takes the level frames'
+    // nullability once a level has run (analysis only, no job)
+    lazy val levelSchema =
+      seed0.union(nextLevel(hop, seed0, seed0, 1, 0L, 0L, trackPaths)).schema
+    def frame(rows: Seq[Int]): DataFrame = {
+      def path(i: Int): List[String] =
+        if (i < 0) Nil else ids(i) :: path(parents(i))
+      spark.createDataFrame(rows.map { i =>
+        if (trackPaths) Row(ids(i), path(i).reverse, depths(i)) else Row(ids(i), depths(i))
+      }.asJava, if (depth == 0) seed0.schema else levelSchema)
+    }
+    def handOff = Right(BfsState(frame(ids.indices), frame(frontier), depth,
+      ids.length.toLong, frontier.length.toLong))
+
+    while (depth < maxDepth && ids.length < maxResults && frontier.nonEmpty) {
+      if (ids.length > gate || frontier.length > frontierCap(gate, depth + 1, trackPaths))
+        return handOff
+      // visited ids map to -1, frontier ids to their path rank within
+      // the level (0 for all without paths). A null id never matches
+      // the distributed joins, so it is neither visited nor expanded.
+      val marks = mutable.HashMap.empty[String, Int]
+      for (id <- ids if id != null) marks(id) = -1
+      for ((i, r) <- frontier.zipWithIndex if ids(i) != null)
+        marks(ids(i)) = if (trackPaths) r else 0
+      val bc = spark.sparkContext.broadcast(marks.toMap)
+      val found = try collectBounded(
+        hop.as[(String, String)].rdd.mapPartitions { it =>
+          val m = bc.value
+          minRankUpTo(it.flatMap { case (a, b) =>
+            m.get(a).filter(_ >= 0 && !m.contains(b)).map(b -> _)
+          }, cap)
+        }, gate)
+      finally bc.destroy()
+      if (found.isEmpty) return handOff
+      val prev = frontier
+      depth += 1
+      frontier = admit(found.get, prev)
+    }
+    val order = ids.indices.sortBy(i => (depths(i), keys(i)))
+    Left(frame(if (maxResults >= Int.MaxValue.toLong) order else order.take(maxResults.toInt)))
+  }
+
+  /** Each distinct id of `it` with its smallest rank, stopping once more
+    * than `cap` ids are held: a partition's share of a level can only
+    * tell the driver that it overflows.
+    */
+  private def minRankUpTo(it: Iterator[(String, Int)],
+                          cap: Int): Iterator[(String, Int)] = {
+    val best = mutable.HashMap.empty[String, Int]
+    while (it.hasNext && best.size <= cap) {
+      val (id, r) = it.next()
+      best(id) = math.min(r, best.getOrElse(id, r))
+    }
+    best.iterator
+  }
+
+  /** All rows of `rows` in ONE job while their running count stays within
+    * `gate`, else None. The job is cancelled as soon as the results
+    * received pass the gate, and results past it are dropped, so the
+    * driver holds at most `gate` rows plus the one result that crossed
+    * it; tasks still running when the cancel lands may ship their
+    * results, which are dropped too. `limit(n).collect()` is no
+    * substitute: its incremental take can run several jobs.
+    */
+  private def collectBounded(rows: RDD[(String, Int)],
+                             gate: Long): Option[Array[(String, Int)]] = {
+    val sc = rows.sparkContext
+    val tag = s"graft-bfs-level-${java.util.UUID.randomUUID()}"
+    val parts = ArrayBuffer.empty[Array[(String, Int)]]
+    var n = 0L
+    sc.addJobTag(tag)
+    try sc.runJob(rows, (it: Iterator[(String, Int)]) => it.toArray,
+      (_: Int, part: Array[(String, Int)]) =>
+        if (n <= gate) {
+          n += part.length
+          if (n > gate) sc.cancelJobsWithTag(tag) else parts += part
+        })
+    catch { case _: SparkException if n > gate => () }
+    finally sc.removeJobTag(tag)
+    if (n > gate) None else Some(parts.toArray.flatten)
+  }
+
+  /** Spark's string order: UTF-8 bytes, unsigned, unlike `String` order,
+    * which compares UTF-16 units. Nulls first, as in an ascending sort.
+    */
+  private def sparkKey(id: String): Option[UTF8String] =
+    Option(id).map(UTF8String.fromString)
 
   /** Topological level of every node: Kahn's algorithm by frontier
     * peeling (reference `traverse_topological_sort`,
@@ -490,9 +706,11 @@ object Traversal {
           // per-level prune: lexicographically-smallest K paths survive
           .orderBy(col("path")).limit(frontierCap)
           .localCheckpoint(false)
-        val total = expanded.count() // the materializing action for the level
+        // the level's one job: it materializes the lazy checkpoint and
+        // counts all paths and the hits together
+        val Row(total: Long, n: Long) =
+          expanded.agg(count(lit(1)), count_if(col("head") === lit(to))).head()
         val hits = expanded.filter(col("head") === lit(to)).select("path")
-        val n = hits.count() // cached scan
         if (n > 0) { collected = hits :: collected; nHits += n }
         // paths that reached `to` are done — only the rest keep expanding
         frontier = expanded.filter(col("head") =!= lit(to))

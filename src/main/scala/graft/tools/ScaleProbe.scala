@@ -17,6 +17,7 @@ import org.apache.spark.sql.functions._
   * uniform. Ids are "n<k>" strings to match the engine's key shape.
   *
   * Usage: runMain graft.tools.ScaleProbe [algos...]
+  * (`diameter` and the `bfsgate` sweep run only when named)
   */
 object ScaleProbe {
 
@@ -178,8 +179,46 @@ object ScaleProbe {
             .withColumn("w", lit(1L) +
               (expr("CAST(substring(src, 2, 100) AS BIGINT)")
                 + expr("CAST(substring(dst, 2, 100) AS BIGINT)")) % 7),
-          sourceId = "n0"))
-      ).flatten.toMap
+          sourceId = "n0")),
+        // the uncapped BFS loop end to end: two sweeps over the und
+        // index whose frontiers grow past the driver-level gate
+        time("diameter")(GraphAnalytics.doubleSweep(und, "n0",
+          undirectedPairs = true))
+      ).flatten.toMap ++ (
+        // where driver-level BFS stops winning: one level from F
+        // spread-out seeds with every level distributed (gate 0) and
+        // on the driver (no gate), then the first sweep's whole
+        // traversal at gate 0 and at the shipped gate; medians of 3
+        if (!algos.contains("bfsgate")) Nil
+        else {
+          import graft.graph.{Direction, Traversal}
+          import spark.implicits._
+          def median3(f: => Long): (Double, Long) = {
+            val runs = (1 to 3).map { _ =>
+              val t0 = System.nanoTime()
+              val n = f
+              ((System.nanoTime() - t0) / 1e9, n)
+            }.sortBy(_._1)
+            runs(1)
+          }
+          def bfs(seeds: Seq[String], depth: Int, gate: Long): Long =
+            Traversal.bfsLoop(und, seeds.toDF("id"), Direction.Outgoing,
+              depth, Long.MaxValue, localRows = gate).count()
+          val level = for (f <- Seq(1000L, 3000L, 10000L, 30000L, 100000L, 300000L);
+                           g <- Seq(0L, Long.MaxValue)) yield {
+            val seeds = (0L until f).map(i => s"n${i * nV / f}")
+            val (dt, n) = median3(bfs(seeds, 1, g))
+            val gl = if (g == 0L) "0" else "none"
+            println(f"[$tag] bfsgate level  seeds=$f%-7d gate=$gl%-6s $dt%8.2f s  ($n rows)")
+            s"bfsgate_level_${f}_$gl" -> dt
+          }
+          val whole = for (g <- Seq(0L, 100000L)) yield {
+            val (dt, n) = median3(bfs(Seq("n0"), 12, g))
+            println(f"[$tag] bfsgate sweep  gate=$g%-6d $dt%8.2f s  ($n rows)")
+            s"bfsgate_sweep_$g" -> dt
+          }
+          level ++ whole
+        })
       pairs.unpersist(); und.unpersist()
       r
     }

@@ -42,6 +42,100 @@ class RandomizedInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("BFS at driver-level gates 0, small and unbounded equals an in-memory reference") {
+    import graft.graph.{EdgeFilter => F}
+    import Direction._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.unsafe.types.UTF8String
+    // Spark's string order, computed apart from the engine's comparator
+    def lt(a: String, b: String): Boolean =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    def pathLt(p: Seq[String], q: Seq[String]): Boolean =
+      p.zip(q).find { case (a, b) => a != b }.map { case (a, b) => lt(a, b) }
+        .getOrElse(p.length < q.length)
+    val rnd = new scala.util.Random(11)
+    // U+FFFD sorts before U+1F600 in UTF-8 bytes, after its surrogate
+    // pair in Java's UTF-16 String order
+    val names = (0 until 24).map { i =>
+      Seq(s"n$i", s"\uFFFD$i", s"\uD83D\uDE00$i")(i % 3)
+    }
+    val types = Seq("calls", "imports", "refs")
+    // duplicate edges and self-loops kept
+    val edgeRows = (1 to 70).map { _ =>
+      (names(rnd.nextInt(24)), names(rnd.nextInt(24)), types(rnd.nextInt(3)))
+    }
+    val edges = edgeRows.toDF("src", "dst", "edge_type")
+
+    // (id, depth, lexicographically smallest shortest path), sorted by
+    // (depth, id) and capped, over whole levels like the engine
+    def reference(dir: Direction, filt: F, seeds: Seq[String],
+                  maxDepth: Int, maxResults: Int): Seq[(String, Int, Seq[String])] = {
+      val kept = edgeRows.filter { case (_, _, t) => filt match {
+        case F.Include(ts) => ts.contains(t)
+        case F.Exclude(ts) => !ts.contains(t)
+        case _ => true
+      } }.map { case (s, d, _) => (s, d) }
+      val hops = dir match {
+        case Outgoing => kept
+        case Incoming => kept.map(_.swap)
+        case Both => kept ++ kept.map(_.swap)
+      }
+      val adj = hops.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+      var seen = seeds.map(s => s -> ((0, Seq(s)))).toMap
+      var frontier = seen.keySet
+      var depth = 0
+      while (depth < maxDepth && seen.size < maxResults && frontier.nonEmpty) {
+        depth += 1
+        val next = (for (u <- frontier.toSeq; v <- adj.getOrElse(u, Nil)
+                         if !seen.contains(v)) yield v -> (seen(u)._2 :+ v))
+          .groupBy(_._1).map { case (v, ps) =>
+            v -> ((depth, ps.map(_._2).reduce((p, q) => if (pathLt(q, p)) q else p)))
+          }
+        seen ++= next
+        frontier = next.keySet
+      }
+      seen.toSeq.map { case (id, (d, p)) => (id, d, p) }
+        .sortWith((x, y) => x._2 < y._2 || x._2 == y._2 && lt(x._1, y._1))
+        .take(maxResults)
+    }
+    // deepest level a driver-side state handed to the distributed loop
+    // held (-1: no hand-off)
+    def handedOffAt(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.logical.collectLeaves().collect {
+        case l: LocalRelation => l.data.map(r => r.getInt(r.numFields - 1))
+      }.flatten.maxOption.getOrElse(-1)
+
+    // (direction, filter, seeds, depth, max results, paths, small gate)
+    val cases = Seq(
+      (Outgoing, F.All, Seq(names(0)), 4, 10000, true, 4L),
+      (Incoming, F.Include(Seq("calls", "imports")),
+        Seq(names(1), names(1), names(2)), 3, 10000, false, 6L),
+      (Both, F.Exclude(Seq("refs")), Seq(names(2), names(3), names(2)), 4, 10000, true, 12L),
+      (Outgoing, F.All, Seq(names(4), names(5)), 5, 6, false, 8L),
+      (Both, F.All, Seq(names(6)), 3, 9, true, 8L))
+    for ((dir, filt, seeds, depth, cap, paths, small) <- cases) {
+      val want = reference(dir, filt, seeds.distinct, depth, cap)
+      val runs = Seq(0L, small, Long.MaxValue).map { gate =>
+        gate -> Traversal.bfsLoop(edges, seeds.toDF("id"), dir, depth, cap.toLong,
+          filt, paths, localRows = gate)
+      }
+      val label = s"$dir $filt seeds=$seeds"
+      for ((gate, df) <- runs) {
+        val got = df.collect().toSeq.map { r =>
+          (r.getAs[String]("id"), r.getAs[Int]("depth"),
+            if (paths) r.getAs[Seq[String]]("path") else Seq.empty[String])
+        }
+        assert(got === want.map { case (id, d, p) => (id, d, if (paths) p else Nil) },
+          s"$label gate=$gate")
+        assert(df.schema === runs.head._2.schema, s"$label gate=$gate")
+      }
+      val byGate = runs.toMap
+      assert(!byGate(0L).isLocal && handedOffAt(byGate(0L)) == -1, label)
+      assert(handedOffAt(byGate(small)) >= 1, s"$label: no hand-off after a driver level")
+      assert(byGate(Long.MaxValue).isLocal, label)
+    }
+  }
+
   test("putBlocks sequences are max+1..max+n in id order on skewed batches") {
     for (seed <- Seq(7, 8)) {
       val rnd = new scala.util.Random(seed)

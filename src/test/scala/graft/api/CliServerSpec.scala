@@ -237,6 +237,20 @@ class CliServerSpec extends SparkSpec {
     assert(row.path("cache_misses").asLong == before.path("cache_misses").asLong)
   }
 
+  test("warm depth-3 show and trace: at most 8 jobs each, no parquet read") {
+    val l = linked
+    for (line <- Seq("show --relation callers --target beta --max-depth 3",
+                     "trace --direction callers --target beta --max-depth 3")) {
+      val cold = l.req(line)
+      val (warm, jobs, bytes) = measured(l.req(line))
+      assert(warm == cold)
+      // beta at depth 0, its caller alpha at depth 1
+      assert(json(warm).path("result").size == 2, warm)
+      assert(jobs <= 8, s"$line: $jobs jobs")
+      assert(bytes == 0L, s"$line read parquet")
+    }
+  }
+
   test("resident graph follows every commit: server sync, another session's write") {
     val l = linked
     assert(l.find("alpha").contains("lib.zig:alpha"))

@@ -142,6 +142,32 @@ class TraversalEngineSpec extends SparkSpec {
       TraversalSpec(Direction.Outgoing, maxDepth = 20))
     assert(r.count() == 21) // seed + 20 hops
   }
+
+  test("driver levels hand off to the distributed loop once a collect passes the gate") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // a star: n0 reaches 40 leaves, 5 per partition, so the running
+    // total (not one partition) crosses a gate of 10
+    val star = (1 to 40).map(i => ("n0", s"l$i", "calls"))
+      .toDF("src", "dst", "edge_type").repartition(8)
+    def run(seeds: DataFrame, gate: Long): DataFrame =
+      Traversal.bfsLoop(star, seeds, Direction.Outgoing, 2, 10000L, localRows = gate)
+    def localDepths(df: DataFrame): Seq[Int] =
+      df.queryExecution.logical.collectLeaves().collect {
+        case l: LocalRelation => l.data.map(r => r.getInt(r.numFields - 1))
+      }.flatten
+    val leaves = (1 to 40).map(i => s"l$i").toDF("id").repartition(8)
+    for (seeds <- Seq(seed("n0"), leaves)) {
+      val want = run(seeds, 0L).collect().toSeq
+      val got = run(seeds, 10L)
+      assert(got.collect().toSeq === want)
+      assert(!got.isLocal)
+    }
+    // one seed fits, level 1 does not: only the seed was held locally
+    assert(localDepths(run(seed("n0"), 10L)) === Seq(0))
+    // 40 seeds do not fit: nothing was held locally
+    assert(localDepths(run(leaves, 10L)).isEmpty)
+    assert(spark.sparkContext.getJobTags().isEmpty)
+  }
   test("dfsStackOrder replays the reference stack machine under truncation") {
     // a -> b, a -> c, b -> d, c -> e; ascending push => descending pops:
     // visit a, c, e, b, d — truncation at 3 keeps {a, c, e}, which the
