@@ -139,13 +139,13 @@ object GraphAnalytics {
                        edges: DataFrame, topology: DataFrame,
                        shipped: Seq[Column], inc: Column, iters: Int,
                        scale: Long)(teleport: Long => Teleport): DataFrame = {
-    val topo = loop.seed(topology)
+    val topo = loop.seed(tag, topology)
     val n = topo.count() // free: topo is materialized
     val tp = teleport(n)
     val carried = topo.columns.toSeq.filter(_ != "id")
     val degree = col(carried.head)
     val minMass = scale - scale / 100L
-    def ship(df: DataFrame) = if (n <= 1000000L) broadcast(df) else df
+    def ship(df: DataFrame) = if (n <= Loop.BroadcastStateRows) broadcast(df) else df
     var state = topo.withColumn("rank", tp.rank0)
     // per-iteration state shuffles are V-sized; the contribution
     // shuffle's input is E-scale — size from both (edges is
@@ -320,7 +320,7 @@ object GraphAnalytics {
                      pairsDistinct: Boolean = false): DataFrame =
     Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
       withSrcPairs(edges, pairsDistinct) { pairs =>
-        val nodes = loop.pin(endpoints(pairs))
+        val nodes = loop.pin(endpoints(pairs), eager = true)
         val n = nodes.count()
         // SPARSE state carry (r14): a node absent from a raw-sum frame
         // has score 0 and contributes NOTHING to either propagation sum
@@ -341,7 +341,7 @@ object GraphAnalytics {
         // iteration; broadcast keeps both probes map-side over the
         // cached edge partitions (the dst-keyed probe could never reuse
         // the src layout anyway).
-        val smallV = n <= 1000000L
+        val smallV = n <= Loop.BroadcastStateRows
         def shipIf(df: DataFrame) = if (smallV) broadcast(df) else df
         def total(raw: DataFrame) =
           raw.agg(coalesce(sum("raw"), lit(0L))).first().getLong(0)
@@ -349,7 +349,7 @@ object GraphAnalytics {
           raw.select(col("id"), expr(s"CAST(raw AS DECIMAL(38,0)) * ${scale}L" +
             s" div ${math.max(1L, total)}L").as(as))
         loop.rounds(n, pairs.count()) {
-          for (t <- 1 to iters) {
+          for (_ <- 1 to iters) {
             // authorities from the previous hubs
             val aRaw = loop.carry("hits_authraw_iter", pairs
               .join(shipIf(hubs.select(col("id").as("src"), col("hub"))),
@@ -361,9 +361,7 @@ object GraphAnalytics {
               .join(shipIf(auths.select(col("id").as("dst"), col("authority"))),
                 Seq("dst"))
               .groupBy(col("src").as("id")).agg(sum("authority").as("raw")))
-            // the final authorities feed the output assembly: keep them
-            hubs = normalized(hRaw, loop.settle(total(hRaw), release = t < iters),
-              "hub")
+            hubs = normalized(hRaw, loop.settle(total(hRaw)), "hub")
           }
         }
         // the ONE zero-fill join pass, over the final frames only
@@ -430,95 +428,73 @@ object GraphAnalytics {
     *
     * Scale shape: each round is one partial-agg degree count plus two
     * broadcast-able semi-joins against the shrinking keep-set; the edge
-    * set only shrinks. Same one-action-per-round checkpoint pattern as
-    * the topo loop.
+    * set only shrinks.
     */
   def kcore(edges: DataFrame, k: Int, rounds: Int = 8,
             pairsDistinct: Boolean = false,
-            undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    // undirected view: both orientations, DEDUPED — an input holding
-    // both (a,b) and (b,a) is one undirected edge, not two (a plain
-    // union would double-count its degree contribution).
-    // `undirectedPairs`: caller passes a stored undirected index
-    // (CodeGraph.undPairs / the second bucketed edge-table copy) that
-    // is already exactly that view — skip the 2|E| union+distinct.
-    // an already-persisted undirected index is consumed as-is (the
-    // checkpoint copy is only for derived views — see
-    // connectedComponents); the loop reassigns `und` to shrunk
-    // checkpointed frames from round 1 on either way.
-    val parentCached = undirectedPairs &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val undInit = if (undirectedPairs)
-      edges.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val und0 =
-        if (pairsDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct()
-      und0.select(col("src").as("a"), col("dst").as("b"))
-        .union(und0.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
-    }
-    var und = if (parentCached) undInit else undInit.localCheckpoint(false)
-    // DELTA peeling (the same trick as the topo loop): degrees are
-    // aggregated over the full edge set ONCE; each round subtracts the
-    // removed nodes' contributions from their surviving neighbors
-    // instead of re-counting the whole (shrinking) graph — per-round
-    // cost is O(edges incident to the peeled layer) + one O(V) merge,
-    // and one driver action (the removed-layer count).
-    var deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
-    var r = 0
-    var removedCnt = 1L
-    while (r < rounds && removedCnt > 0) {
-      r += 1
-      val removed = deg.filter(col("deg") < k).select("id")
-        .localCheckpoint(false)
-      removedCnt = removed.count() // the round's single action
-      if (removedCnt > 0) {
-        // the peeled layer is the JOIN side of every edge-set probe this
-        // round; with the loop running under withoutAqe and no stats, a
-        // bare join plans as sort-merge — FOUR full sorts of the O(E)
-        // edge set per round, the super-linear term the r8 scale probe
-        // measured (kcore 15.5× at 10× data; every other headliner
-        // ≤ 7.3×). Broadcasting the layer makes each round one map-only
-        // pass over und. The layer is V-bounded and usually tiny after
-        // round 1; past the broadcast bound (same 4M-key ballpark as
-        // the other V-threshold switches) fall back to shuffle — a
-        // billion-node first peel on a 100-TB graph must not be
-        // collected to the driver.
-        def rem(as: String) = {
-          val r0 = removed.withColumnRenamed("id", as)
-          if (removedCnt <= 4000000L) broadcast(r0) else r0
+            undirectedPairs: Boolean = false): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
+      var und = undView(edges, pairsDistinct, undirectedPairs,
+        loop.seed("kcore_und_round", _))
+      // DELTA peeling (the same trick as the topo loop): degrees are
+      // aggregated over the full edge set ONCE; each round subtracts the
+      // removed nodes' contributions from their surviving neighbors
+      // instead of re-counting the whole (shrinking) graph — per-round
+      // cost is O(edges incident to the peeled layer) + one O(V) merge,
+      // and one driver action (the removed-layer count).
+      var deg = loop.seed("kcore_deg_round",
+        und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg")))
+      var r = 0
+      var removedCnt = 1L
+      while (r < rounds && removedCnt > 0) {
+        r += 1
+        val removed = loop.carry("kcore_removed_round",
+          deg.filter(col("deg") < k).select("id"))
+        removedCnt = loop.settle(removed.count()) // the round's single action
+        if (removedCnt > 0) {
+          // the peeled layer is the JOIN side of every edge-set probe this
+          // round; with AQE off inside the loop and no stats, a
+          // bare join plans as sort-merge — FOUR full sorts of the O(E)
+          // edge set per round, the super-linear term the r8 scale probe
+          // measured (kcore 15.5× at 10× data; every other headliner
+          // ≤ 7.3×). Broadcasting the layer makes each round one map-only
+          // pass over und. The layer is V-bounded and usually tiny after
+          // round 1; past the broadcast bound (same 4M-key ballpark as
+          // the other V-threshold switches) fall back to shuffle — a
+          // billion-node first peel on a 100-TB graph must not be
+          // collected to the driver.
+          def rem(as: String) = {
+            val r0 = removed.withColumnRenamed("id", as)
+            if (removedCnt <= 4000000L) broadcast(r0) else r0
+          }
+          // decrement = edges FROM a removed node TO a survivor (und holds
+          // both orientations, so removed→removed rows are dropped by the
+          // anti-join and never decrement anyone). dec is bounded by
+          // removedCnt·(k−1) — every removed node had deg < k — so its
+          // broadcast gate must carry the (k−1) FACTOR: at k=16 a 4M-node
+          // peel layer can legally produce ~60M decrement rows, far past
+          // what the 4M-key ballpark is meant to allow through the driver.
+          val dec0 = und
+            .join(rem("a"), Seq("a"), "left_semi")
+            .join(rem("b"), Seq("b"), "left_anti")
+            .groupBy(col("b").as("id")).agg(count(lit(1)).as("sub"))
+          val dec =
+            if (removedCnt * math.max(1L, k - 1L) <= 4000000L) broadcast(dec0)
+            else dec0
+          deg = loop.carry("kcore_deg_round", deg
+            .join(rem("id"), Seq("id"), "left_anti")
+            .join(dec, Seq("id"), "left")
+            .select(col("id"),
+              (col("deg") - coalesce(col("sub"), lit(0L))).as("deg")))
+          und = loop.carry("kcore_und_round", und
+            .join(rem("a"), Seq("a"), "left_anti")
+            .join(rem("b"), Seq("b"), "left_anti"))
         }
-        // decrement = edges FROM a removed node TO a survivor (und holds
-        // both orientations, so removed→removed rows are dropped by the
-        // anti-join and never decrement anyone). dec is bounded by
-        // removedCnt·(k−1) — every removed node had deg < k — so its
-        // broadcast gate must carry the (k−1) FACTOR: at k=16 a 4M-node
-        // peel layer can legally produce ~60M decrement rows, far past
-        // what the 4M-key ballpark is meant to allow through the driver.
-        val dec0 = und
-          .join(rem("a"), Seq("a"), "left_semi")
-          .join(rem("b"), Seq("b"), "left_anti")
-          .groupBy(col("b").as("id")).agg(count(lit(1)).as("sub"))
-        val dec =
-          if (removedCnt * math.max(1L, k - 1L) <= 4000000L) broadcast(dec0)
-          else dec0
-        deg = deg.join(rem("id"), Seq("id"), "left_anti")
-          .join(dec, Seq("id"), "left")
-          .select(col("id"),
-            (col("deg") - coalesce(col("sub"), lit(0L))).as("deg"))
-          .localCheckpoint(false)
-        und = und
-          .join(rem("a"), Seq("a"), "left_anti")
-          .join(rem("b"), Seq("b"), "left_anti")
-          .localCheckpoint(false)
       }
+      // deg 0 rows are fully-orphaned survivors — nodes with no remaining
+      // edge; the oracle's final per-edge count likewise omits them
+      deg.filter(col("deg") > 0)
     }
-    // deg 0 rows are fully-orphaned survivors — nodes with no remaining
-    // edge; the oracle's final per-edge count likewise omits them
-    deg.filter(col("deg") > 0)
-  }
 
   /** Connected components by min-label propagation with pointer
     * jumping, DataFrame-native (the scale path — needs no graph
@@ -559,108 +535,93 @@ object GraphAnalytics {
     */
   def connectedComponents(edges: DataFrame, rounds: Int = 6,
                           pairsDistinct: Boolean = false,
-                          undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    // both orientations, NOT deduped: min-propagation is idempotent
-    // over duplicate edges (unlike k-core's degree counts), so the 2|E|
-    // dedup shuffle would buy nothing — the msgs groupBy folds dupes.
-    // `undirectedPairs`: a stored undirected index is consumed as-is.
-    // an already-persisted undirected index is consumed as-is — the
-    // checkpoint copy is only for derived views (copying the stored
-    // E-sized table per query would double its storage for nothing)
-    val parentCached = undirectedPairs &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val und0raw = if (undirectedPairs)
-      edges.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val pairs0 =
-        if (pairsDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct()
-      pairs0.select(col("src").as("a"), col("dst").as("b"))
-        .union(pairs0.select(col("dst").as("a"), col("src").as("b")))
+                          undirectedPairs: Boolean = false): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
+      // both orientations, NOT deduped: min-propagation is idempotent
+      // over duplicate edges (unlike k-core's degree counts), so the 2|E|
+      // dedup shuffle would buy nothing — the msgs groupBy folds dupes.
+      val und0raw = if (undirectedPairs)
+        edges.select(col("src").as("a"), col("dst").as("b"))
+      else {
+        val pairs0 =
+          if (pairsDistinct) edges.select(col("src"), col("dst"))
+          else edges.select(col("src"), col("dst")).distinct()
+        pairs0.select(col("src").as("a"), col("dst").as("b"))
+          .union(pairs0.select(col("dst").as("a"), col("src").as("b")))
+      }
+      val und0 = if (storedIndex(edges, undirectedPairs)) und0raw
+        else loop.pin(und0raw)
+      val init = loop.seed("components",
+        und0.select(col("a").as("id")).distinct().withColumn("lbl", col("id")))
+      // the single up-front action: sizes the broadcast decision (and
+      // materializes und/init)
+      val nV = init.count()
+      val small = nV <= Loop.BroadcastStateRows
+      // non-broadcast path: hash-partition the edge set by the probe side
+      // once, so per-round joins exchange only the O(V) label table
+      val und = if (small) und0 else loop.pin(und0.repartition(col("a")))
+      // DELTA propagation: only nodes whose label CHANGED last round send
+      // messages this round. Labels are monotone non-increasing (both the
+      // neighbor-min and the jump only shrink them), so an unchanged
+      // neighbor's label was already folded into v's min in the round
+      // after it last changed — re-sending it can never lower anything.
+      // By induction the per-round states are IDENTICAL to the
+      // full-message version (which is what the unrolled oracle replays);
+      // what changes is the cost: late rounds send only the convergence
+      // tail (measured at sf0.1: round 4 touches 3k of 186k nodes), and
+      // on a 100-TB graph the O(log diameter) tail rounds become nearly
+      // free instead of re-shuffling E-sized votes. A round with zero
+      // changes IS the fixpoint — every later round is a no-op, so the
+      // loop exits early with the oracle-identical state.
+      // FUSED round frames (r6): the old round materialized THREE eager
+      // checkpoints (min-agg m, jumped, nextChanged) — 3 persist jobs +
+      // a count per round, and the round's fixed job overhead, not its
+      // shuffles, dominated the bench. Now the previous label rides the
+      // min-agg union as a third column (label rows carry prev = own lbl,
+      // message rows carry prev = NULL; max(prev) recovers it since every
+      // node has exactly one label row), so the pointer jump + changed
+      // filter become ONE cheap join over the min-agg frame. m is still
+      // checkpointed — the jump reads it from BOTH sides, and feeding a
+      // lazy m into a broadcast build + the main pass would run the
+      // E-sized message aggregation twice per round (measured: the two
+      // copies were 0.5 s + 0.8 s of a 1.6 s round).
+      val lblType = init.schema("lbl").dataType
+      var labels = init
+      var changed = init // round 1: every node is fresh
+      var converged = false
+      // per-round m/nf frames are V-sized, the round-1 message shuffle
+      // is E-scale — size from both (und is materialized by init's count)
+      loop.rounds(nV, und.count()) {
+        for (_ <- 1 to rounds if !converged) {
+          val chA = changed.withColumnRenamed("id", "a")
+          val msgs = und.join(if (small) broadcast(chA) else chA, Seq("a"))
+            .select(col("b").as("id"), col("lbl"))
+          // LAZY on the broadcast path (r14): the jump join's broadcast
+          // build (mSide's executeCollect — its own job) necessarily runs
+          // BEFORE the probe stage, so it materializes m's cache and the
+          // probe reads it — sequential consumers, no duplicate compute.
+          // The shuffled big-V path keeps the eager checkpoint: there both
+          // jump sides are independent shuffle-map stages that would race
+          // on an unmaterialized frame.
+          val m = loop.carry("components_min_round",
+            labels.select(col("id"), col("lbl"), col("lbl").as("prev"))
+              .unionByName(msgs.withColumn("prev", lit(null).cast(lblType)))
+              .groupBy("id").agg(min("lbl").as("lbl"), max("prev").as("prev")),
+            eager = !small, chain = "components")
+          // every label value is a node id with its own row in m → inner
+          // join is total; l'(v) = l(l(v))
+          val mSide = m.select(col("id").as("lbl"), col("lbl").as("lbl2"))
+          val nf = loop.carry("components_jump_round",
+            m.join(if (small) broadcast(mSide) else mSide, Seq("lbl"))
+              .select(col("id"), col("lbl2").as("lbl"), col("prev")),
+            chain = "components")
+          converged = loop.settle(nf.filter(col("lbl") =!= col("prev")).count() == 0L)
+          labels = nf.select("id", "lbl")
+          changed = nf.filter(col("lbl") =!= col("prev")).select("id", "lbl")
+        }
+      }
+      labels.select(col("id"), col("lbl").as("component"))
     }
-    val und0 = if (parentCached) und0raw else und0raw.localCheckpoint(false)
-    val init = und0.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint(false)
-    // the single up-front action: sizes the broadcast decision (and
-    // materializes und/init)
-    val nV = init.count()
-    val small = nV <= 1000000L
-    // non-broadcast path: hash-partition the edge set by the probe side
-    // once, so per-round joins exchange only the O(V) label table
-    val und = if (small) und0
-      else und0.repartition(col("a")).localCheckpoint(false)
-    // DELTA propagation: only nodes whose label CHANGED last round send
-    // messages this round. Labels are monotone non-increasing (both the
-    // neighbor-min and the jump only shrink them), so an unchanged
-    // neighbor's label was already folded into v's min in the round
-    // after it last changed — re-sending it can never lower anything.
-    // By induction the per-round states are IDENTICAL to the
-    // full-message version (which is what the unrolled oracle replays);
-    // what changes is the cost: late rounds send only the convergence
-    // tail (measured at sf0.1: round 4 touches 3k of 186k nodes), and
-    // on a 100-TB graph the O(log diameter) tail rounds become nearly
-    // free instead of re-shuffling E-sized votes. A round with zero
-    // changes IS the fixpoint — every later round is a no-op, so the
-    // loop exits early with the oracle-identical state.
-    // FUSED round frames (r6): the old round materialized THREE eager
-    // checkpoints (min-agg m, jumped, nextChanged) — 3 persist jobs +
-    // a count per round, and the round's fixed job overhead, not its
-    // shuffles, dominated the bench. Now the previous label rides the
-    // min-agg union as a third column (label rows carry prev = own lbl,
-    // message rows carry prev = NULL; max(prev) recovers it since every
-    // node has exactly one label row), so the pointer jump + changed
-    // filter become ONE cheap join over the min-agg frame. m is still
-    // checkpointed — the jump reads it from BOTH sides, and feeding a
-    // lazy m into a broadcast build + the main pass would run the
-    // E-sized message aggregation twice per round (measured: the two
-    // copies were 0.5 s + 0.8 s of a 1.6 s round).
-    // Lifecycle is a strict chain: m_t ← nf_{t-1}, nf_t ← m_t; after
-    // nf_t materializes, m_t and nf_{t-1} have no live consumers and
-    // are released with a blocking unpersist.
-    val lblType = init.schema("lbl").dataType
-    var labels = init
-    var changed = init // round 1: every node is fresh
-    var frame: DataFrame = null // checkpointed frame backing labels/changed
-    var converged = false
-    // per-round m/nf frames are V-sized, the round-1 message shuffle
-    // is E-scale — size from both (und is materialized by init's count)
-    graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, nV,
-      und.count()) {
-    for (_ <- 1 to rounds if !converged) {
-      val chA = changed.withColumnRenamed("id", "a")
-      val msgs = und.join(if (small) broadcast(chA) else chA, Seq("a"))
-        .select(col("b").as("id"), col("lbl"))
-      // LAZY on the broadcast path (r14): the jump join's broadcast
-      // build (mSide's executeCollect — its own job) necessarily runs
-      // BEFORE the probe stage, so it materializes m's cache and the
-      // probe reads it — sequential consumers, no duplicate compute.
-      // The shuffled big-V path keeps the eager checkpoint: there both
-      // jump sides are independent shuffle-map stages that would race
-      // on an unmaterialized frame.
-      val m = labels.select(col("id"), col("lbl"), col("lbl").as("prev"))
-        .unionByName(msgs.withColumn("prev", lit(null).cast(lblType)))
-        .groupBy("id").agg(min("lbl").as("lbl"), max("prev").as("prev"))
-        .localCheckpoint(!small)
-      // every label value is a node id with its own row in m → inner
-      // join is total; l'(v) = l(l(v))
-      val mSide = m.select(col("id").as("lbl"), col("lbl").as("lbl2"))
-      // nf LAZY: the convergence count below is its materializing
-      // action (the bfsLoop pattern) — 1-2 jobs/round instead of 3
-      val nf = m.join(if (small) broadcast(mSide) else mSide, Seq("lbl"))
-        .select(col("id"), col("lbl2").as("lbl"), col("prev"))
-        .localCheckpoint(false)
-      converged = nf.filter(col("lbl") =!= col("prev")).count() == 0L
-      graft.core.Checkpoints.drop(m) // both jump sides have read it
-      if (frame != null) graft.core.Checkpoints.drop(frame)
-      else graft.core.Checkpoints.drop(init) // round 1 consumed it
-      frame = nf
-      labels = nf.select("id", "lbl")
-      changed = nf.filter(col("lbl") =!= col("prev")).select("id", "lbl")
-    }
-    } // withLoopShuffle
-    labels.select(col("id"), col("lbl").as("component"))
-  }
 
   /** Minimum spanning forest by Borůvka's algorithm, deterministic:
     * edge "weights" are totally ordered as (w, a, b), which makes the
@@ -969,62 +930,44 @@ object GraphAnalytics {
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 4,
                        pairsDistinct: Boolean = false,
-                       undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    // distinct undirected view — label COUNTS need dedup (a pair stored
-    // in both orientations is one neighbor relation, not two votes).
-    // An already-persisted undirected index is consumed as-is; the
-    // checkpoint copy is only for derived views (und is read every
-    // round, never mutated).
-    val parentCached = undirectedPairs &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val und0 = if (undirectedPairs)
-      edges.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val pairs0 =
-        if (pairsDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct()
-      pairs0.select(col("src").as("a"), col("dst").as("b"))
-        .union(pairs0.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
+                       undirectedPairs: Boolean = false): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
+      // label COUNTS need the deduped view (a pair stored in both
+      // orientations is one neighbor relation, not two votes)
+      val undRaw = undView(edges, pairsDistinct, undirectedPairs, loop.pin(_))
+      var labels = loop.seed("lpa_round",
+        undRaw.select(col("a").as("id")).distinct().withColumn("lbl", col("id")))
+      // the vote join probes und on `b`, but a stored undirected index is
+      // laid out by `a` — shuffling the O(E) edge set per round to the
+      // other key is the classic LPA bottleneck. The label table is O(V);
+      // while it is broadcastable, ship IT instead and the edge set never
+      // moves (same V-threshold pattern as connectedComponents). Past the
+      // threshold, re-lay the edge set out by `b` ONCE so every round's
+      // shuffled join exchanges only the O(V) label table — never E per
+      // round. The one up-front count also materializes und/labels.
+      val nV = labels.count()
+      val small = nV <= Loop.BroadcastStateRows
+      val und = if (small) undRaw else loop.pin(undRaw.repartition(col("b")))
+      // the winner table keys on id (V-scale) but the vote agg's input
+      // is E-scale with weak map-side combining on dense graphs — size
+      // from both (und is materialized by labels' count)
+      loop.rounds(nV, und.count()) {
+        for (_ <- 1 to rounds) {
+          // vote of neighbor b's label to node a (every node of und has ≥1
+          // neighbor, so the synchronous update is total)
+          val lblsB = labels.withColumnRenamed("id", "b")
+          val votes = und
+            .join(if (small) broadcast(lblsB) else lblsB, Seq("b"))
+            .groupBy(col("a").as("id"), col("lbl"))
+            .agg(count(lit(1)).as("c"))
+          labels = loop.carry("lpa_round", votes
+            .groupBy("id")
+            .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("w"))
+            .select(col("id"), col("w.l").as("lbl")))
+        }
+      }
+      labels.select(col("id"), col("lbl").as("community"))
     }
-    val undRaw = if (parentCached) und0 else und0.localCheckpoint(false)
-    var labels = undRaw.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint(false)
-    // the vote join probes und on `b`, but a stored undirected index is
-    // laid out by `a` — shuffling the O(E) edge set per round to the
-    // other key is the classic LPA bottleneck. The label table is O(V);
-    // while it is broadcastable, ship IT instead and the edge set never
-    // moves (same V-threshold pattern as connectedComponents). Past the
-    // threshold, re-lay the edge set out by `b` ONCE so every round's
-    // shuffled join exchanges only the O(V) label table — never E per
-    // round. The one up-front count also materializes und/labels.
-    val nV = labels.count()
-    val small = nV <= 1000000L
-    val und = if (small) undRaw
-      else undRaw.repartition(col("b")).localCheckpoint(false)
-    // the winner table keys on id (V-scale) but the vote agg's input
-    // is E-scale with weak map-side combining on dense graphs — size
-    // from both (und is materialized by labels' count)
-    graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, nV,
-      und.count()) {
-    for (_ <- 1 to rounds) {
-      // vote of neighbor b's label to node a (every node of und has ≥1
-      // neighbor, so the synchronous update is total)
-      val lblsB = labels.withColumnRenamed("id", "b")
-      val votes = und
-        .join(if (small) broadcast(lblsB) else lblsB, Seq("b"))
-        .groupBy(col("a").as("id"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-      labels = votes
-        .groupBy("id")
-        .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("w"))
-        .select(col("id"), col("w.l").as("lbl"))
-        .localCheckpoint(false)
-    }
-    } // withLoopShuffle
-    labels.select(col("id"), col("lbl").as("community"))
-  }
 
   /** The CTE chain shared by [[lpaSql]] and [[modularitySql]]: builds
     * `g0` (deduped undirected orientation rows) and `l<rounds>` (the
@@ -1103,22 +1046,38 @@ object GraphAnalytics {
         .localCheckpoint(true),
       undView(edges, pairsDistinct, undirectedPairs))
 
-  /** The symmetrized distinct pair view shared by the modularity
-    * metrics (both orientations; self-loops kept for the degree-slot
-    * remainder).
+  /** The undirected (a, b) view: both orientations, DEDUPED — an input
+    * holding both (a,b) and (b,a) is one undirected edge, not two (a
+    * plain union would double-count degrees, votes and common
+    * neighbours); self-loops are kept. `undirectedPairs`: `edges` is a
+    * stored undirected index (`CodeGraph.undPairs`) that already is that
+    * view, so the 2|E| union + distinct is skipped. A derived view is
+    * handed to `copy` (the caller's checkpoint); a persisted index is
+    * read as is ([[storedIndex]]).
     */
   private def undView(edges: DataFrame, pairsDistinct: Boolean,
-                      undirectedPairs: Boolean): DataFrame =
-    if (undirectedPairs)
+                      undirectedPairs: Boolean,
+                      copy: DataFrame => DataFrame = identity): DataFrame =
+    if (storedIndex(edges, undirectedPairs))
       edges.select(col("src").as("a"), col("dst").as("b"))
+    else if (undirectedPairs)
+      copy(edges.select(col("src").as("a"), col("dst").as("b")))
     else {
       val p0 =
         if (pairsDistinct) edges.select(col("src"), col("dst"))
         else edges.select(col("src"), col("dst")).distinct()
-      p0.select(col("src").as("a"), col("dst").as("b"))
+      copy(p0.select(col("src").as("a"), col("dst").as("b"))
         .union(p0.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
+        .distinct())
     }
+
+  /** Whether `edges` is the caller's persisted index (`flag` says it is
+    * already the view a loop needs), which the loop reads as is: a
+    * per-query copy of a stored E-sized table would double its storage
+    * for nothing. A derived view is the loop's own copy.
+    */
+  private def storedIndex(edges: DataFrame, flag: Boolean): Boolean =
+    flag && edges.storageLevel != StorageLevel.NONE
 
   /** The metric body shared by [[modularity]] and [[louvainModularity]]:
     * Q = (4mA − B)/4m² over a checkpointed (id, lbl) table and the
@@ -1133,7 +1092,7 @@ object GraphAnalytics {
     // the label table broadcasts only while V-bounded (same threshold
     // as the LPA rounds themselves); above it the joins shuffle — the
     // label side is O(V), never the edge set twice
-    val smallV = labels.count() <= 1000000L
+    val smallV = labels.count() <= Loop.BroadcastStateRows
     def lbl(as: String, out: String) = {
       val s0 = labels.select(col("id").as(as), col("lbl").as(out))
       if (smallV) broadcast(s0) else s0
@@ -1326,8 +1285,7 @@ object GraphAnalytics {
     // an already-persisted canonical store view (coPairs) is consumed
     // as-is (r14): the eager checkpoint was an E-scale copy of a table
     // that is already in memory
-    val parentCached = canonical &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val parentCached = storedIndex(edges, canonical)
     val canon0 =
       if (canonical) p0.select(col("src").as("a"), col("dst").as("b"))
       else p0.filter(col("src") =!= col("dst"))
@@ -1380,21 +1338,9 @@ object GraphAnalytics {
   def relatedNodes(edges: DataFrame, seedId: String, k: Int = 20,
                    pairsDistinct: Boolean = false,
                    undirectedPairs: Boolean = false): DataFrame = {
-    // distinct undirected view — common-neighbor COUNTS need dedup
-    // (read by three branches → eager, see connectedComponents).
-    // `undirectedPairs`: a stored undirected index is consumed as-is
-    // (already persisted → no checkpoint copy needed).
-    val und = if (undirectedPairs)
-      edges.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val pairs0 =
-        if (pairsDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct()
-      pairs0.select(col("src").as("a"), col("dst").as("b"))
-        .union(pairs0.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
-        .localCheckpoint(true)
-    }
+    // read by three branches → eager, see connectedComponents
+    val und = undView(edges, pairsDistinct, undirectedPairs,
+      _.localCheckpoint(true))
     val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
     val seedN = und.filter(col("a") === seedId)
       .select(col("b").as("x")).localCheckpoint(true)
@@ -1951,55 +1897,41 @@ object GraphAnalytics {
     */
   def coreness(edges: DataFrame, rounds: Int = 4,
                pairsDistinct: Boolean = false,
-               undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    import org.apache.spark.sql.expressions.Window
-    val undInit = if (undirectedPairs)
-      edges.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val p0 =
-        if (pairsDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct()
-      p0.select(col("src").as("a"), col("dst").as("b"))
-        .union(p0.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
-    }
-    var state = undInit.groupBy(col("a").as("id"))
-      .agg(count(lit(1)).as("c")).localCheckpoint(true)
-    val nV = state.count()
-    val small = nV <= 1000000L
-    // the probe layout: partitioned on the WINDOW key when the state
-    // broadcasts (join preserves it → zero window exchange); on the
-    // big path partition on the JOIN key so per-round joins move only
-    // the O(V) state
-    val und = (if (small) undInit.repartition(col("a"))
-      else undInit.repartition(col("b"))).localCheckpoint(false)
-    var frame: DataFrame = null
-    var converged = false
-    graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, nV,
-      und.count()) {
-      for (_ <- 1 to rounds if !converged) {
-        val stateB = state.select(col("id").as("b"), col("c").as("cn"))
-        val nb = und.join(if (small) broadcast(stateB) else stateB, Seq("b"))
-        val rn = row_number().over(
-          Window.partitionBy("a").orderBy(col("cn").desc, col("b")))
-        val h = nb.withColumn("rn", rn)
-          .groupBy(col("a").as("id"))
-          .agg(coalesce(max(when(col("cn") >= col("rn"),
-            col("rn").cast("long"))), lit(0L)).as("c2"))
-        // LAZY: the convergence count is the materializing action
-        // (the bfsLoop pattern — r14, one job per round instead of two)
-        val merged = state.withColumnRenamed("c", "prev")
-          .join(h, Seq("id"))
-          .select(col("id"), col("c2").as("c"), col("prev"))
-          .localCheckpoint(false)
-        converged = merged.filter(col("c") =!= col("prev")).count() == 0L
-        if (frame != null) graft.core.Checkpoints.drop(frame)
-        frame = merged
-        state = merged.select("id", "c")
+               undirectedPairs: Boolean = false): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
+      import org.apache.spark.sql.expressions.Window
+      val undInit = undView(edges, pairsDistinct, undirectedPairs)
+      var state = loop.pin(undInit.groupBy(col("a").as("id"))
+        .agg(count(lit(1)).as("c")), eager = true)
+      val nV = state.count()
+      val small = nV <= Loop.BroadcastStateRows
+      // the probe layout: partitioned on the WINDOW key when the state
+      // broadcasts (join preserves it → zero window exchange); on the
+      // big path partition on the JOIN key so per-round joins move only
+      // the O(V) state
+      val und = loop.pin(if (small) undInit.repartition(col("a"))
+        else undInit.repartition(col("b")))
+      var converged = false
+      loop.rounds(nV, und.count()) {
+        for (_ <- 1 to rounds if !converged) {
+          val stateB = state.select(col("id").as("b"), col("c").as("cn"))
+          val nb = und.join(if (small) broadcast(stateB) else stateB, Seq("b"))
+          val rn = row_number().over(
+            Window.partitionBy("a").orderBy(col("cn").desc, col("b")))
+          val h = nb.withColumn("rn", rn)
+            .groupBy(col("a").as("id"))
+            .agg(coalesce(max(when(col("cn") >= col("rn"),
+              col("rn").cast("long"))), lit(0L)).as("c2"))
+          // LAZY (r14): one job per round instead of two
+          val merged = loop.carry("coreness_round", state.withColumnRenamed("c", "prev")
+            .join(h, Seq("id"))
+            .select(col("id"), col("c2").as("c"), col("prev")))
+          converged = loop.settle(merged.filter(col("c") =!= col("prev")).count() == 0L)
+          state = merged.select("id", "c")
+        }
       }
+      state.select(col("id"), col("c").as("coreness"))
     }
-    state.select(col("id"), col("c").as("coreness"))
-  }
 
   /** DuckDB oracle for [[coreness]] — the identical h-index rounds
     * unrolled (same neighbor-rank window, same MAX(CASE) fold).
@@ -2134,7 +2066,7 @@ object GraphAnalytics {
       // partial-agg. Past the V gate the shuffled plan is the correct
       // 100-TB shape and stands.
       val nV = state.count()
-      val small = nV <= 1000000L
+      val small = nV <= Loop.BroadcastStateRows
       def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
       graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
       graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, nV) {
@@ -2362,8 +2294,7 @@ object GraphAnalytics {
     require(seeds.nonEmpty, "harmonicFromSeeds needs at least one seed")
     val spark = edges.sparkSession
     import spark.implicits._
-    val parentCached = undirectedPairs &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val parentCached = storedIndex(edges, undirectedPairs)
     val und0 =
       if (undirectedPairs) edges.select(col("src"), col("dst"))
       else {
@@ -2457,8 +2388,7 @@ object GraphAnalytics {
     require(seeds.nonEmpty, "stressFromSeeds needs at least one seed")
     val spark = edges.sparkSession
     import spark.implicits._
-    val parentCached = undirectedPairs &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val parentCached = storedIndex(edges, undirectedPairs)
     val und0 =
       if (undirectedPairs) edges.select(col("src"), col("dst"))
       else {
@@ -2579,8 +2509,7 @@ object GraphAnalytics {
                            undirectedPairs: Boolean = false): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 12, "maxDepth must be 1..12")
     require(seeds.nonEmpty, "betweennessFromSeeds needs at least one seed")
-    val parentCached = undirectedPairs &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val parentCached = storedIndex(edges, undirectedPairs)
     val und0 =
       if (undirectedPairs) edges.select(col("src"), col("dst"))
       else {
@@ -2740,8 +2669,7 @@ object GraphAnalytics {
   def maximalIndependentSet(pairs: DataFrame, rounds: Int = 4,
                             undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(pairs.sparkSession) {
     require(rounds >= 1, "maximalIndependentSet needs rounds >= 1")
-    val parentCached = undirectedPairs &&
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val parentCached = storedIndex(pairs, undirectedPairs)
     val und0raw = if (undirectedPairs)
       pairs.select(col("src").as("a"), col("dst").as("b"))
     else {
@@ -2766,7 +2694,7 @@ object GraphAnalytics {
       approx_count_distinct(col("a"))).head()
     val nE = szRow.getLong(0)
     val nV = math.min(szRow.getLong(1), nE)
-    val small = nV <= 1000000L
+    val small = nV <= Loop.BroadcastStateRows
     def bcIf(df: DataFrame) = if (small) broadcast(df) else df
     var undec = und.select(col("a").as("id")).distinct()
       .withColumn("pri", pri(col("id")))
@@ -2918,8 +2846,7 @@ object GraphAnalytics {
       else edges.select(col("src"), col("dst")).distinct()
     // an already-persisted canonical store view (coPairs) is consumed
     // as-is (r14) — no E-scale checkpoint copy
-    val parentCached = canonical &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val parentCached = storedIndex(edges, canonical)
     val canon0 =
       if (canonical) p0.select(col("src").as("a"), col("dst").as("b"))
       else p0.filter(col("src") =!= col("dst"))
@@ -3018,8 +2945,7 @@ object GraphAnalytics {
   def greedyColoring(pairs: DataFrame, rounds: Int = 6,
                      undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(pairs.sparkSession) {
     require(rounds >= 1, "greedyColoring needs rounds >= 1")
-    val parentCached = undirectedPairs &&
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val parentCached = storedIndex(pairs, undirectedPairs)
     val und0raw = if (undirectedPairs)
       pairs.select(col("src").as("a"), col("dst").as("b"))
     else {
@@ -3047,7 +2973,7 @@ object GraphAnalytics {
       approx_count_distinct(col("a"))).head()
     val nE = szRow.getLong(0)
     val nV = math.min(szRow.getLong(1), nE)
-    val small = nV <= 1000000L
+    val small = nV <= Loop.BroadcastStateRows
     def bcIf(df: DataFrame) = if (small) broadcast(df) else df
     var undec = und.select(col("a").as("id")).distinct()
       .withColumn("pri", pri(col("id")))
@@ -3145,8 +3071,7 @@ object GraphAnalytics {
                   scale: Long = 1000000L,
                   undirectedPairs: Boolean = false): DataFrame = Loop.run(pairs.sparkSession, Loop.Lazy) { loop =>
     require(iters >= 1, "featureProp needs iters >= 1")
-    val parentCached = undirectedPairs &&
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val parentCached = storedIndex(pairs, undirectedPairs)
     val und0raw = if (undirectedPairs)
       pairs.select(col("src").as("a"), col("dst").as("b"))
     else {
@@ -3155,15 +3080,15 @@ object GraphAnalytics {
       p0.select(col("src").as("a"), col("dst").as("b"))
         .union(p0.select(col("dst").as("a"), col("src").as("b")))
     }
-    val und = if (parentCached) und0raw else loop.pin(und0raw)
+    val und = if (parentCached) und0raw else loop.pin(und0raw, eager = true)
     val deg = loop.pin(und.groupBy(col("a").as("id"))
-      .agg(count(lit(1)).as("deg")))
+      .agg(count(lit(1)).as("deg")), eager = true)
     var state = deg.select(col("id"), (col("deg") * scale).as("h"))
     // ship the V-sized frames into the E join / the V merge while
     // broadcastable (r14 — the pagerank/LPA pattern): the checkpointed
     // deg carries no stats, so the planner otherwise sort-merge-joins
     // and re-exchanges the edge set per iteration
-    val smallV = deg.count() <= 1000000L
+    val smallV = deg.count() <= Loop.BroadcastStateRows
     def shipIf(df: DataFrame) = if (smallV) broadcast(df) else df
     // lazy carries: the round frames materialize in the caller's write.
     // No `loop.rounds`: the rounds keep the session shuffle width, as in
@@ -3261,19 +3186,8 @@ object GraphAnalytics {
                       pairsDistinct: Boolean = false,
                       undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
     require(rounds >= 1, "louvainOneLevel needs rounds >= 1")
-    val parentCached = undirectedPairs &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val und0 = if (undirectedPairs)
-      edges.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val pairs0 =
-        if (pairsDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct()
-      pairs0.select(col("src").as("a"), col("dst").as("b"))
-        .union(pairs0.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
-    }
-    val und = if (parentCached) und0 else und0.localCheckpoint(false)
+    val und = undView(edges, pairsDistinct, undirectedPairs,
+      _.localCheckpoint(false))
     val deg = und.groupBy(col("a").as("id"))
       .agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
@@ -3285,7 +3199,7 @@ object GraphAnalytics {
     // the LPA broadcast pattern: every per-round join against O(V)
     // state ships the STATE, never re-exchanges the stored edge index
     // or the (node, community) candidate table
-    val small = nV <= 1000000L
+    val small = nV <= Loop.BroadcastStateRows
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // exact-integer score in LONG while it provably fits — identical
     // values to the DECIMAL(38,0) path for 2m ≤ 10^9 (every term is
@@ -3459,19 +3373,9 @@ object GraphAnalytics {
                     l1Precomputed: Option[DataFrame] = None): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
     require(rounds1 >= 1 && roundsMeta >= 1 && maxLevels >= 2,
       "louvainLevels needs rounds1, roundsMeta >= 1 and maxLevels >= 2")
-    val parentCached = undirectedPairs &&
-      edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val und0 = if (undirectedPairs)
-      edges.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val pairs0 =
-        if (pairsDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct()
-      pairs0.select(col("src").as("a"), col("dst").as("b"))
-        .union(pairs0.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
-    }
-    val und = if (parentCached) und0 else und0.localCheckpoint(true)
+    val parentCached = storedIndex(edges, undirectedPairs)
+    val und = undView(edges, pairsDistinct, undirectedPairs,
+      _.localCheckpoint(true))
     // level 1 gets the ORIGINAL frame + flags: a derived select would
     // lose the parent's storage level and force louvainOneLevel to
     // re-materialize the E-sized undirected view a second time.

@@ -209,30 +209,71 @@ class RandomizedInvariantsSpec extends SparkSpec {
     }
   }
 
+  /** Runs `check` on both inputs the graph loops take: the raw pairs,
+    * and the persisted, deduped both-orientation frame passed with
+    * `undirectedPairs = true`, as every `graph_*` entry passes
+    * `CodeGraph.undPairs`.
+    */
+  private def bothInputs(pairs: Seq[(String, String)])(
+      check: (String, org.apache.spark.sql.DataFrame, Boolean) => Unit): Unit = {
+    check("raw", pairs.toDF("src", "dst"), false)
+    val und = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
+      .toDF("src", "dst").persist()
+    try {
+      und.count()
+      check("persisted", und, true)
+    } finally und.unpersist(blocking = true)
+  }
+
+  /** A 4-clique with three 6-node pendant paths: at k = 2 each path
+    * peels one node per round, six rounds in all.
+    */
+  private val pendantPaths: Seq[(String, String)] = {
+    val clique = for (a <- 0 to 3; b <- a + 1 to 3) yield (s"c$a", s"c$b")
+    val paths = for (p <- 0 to 2; i <- 0 to 5)
+      yield (if (i == 0) s"c$p" else s"p${p}_${i - 1}", s"p${p}_$i")
+    clique ++ paths
+  }
+
   test("kcore equals in-memory iterated peeling on random graphs") {
     import graft.graph.GraphAnalytics
-    for (seed <- Seq(41, 42, 43)) {
+    val random = for (seed <- Seq(41, 42, 43)) yield {
       val rnd = new scala.util.Random(seed)
       val n = 40
-      val pairs = (1 to 120).map { _ =>
+      (s"seed=$seed", 3, (1 to 120).map { _ =>
         (s"n${rnd.nextInt(n)}", s"n${rnd.nextInt(n)}")
-      }.distinct.filter { case (a, b) => a != b }
-      val k = 3
-      val rounds = 8
-      val got = GraphAnalytics.kcore(pairs.toDF("src", "dst"), k, rounds)
-        .as[(String, Long)].collect().toMap
-
-      // reference: exactly `rounds` applications of the peel function
-      // over the undirected multiset (both orientations)
-      var und = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toSet
-      for (_ <- 1 to rounds) {
-        val deg = und.groupBy(_._1).map { case (v, es) => v -> es.size }
-        val keep = deg.filter(_._2 >= k).keySet
-        und = und.filter { case (a, b) => keep(a) && keep(b) }
+      }.distinct.filter { case (a, b) => a != b })
+    }
+    for ((graph, k, pairs) <- random :+ (("pendant paths", 2, pendantPaths))) {
+      val und0 = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toSet
+      // one application of the peel function to the undirected set
+      def peel(und: Set[(String, String)], k: Int) = {
+        val keep = und.groupBy(_._1).filter(_._2.size >= k).keySet
+        und.filter { case (a, b) => keep(a) && keep(b) }
       }
-      val want = und.groupBy(_._1)
-        .map { case (v, es) => v -> es.size.toLong }
-      assert(got === want, s"seed=$seed")
+      def degrees(und: Set[(String, String)]) =
+        und.groupBy(_._1).map { case (v, es) => v -> es.size.toLong }
+      val rounds = 8
+      // reference: exactly `rounds` applications of the peel function
+      val want = degrees(Iterator.iterate(und0)(peel(_, k)).drop(rounds).next())
+      // coreness: the largest k whose peel, run to its fixpoint, keeps
+      // the node
+      def core(k: Int) = Iterator.iterate(und0)(peel(_, k))
+        .sliding(2).collectFirst { case Seq(a, b) if a == b => a }.get
+      val wantCore = (1 to und0.size).iterator.map(core)
+        .takeWhile(_.nonEmpty).zipWithIndex
+        .flatMap { case (c, i) => c.map(_._1 -> (i + 1).toLong) }
+        .toSeq.groupBy(_._1).map { case (v, ks) => v -> ks.map(_._2).max }
+      bothInputs(pairs) { (input, edges, undirected) =>
+        val got = GraphAnalytics.kcore(edges, k, rounds,
+            undirectedPairs = undirected)
+          .as[(String, Long)].collect().toMap
+        assert(got === want, s"$graph, $input")
+        val gotCore = GraphAnalytics.coreness(edges, rounds = 40,
+            undirectedPairs = undirected)
+          .as[(String, Long)].collect().toMap
+        assert(gotCore === wantCore, s"coreness, $graph, $input")
+      }
     }
   }
 
@@ -396,9 +437,6 @@ class RandomizedInvariantsSpec extends SparkSpec {
       val pairs = (1 to 50).map { _ =>
         (f"n${rnd.nextInt(n)}%02d", f"n${rnd.nextInt(n)}%02d")
       }.filter { case (a, b) => a != b }
-      val got = GraphAnalytics.connectedComponents(
-          pairs.toDF("src", "dst"), rounds = 6)
-        .as[(String, String)].collect().toMap
 
       val parent = scala.collection.mutable.Map.empty[String, String]
       def find(x: String): String = {
@@ -411,7 +449,41 @@ class RandomizedInvariantsSpec extends SparkSpec {
       val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
       val want = nodes.groupBy(find).values
         .flatMap(ms => ms.map(_ -> ms.min)).toMap
-      assert(got === want, s"seed=$seed")
+      bothInputs(pairs) { (input, edges, undirected) =>
+        val got = GraphAnalytics.connectedComponents(edges, rounds = 6,
+            undirectedPairs = undirected)
+          .as[(String, String)].collect().toMap
+        assert(got === want, s"seed=$seed, $input")
+      }
+    }
+  }
+
+  test("labelPropagation equals an in-memory synchronous replay on random graphs") {
+    import graft.graph.GraphAnalytics
+    for (seed <- Seq(11, 12, 13)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 30
+      val pairs = (1 to 70).map { _ =>
+        (f"n${rnd.nextInt(n)}%02d", f"n${rnd.nextInt(n)}%02d")
+      }.distinct.filter { case (a, b) => a != b }
+      val rounds = 4
+      // every node adopts the most frequent label among its distinct
+      // neighbours, ties to the smallest label, all nodes at once
+      val nbrs = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
+        .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+      var labels = nbrs.keys.map(v => v -> v).toMap
+      for (_ <- 1 to rounds) {
+        labels = nbrs.map { case (v, ns) =>
+          v -> ns.groupBy(labels).toSeq
+            .minBy { case (l, votes) => (-votes.size, l) }._1
+        }
+      }
+      bothInputs(pairs) { (input, edges, undirected) =>
+        val got = GraphAnalytics.labelPropagation(edges, rounds,
+            undirectedPairs = undirected)
+          .as[(String, String)].collect().toMap
+        assert(got === labels, s"seed=$seed, $input")
+      }
     }
   }
 

@@ -18,8 +18,8 @@ class LoopSpec extends SparkSpec {
   private def step(frame: DataFrame) = frame.select((col("x") + 1).as("x"))
 
   test("an eager carry releases its predecessor, the seed included, once it is materialized") {
-    Loop.run(spark, Loop.Eager) { loop =>
-      val seed = loop.seed(Seq(1L, 2L, 3L).toDF("x"))
+    val out = Loop.run(spark, Loop.Eager) { loop =>
+      val seed = loop.seed("loopspec_eager", Seq(1L, 2L, 3L).toDF("x"))
       assert(materialized(seed) && !released(seed))
       val r1 = loop.carry("loopspec_eager", step(seed))
       assert(materialized(r1) && !released(r1))
@@ -27,28 +27,52 @@ class LoopSpec extends SparkSpec {
       val r2 = loop.carry("loopspec_eager", step(r1))
       assert(materialized(r2) && !released(r2))
       assert(released(r1))
-      assert(r2.as[Long].collect().sorted === Array(3L, 4L, 5L))
+      r2
     }
+    assert(out.as[Long].collect().sorted === Array(3L, 4L, 5L))
   }
 
   test("a lazy carry is never released before the action that materializes its successor") {
-    Loop.run(spark, Loop.Lazy) { loop =>
-      val base = loop.pin(Seq(1L, 2L, 3L).toDF("x"))
+    var base, r2, other: DataFrame = null
+    val out = Loop.run(spark, Loop.Lazy) { loop =>
+      base = loop.pin(Seq(1L, 2L, 3L).toDF("x"))
       val r1 = loop.carry("loopspec_lazy", step(base))
-      val r2 = loop.carry("loopspec_lazy", step(r1))
+      r2 = loop.carry("loopspec_lazy", step(r1))
       assert(!materialized(r1) && !materialized(r2))
       assert(!released(r1) && !released(r2))
       assert(loop.settle(r2.agg(sum("x")).first().getLong(0)) === 12L)
       assert(materialized(r2) && !released(r2))
       assert(released(r1))
-      // release = false leaves the superseded frame to the caller
-      val r3 = loop.carry("loopspec_lazy", step(r2))
-      assert(!released(r2))
-      loop.settle(r3.count(), release = false)
-      assert(materialized(r3) && !released(r2) && !released(r3))
-      assert(r2.as[Long].collect().sorted === Array(3L, 4L, 5L))
-      assert(!released(base))
+      // the newest frame of a chain is held while another chain settles
+      other = loop.carry("loopspec_lazy_other", step(r2))
+      loop.settle(other.count())
+      assert(materialized(other) && !released(r2) && !released(base))
+      step(r2)
     }
+    // the output reads r2 only: the pin and the other chain are released
+    assert(!released(r2) && released(other) && released(base))
+    assert(out.as[Long].collect().sorted === Array(4L, 5L, 6L))
+  }
+
+  test("a frame stays while a lazy carry of another chain still reads it") {
+    var a0, a1, a2, b1: DataFrame = null
+    val out = Loop.run(spark, Loop.Lazy) { loop =>
+      a0 = loop.seed("loopspec_a", Seq(1L, 2L, 3L).toDF("x"))
+      a1 = loop.carry("loopspec_a", step(a0))
+      b1 = loop.carry("loopspec_b", step(a0))
+      loop.settle(a1.count())
+      assert(materialized(a1) && !materialized(b1))
+      assert(!released(a0)) // b1's lineage still reaches it
+      loop.settle(b1.count())
+      assert(released(a0) && !released(a1) && !released(b1))
+      // a frame traced under another tag continues chain a
+      a2 = loop.carry("loopspec_a_other_tag", step(a1), chain = "loopspec_a")
+      loop.settle(a2.count())
+      assert(released(a1) && !released(a2) && !released(b1))
+      step(a2)
+    }
+    assert(released(b1) && !released(a2))
+    assert(out.as[Long].collect().sorted === Array(4L, 5L, 6L))
   }
 
   test("AQE and the shuffle width are restored after a normal exit and a mid-round exception") {
@@ -59,15 +83,17 @@ class LoopSpec extends SparkSpec {
     try {
       spark.conf.set(aqe, "true")
       spark.conf.set(width, "16")
-      val seen = Loop.run(spark, Loop.Eager) { loop =>
-        (confs(), loop.rounds(1000L)(confs()))
+      var seen: Any = null
+      Loop.run(spark, Loop.Eager) { loop =>
+        seen = (confs(), loop.rounds(1000L)(confs()))
+        spark.emptyDataFrame
       }
       // AQE is off for the whole loop; only the rounds run narrower
       assert(seen === (("false", "16"), ("false", "4")))
       assert(confs() === (("true", "16")))
       val err = intercept[IllegalStateException] {
         Loop.run(spark, Loop.Eager) { loop =>
-          val seed = loop.seed(Seq(1L).toDF("x"))
+          val seed = loop.seed("loopspec_fail", Seq(1L).toDF("x"))
           loop.rounds(1000L) {
             loop.carry("loopspec_fail", step(seed))
             throw new IllegalStateException("mid-round")

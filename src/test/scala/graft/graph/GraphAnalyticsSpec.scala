@@ -779,4 +779,41 @@ class GraphAnalyticsSpec extends SparkSpec {
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(p1 == p9)
   }
+
+  test("kcore, connectedComponents and coreness leave only the frames their output reads") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    // a 4-clique with a 5-node pendant path (five peel rounds at k = 2)
+    // and a separate triangle
+    val pairs = (for (a <- 0 to 3; b <- a + 1 to 3) yield (s"c$a", s"c$b")) ++
+      (0 to 4).map(i => (if (i == 0) "c0" else s"p${i - 1}", s"p$i")) ++
+      Seq(("t0", "t1"), ("t1", "t2"), ("t2", "t0"))
+    val raw = pairs.toDF("src", "dst")
+    val und = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .toDF("src", "dst").persist()
+    und.count()
+    val loops = Seq[(String, (DataFrame, Boolean) => DataFrame)](
+      "kcore" -> ((e, u) => GraphAnalytics.kcore(e, k = 2, rounds = 8,
+        undirectedPairs = u)),
+      "connectedComponents" -> ((e, u) => GraphAnalytics.connectedComponents(
+        e, rounds = 6, undirectedPairs = u)),
+      "coreness" -> ((e, u) => GraphAnalytics.coreness(e, rounds = 12,
+        undirectedPairs = u)))
+    try {
+      for ((name, run) <- loops; (input, edges, u) <-
+             Seq(("raw", raw, false), ("persisted", und, true))) {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val out = run(edges, u)
+        // each loop converges on this graph before its last round, so
+        // its output reads its final, checkpointed frame alone
+        val reads = out.queryExecution.analyzed
+          .collect { case lr: LogicalRDD => lr.rdd }
+        assert(reads.nonEmpty && reads.forall(_.isCheckpointed), s"$name on $input")
+        assert(out.collect().nonEmpty)
+        val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(left.subsetOf(reads.map(_.id).toSet),
+          s"$name on $input pairs left ${(left -- reads.map(_.id)).size} frames it does not read")
+      }
+    } finally und.unpersist(blocking = true)
+  }
 }

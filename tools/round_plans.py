@@ -11,6 +11,14 @@ the reference captures operator for operator. Capture, then compare:
       graph_feature_prop graph_walks"
   python3 tools/round_plans.py /tmp/rounds [plans/r14/rounds]
 
+Components, k-core, coreness and label propagation trace their rounds
+in a JVM of their own: msf and modularity call components and label
+propagation, and only the first two rounds of each tag are written.
+
+  SPARK_GRAFT_PLAN_TRACE=/tmp/rounds2 sbt "runMain graft.tools.PlanAudit \
+      graph_components_fresh graph_kcore graph_coreness graph_lpa"
+  python3 tools/round_plans.py /tmp/rounds2
+
 Every file in the capture directory is compared with the reference file
 of the same name. Ignored: plan node ids, expression ids (`#123`),
 `Statistics(...)` annotations, `plan_id`s, RDD ids and source call sites
