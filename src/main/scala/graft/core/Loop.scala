@@ -41,9 +41,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * carried, and its predecessor, and the peeled layer it anti-joins on
   * the shuffled path, stay until then. A job checkpoints every lazy
   * loop frame it computes, not only the first one on each lineage path
-  * as Spark does by default: k-core's degree table is computed only
-  * through the peeled layer's count, and would otherwise keep every
-  * predecessor alive. When the kernel returns, every frame its output
+  * as Spark does by default, and an eager carry's job does so too:
+  * k-core's degree table is computed only through the peeled layer's
+  * count, and the Luby kernel's lazy `live` edges only inside the next
+  * round's eager job; either would otherwise keep every predecessor
+  * alive. When the kernel returns, every frame its output
   * does not read is released too, pins included: a loop leaves behind
   * only what its caller's action still reads.
   *
@@ -129,18 +131,22 @@ final class Loop private (spark: SparkSession, mode: Loop.Carry) {
     result
   }
 
-  /** A lazy frame is created with Spark's `checkpointAllMarkedAncestors`
+  /** Every frame is created with Spark's `checkpointAllMarkedAncestors`
     * local property set (an RDD reads it when it is created), so the job
-    * that computes it checkpoints the lazy frames below it as well.
+    * that computes it checkpoints the lazy frames below it as well. An
+    * eager frame is created lazily too and then counted in one job:
+    * Spark's own eager checkpoint visits the marked ancestors before its
+    * job, and computes each one it finds in a job of its own.
     */
   private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
     val sc = spark.sparkContext
     val key = "spark.checkpoint.checkpointAllMarkedAncestors"
     val prev = sc.getLocalProperty(key)
-    if (!eager) sc.setLocalProperty(key, "true")
-    val frame = try df.localCheckpoint(eager)
+    sc.setLocalProperty(key, "true")
+    val frame = try df.localCheckpoint(eager = false)
       finally sc.setLocalProperty(key, prev)
     owned :+= rdd(frame)
+    if (eager) rdd(frame).count()
     frame
   }
 

@@ -2055,53 +2055,47 @@ object GraphAnalytics {
   def randomWalks(edges: DataFrame, steps: Int = 3,
                   pairsDistinct: Boolean = false): DataFrame =
     withSrcPairs(edges, pairsDistinct) { pairs =>
-      var state = endpoints(pairs).select(col("id").as("walk_id"),
-        col("id").as("cur"), array(col("id")).as("path")).localCheckpoint(true)
-      // the LPA/pagerank broadcast pattern (r14): the walk state is
-      // O(V) and its checkpoint erased the stats the planner would
-      // need, so the per-step candidate join was re-sorting/exchanging
-      // per round — ship the (walk, cur) projection and the V-bounded
-      // winner table into map-side joins instead; the stored pair view
-      // never moves, the only shuffle left per step is the winner
-      // partial-agg. Past the V gate the shuffled plan is the correct
-      // 100-TB shape and stands.
-      val nV = state.count()
-      val small = nV <= Loop.BroadcastStateRows
-      def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-      graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-      graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, nV) {
-      for (t <- 1 to steps) {
-        // INNER join: a walk at a sink simply has no candidate row and
-        // the left join below keeps it in place. min(struct(h, dst)) is
-        // the lexicographic (h, dst) minimum — the same winner the
-        // former row_number(ORDER BY h, dst) picked, but map-side
-        // combinable: the exchange carries at most one candidate per
-        // (map partition, walk) instead of every out-edge with the
-        // walk's whole path attached.
-        val cand = bc(state.select(col("walk_id"), col("cur")))
-          .join(pairs, col("cur") === col("src"))
-          .select(col("walk_id"), struct(
-            md5(concat(col("walk_id"), lit(s":$t:"), col("dst"))).as("h"),
-            col("dst").as("d")).as("e"))
-        val win = cand.groupBy("walk_id").agg(min("e").as("e"))
-        val prev = state
-        val stepped = state.join(bc(win), Seq("walk_id"), "left")
-          .select(col("walk_id"),
-            coalesce(col("e.d"), col("cur")).as("cur"),
-            when(col("e.d").isNull, col("path"))
-              .otherwise(concat(col("path"), array(col("e.d")))).as("path"))
-        graft.core.PlanTrace.round("walks_step", stepped)
-        state = stepped.localCheckpoint(true)
-        graft.core.Checkpoints.drop(prev) // step t's frame: dead now
+      Loop.run(edges.sparkSession, Loop.Eager) { loop =>
+        var state = loop.seed("walks_step", endpoints(pairs).select(
+          col("id").as("walk_id"), col("id").as("cur"),
+          array(col("id")).as("path")))
+        // the walk state is O(V) and its checkpoint carries no stats, so
+        // while V fits the (walk, cur) projection and the winner table
+        // go into map-side joins: the stored pair view never moves, and
+        // the winner partial-agg is the step's only shuffle. Past the V
+        // gate the shuffled plan is the 100-TB shape.
+        val nV = state.count()
+        def bc(df: DataFrame): DataFrame =
+          if (nV <= Loop.BroadcastStateRows) broadcast(df) else df
+        loop.rounds(nV) {
+          for (t <- 1 to steps) {
+            // INNER join: a walk at a sink has no candidate row, and the
+            // left join below keeps it in place. min(struct(h, dst)) is
+            // the lexicographic (h, dst) minimum, and map-side
+            // combinable: the exchange carries at most one candidate per
+            // (map partition, walk), never every out-edge with the
+            // walk's path attached.
+            val cand = bc(state.select(col("walk_id"), col("cur")))
+              .join(pairs, col("cur") === col("src"))
+              .select(col("walk_id"), struct(
+                md5(concat(col("walk_id"), lit(s":$t:"), col("dst"))).as("h"),
+                col("dst").as("d")).as("e"))
+            val win = cand.groupBy("walk_id").agg(min("e").as("e"))
+            state = loop.carry("walks_step",
+              state.join(bc(win), Seq("walk_id"), "left")
+                .select(col("walk_id"),
+                  coalesce(col("e.d"), col("cur")).as("cur"),
+                  when(col("e.d").isNull, col("path"))
+                    .otherwise(concat(col("path"), array(col("e.d")))).as("path")))
+          }
+        }
+        // '->'-joined string, not ARRAY: the driver's comparator (and any
+        // hash-based external check) wants sortable scalar cells — same
+        // flattening contract as paths_between
+        state.select(col("walk_id"),
+          concat_ws("->", col("path")).as("path"),
+          (size(col("path")) - 1).cast("long").as("hops"))
       }
-      } // withLoopShuffle
-      } // withoutAqe
-      // '->'-joined string, not ARRAY: the driver's comparator (and any
-      // hash-based external check) wants sortable scalar cells — same
-      // flattening contract as paths_between
-      state.select(col("walk_id"),
-        concat_ws("->", col("path")).as("path"),
-        (size(col("path")) - 1).cast("long").as("hops"))
     }
 
   /** Skip-gram training pairs from [[randomWalks]] output — the step
@@ -2641,6 +2635,85 @@ object GraphAnalytics {
        | FROM agg ORDER BY id""".stripMargin.replace("\n", " ")
   }
 
+  /** The Luby round [[maximalIndependentSet]] and [[greedyColoring]]
+    * share. Per round, every undecided node whose priority `md5(id) ||
+    * id` is below the priority of every live neighbour is selected
+    * (`sel`); `decide(loop, scored, live, ship)` turns that scored frame
+    * (id, pri, sel) into the round's state frame, which the kernel
+    * carries eagerly. State rows where `gone` holds leave the game with
+    * their `status` and the round number; the rest stay undecided, and
+    * those still undecided after `rounds` rounds are reported as
+    * `leftover` with round 0. Self-loops are dropped: a node would be
+    * its own neighbour, never below itself, and its neighbours would
+    * wait on it forever.
+    *
+    * The priority is a pure function of the id, so no round joins a
+    * priority table onto the edge set: the min-neighbour priority is a
+    * map-side expression over the live edges plus one partial-agg
+    * shuffle that combines to V rows. The live edges (both ends
+    * undecided) shrink by broadcast anti-joins against the round's
+    * decided set (map-only, the partitioning kept), carried lazily: the
+    * next round's first job computes them. Returns (id, status, round),
+    * every node once.
+    */
+  private def luby(pairs: DataFrame, rounds: Int, undirectedPairs: Boolean,
+                   name: String, gone: Column, status: Column,
+                   leftover: String)(
+      decide: (Loop, DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame
+  ): DataFrame = Loop.run(pairs.sparkSession, Loop.Eager) { loop =>
+    val both = if (undirectedPairs)
+      pairs.select(col("src").as("a"), col("dst").as("b"))
+    else {
+      val p0 = pairs.select(col("src"), col("dst")).distinct()
+      p0.select(col("src").as("a"), col("dst").as("b"))
+        .union(p0.select(col("dst").as("a"), col("src").as("b")))
+    }
+    val und0 = both.filter(col("a") =!= col("b"))
+    // a derived view is round 0 of the live edges
+    val und = if (storedIndex(pairs, undirectedPairs)) und0
+      else loop.seed(s"${name}_live_round", und0)
+    // one fused sizing scan; nV only gates broadcasts and sizes
+    // partitions, so the approximate distinct count is exact enough
+    val sz = und.agg(count(lit(1)), approx_count_distinct(col("a"))).head()
+    val nE = sz.getLong(0)
+    val nV = math.min(sz.getLong(1), nE)
+    def ship(df: DataFrame) =
+      if (nV <= Loop.BroadcastStateRows) broadcast(df) else df
+    def pri(c: Column) = concat(md5(c), c)
+    var undec = loop.pin(und.select(col("a").as("id")).distinct()
+      .withColumn("pri", pri(col("id"))))
+    var live = und
+    var out: DataFrame = null
+    loop.rounds(nV, nE) {
+      for (r <- 1 to rounds) {
+        // '~' (0x7E) sorts after every md5-hex and id character: the
+        // minimum of a node whose neighbours have all left the game
+        val minNb = live.groupBy(col("a").as("id"))
+          .agg(min(pri(col("b"))).as("mn"))
+        val scored = undec.join(minNb, Seq("id"), "left")
+          .select(col("id"), col("pri"),
+            (col("pri") < coalesce(col("mn"), lit("~"))).as("sel"))
+        // a chain per round: the output reads every round's state
+        val state = loop.carry(s"${name}_state_round",
+          decide(loop, scored, live, ship), chain = s"${name}_state_$r")
+        val rows = state.filter(gone)
+          .select(col("id"), status.as("status"), lit(r).as("round"))
+        out = if (out == null) rows else out.unionAll(rows)
+        undec = state.filter(!gone).select(col("id"), col("pri"))
+        if (r < rounds) {
+          val decided = state.filter(gone).select("id")
+          live = loop.carry(s"${name}_live_round", live
+            .join(ship(decided.withColumnRenamed("id", "a")), Seq("a"),
+              "left_anti")
+            .join(ship(decided.withColumnRenamed("id", "b")), Seq("b"),
+              "left_anti"), eager = false)
+        }
+      }
+    }
+    out.unionAll(undec.select(col("id"), lit(leftover).as("status"),
+      lit(0).as("round")))
+  }
+
   /** Deterministic Luby MAXIMAL INDEPENDENT SET (r8): per round, a
     * node joins the set iff its priority beats every UNDECIDED
     * neighbor's; winners and their neighbors leave the game. Priority
@@ -2660,121 +2733,34 @@ object GraphAnalytics {
     * Scale shape: per round ONE join of the (shrinking) undecided set
     * against the stored undirected index + one min-agg + one anti-join
     * — O(live edges) per round, O(log V) expected rounds to empty;
-    * state carries (id, pri) only.
+    * state carries (id, pri) only. A round is the [[luby]] round with
+    * two eager jobs: the scored frame, then the state frame (id, pri,
+    * sel, nb) whose filters give the round's rows, the next undecided
+    * set and the decided set.
     *
     * Returns (id, status, round): every node exactly once — 'in'
     * (joined the set in `round`), 'out' (eliminated as a winner's
     * neighbor in `round`), or 'undecided' (round 0, past the horizon).
     */
   def maximalIndependentSet(pairs: DataFrame, rounds: Int = 4,
-                            undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(pairs.sparkSession) {
+                            undirectedPairs: Boolean = false): DataFrame = {
     require(rounds >= 1, "maximalIndependentSet needs rounds >= 1")
-    val parentCached = storedIndex(pairs, undirectedPairs)
-    val und0raw = if (undirectedPairs)
-      pairs.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val p0 = pairs.filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst")).distinct()
-      p0.select(col("src").as("a"), col("dst").as("b"))
-        .union(p0.select(col("dst").as("a"), col("src").as("b")))
-    }
-    val und = if (parentCached) und0raw else und0raw.localCheckpoint(true)
-    // the Luby priority is a PURE FUNCTION of the node id — the r14
-    // realization that removes every per-round E-scale exchange: no
-    // round ever needs to JOIN a priority table onto the edge set,
-    // because min-neighbor-priority is computable map-side from the
-    // edge rows themselves.
-    def pri(c: org.apache.spark.sql.Column) = concat(md5(c), c)
-    // ONE fused sizing scan over the (persisted) undirected view
-    // replaces the r13 undec.count()+und.count() pair (VERDICT #3:
-    // derive the loop-shuffle width without extra driver actions);
-    // nV only gates broadcasts / sizes partitions, so the approx
-    // distinct is exact enough by construction.
-    val szRow = und.agg(count(lit(1)),
-      approx_count_distinct(col("a"))).head()
-    val nE = szRow.getLong(0)
-    val nV = math.min(szRow.getLong(1), nE)
-    val small = nV <= Loop.BroadcastStateRows
-    def bcIf(df: DataFrame) = if (small) broadcast(df) else df
-    var undec = und.select(col("a").as("id")).distinct()
-      .withColumn("pri", pri(col("id")))
-      .localCheckpoint(true)
-    // live-edge carry: undec shrinks monotonically, so this round's
-    // live set (both ends undecided) is a SUBSET of last round's.
-    // r14 REWORK (guide §2.3/§2.4 — the r13 eager-checkpoint variant
-    // was a driver-adjudicated regression, ADVICE r13): the old round
-    // REBUILT live by joining undec onto both endpoints — two E-scale
-    // exchanges per round — and ran 4 eager checkpoint jobs. Now:
-    //   - min-neighbor-priority is a map-side expression over the
-    //     carried live edges + ONE partial-agg shuffle that combines
-    //     to V-sized output (never an E exchange);
-    //   - live shrinks by BROADCAST anti-joins against the round's
-    //     decided set (map-only, preserves partitioning), carried as
-    //     a LAZY checkpoint that the NEXT round's first job
-    //     materializes — single consumer at a time, so the r13
-    //     duplicate-stage concern does not apply;
-    //   - sel/eliminated/undec' are all filters over ONE fused
-    //     per-round state frame (id, pri, sel, nb) — 2 eager jobs per
-    //     round instead of 4, and the out-union at the end reads only
-    //     cached state frames.
-    var live = und
-    var prevLive: DataFrame = null
-    var out: DataFrame = null
-    graft.core.Checkpoints.withLoopShuffle(pairs.sparkSession, nV, nE) {
-      var prevScored: DataFrame = null
-      for (r <- 1 to rounds) {
-        // '~' (0x7E) exceeds every md5-hex/ascii-id char → +infinity
-        // for nodes whose neighbors have all left the game
-        val minNb = live.groupBy(col("a").as("id"))
-          .agg(min(pri(col("b"))).as("mn"))
-        val scored0 = undec.join(minNb, Seq("id"), "left")
-          .select(col("id"), col("pri"),
-            (col("pri") < coalesce(col("mn"), lit("~"))).as("sel"))
-        graft.core.PlanTrace.round("mis_scored_round", scored0)
-        val scored = // round job 1 (also materializes live)
-          scored0.localCheckpoint(true)
-        // live_{r-1} is dead once live_r materialized (inside job 1)
-        if (prevLive != null) graft.core.Checkpoints.drop(prevLive)
-        // winners' neighbors: nodes of the live graph adjacent to a
-        // selected node (all still undecided by construction)
-        val selA = scored.filter(col("sel")).select(col("id").as("a"))
-        val nbr = live.join(bcIf(selA), Seq("a"), "left_semi")
+    luby(pairs, rounds, undirectedPairs, "mis", col("sel") || col("nb"),
+        when(col("sel"), "in").otherwise("out"), "undecided") {
+      (loop, scored0, live, ship) =>
+        // the scored frame has two readers: the neighbour probe and the
+        // state join
+        val scored = loop.carry("mis_scored_round", scored0)
+        // the winners' live neighbours, all undecided by construction
+        val nbr = live
+          .join(ship(scored.filter(col("sel")).select(col("id").as("a"))),
+            Seq("a"), "left_semi")
           .select(col("b").as("id")).distinct()
           .withColumn("nb", lit(true))
-        val state0 = scored.join(bcIf(nbr), Seq("id"), "left")
+        scored.join(ship(nbr), Seq("id"), "left")
           .select(col("id"), col("pri"), col("sel"),
             coalesce(col("nb"), lit(false)).as("nb"))
-        graft.core.PlanTrace.round("mis_state_round", state0)
-        val state = state0.localCheckpoint(true) // round job 2
-        if (prevScored != null) graft.core.Checkpoints.drop(prevScored)
-        prevScored = scored
-        val roundOut = state.filter(col("sel"))
-          .select(col("id"), lit("in").as("status"), lit(r).as("round"))
-          .unionAll(state.filter(!col("sel") && col("nb"))
-            .select(col("id"), lit("out").as("status"), lit(r).as("round")))
-        out = if (out == null) roundOut else out.unionAll(roundOut)
-        undec = state.filter(!col("sel") && !col("nb"))
-          .select(col("id"), col("pri"))
-        if (r < rounds) {
-          val decided = state.filter(col("sel") || col("nb")).select("id")
-          prevLive = live
-          val live0 = live
-            .join(bcIf(decided.withColumnRenamed("id", "a")), Seq("a"),
-              "left_anti")
-            .join(bcIf(decided.withColumnRenamed("id", "b")), Seq("b"),
-              "left_anti")
-          graft.core.PlanTrace.round("mis_live_round", live0)
-          live = live0.localCheckpoint(false) // materialized by round r+1's job 1
-        }
-      }
-      if (prevScored != null) graft.core.Checkpoints.drop(prevScored)
-      // the final round's E-scale carry has no consumer left (out and
-      // undec read only the V-sized state frames) — release it now
-      // instead of at the harness sweep (ADVICE r13)
-      graft.core.Checkpoints.drop(live)
     }
-    out.unionAll(undec.select(col("id"), lit("undecided").as("status"),
-      lit(0).as("round")))
   }
 
   /** DuckDB oracle for [[maximalIndependentSet]] — the identical
@@ -2943,79 +2929,13 @@ object GraphAnalytics {
     * 'uncolored' (color 0).
     */
   def greedyColoring(pairs: DataFrame, rounds: Int = 6,
-                     undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(pairs.sparkSession) {
+                     undirectedPairs: Boolean = false): DataFrame = {
     require(rounds >= 1, "greedyColoring needs rounds >= 1")
-    val parentCached = storedIndex(pairs, undirectedPairs)
-    val und0raw = if (undirectedPairs)
-      pairs.select(col("src").as("a"), col("dst").as("b"))
-    else {
-      val p0 = pairs.filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst")).distinct()
-      p0.select(col("src").as("a"), col("dst").as("b"))
-        .union(p0.select(col("dst").as("a"), col("src").as("b")))
-    }
-    val und = if (parentCached) und0raw else und0raw.localCheckpoint(true)
-    // r14 REWORK — the maximalIndependentSet device, one step simpler
-    // because coloring only removes the WINNERS each round (their
-    // neighbors stay in the game): the priority is a pure function of
-    // the id (md5(id)||id), so no round ever joins a priority table
-    // onto the edge set; min-neighbor-priority is ONE map-side
-    // partial-agg over the carried live edges (combines to V-sized
-    // shuffle output), the per-round state (id, pri, sel) is ONE eager
-    // frame whose filters yield the round's colors AND the next undec,
-    // and live shrinks by broadcast anti-joins (map-only) carried as a
-    // lazy checkpoint that the next round's single job materializes.
-    // 1 eager job per round instead of 3, zero E-scale exchanges
-    // (guide §2.3/§2.4; the r13 eager variant was a driver-adjudicated
-    // regression — ADVICE r13).
-    def pri(c: org.apache.spark.sql.Column) = concat(md5(c), c)
-    val szRow = und.agg(count(lit(1)),
-      approx_count_distinct(col("a"))).head()
-    val nE = szRow.getLong(0)
-    val nV = math.min(szRow.getLong(1), nE)
-    val small = nV <= Loop.BroadcastStateRows
-    def bcIf(df: DataFrame) = if (small) broadcast(df) else df
-    var undec = und.select(col("a").as("id")).distinct()
-      .withColumn("pri", pri(col("id")))
-      .localCheckpoint(true)
-    var live = und
-    var prevLive: DataFrame = null
-    var out: DataFrame = null
-    graft.core.Checkpoints.withLoopShuffle(pairs.sparkSession, nV, nE) {
-      for (r <- 1 to rounds) {
-        val minNb = live.groupBy(col("a").as("id"))
-          .agg(min(pri(col("b"))).as("mn"))
-        val state0 = undec.join(minNb, Seq("id"), "left")
-          .select(col("id"), col("pri"),
-            (col("pri") < coalesce(col("mn"), lit("~"))).as("sel"))
-        graft.core.PlanTrace.round("coloring_state_round", state0)
-        val state = // the round's ONE job (materializes live too)
-          state0.localCheckpoint(true)
-        if (prevLive != null) graft.core.Checkpoints.drop(prevLive)
-        out = {
-          val roundOut = state.filter(col("sel"))
-            .select(col("id"), lit(r).as("color"), lit("colored").as("status"))
-          if (out == null) roundOut else out.unionAll(roundOut)
-        }
-        undec = state.filter(!col("sel")).select(col("id"), col("pri"))
-        if (r < rounds) {
-          val selIds = state.filter(col("sel")).select("id")
-          prevLive = live
-          val live0 = live
-            .join(bcIf(selIds.withColumnRenamed("id", "a")), Seq("a"),
-              "left_anti")
-            .join(bcIf(selIds.withColumnRenamed("id", "b")), Seq("b"),
-              "left_anti")
-          graft.core.PlanTrace.round("coloring_live_round", live0)
-          live = live0.localCheckpoint(false) // materialized by round r+1's job
-        }
-      }
-      // the final round's E-scale carry has no consumer left — release
-      // it now instead of at the harness sweep (ADVICE r13)
-      graft.core.Checkpoints.drop(live)
-    }
-    out.unionAll(undec.select(col("id"), lit(0).as("color"),
-      lit("uncolored").as("status")))
+    // only the winners leave, so the scored frame is the round's state
+    // and its one eager job
+    luby(pairs, rounds, undirectedPairs, "coloring", col("sel"),
+        lit("colored"), "uncolored")((_, scored, _, _) => scored)
+      .select(col("id"), col("round").as("color"), col("status"))
   }
 
   /** DuckDB oracle for [[greedyColoring]] — the identical rounds

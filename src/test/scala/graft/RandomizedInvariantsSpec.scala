@@ -487,6 +487,70 @@ class RandomizedInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("maximalIndependentSet and greedyColoring equal an in-memory Luby replay on random graphs") {
+    import graft.graph.GraphAnalytics
+    // the engines' priority: md5 hex of the id, then the id
+    def pri(id: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.getBytes("UTF-8")).map(b => f"$b%02x").mkString + id
+    // seeds whose graphs need at least two rounds under both peels
+    for (seed <- Seq(31, 32)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 24
+      def node() = f"n${rnd.nextInt(n)}%02d"
+      // self-loops included: a node is never its own neighbour
+      val pairs = ((1 to 40).map(_ => (node(), node())) ++
+        (1 to 4).map { _ => val x = node(); (x, x) }).distinct
+      val nbrs = pairs.filter { case (a, b) => a != b }
+        .flatMap { case (a, b) => Seq((a, b), (b, a)) }
+        .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
+      // per round, the undecided nodes whose priority is below every
+      // undecided neighbour's ('~' when none is left) are selected; MIS
+      // removes them and their neighbours, coloring only them. Rows are
+      // id -> (status, round), as both loops report them
+      def replay(rounds: Int, mis: Boolean): Map[String, (String, Int)] = {
+        var undec = nbrs.keySet
+        val rows = Map.newBuilder[String, (String, Int)]
+        for (r <- 1 to rounds) {
+          val sel = undec.filter { v =>
+            val mn = (nbrs(v) & undec).map(pri).minOption.getOrElse("~")
+            pri(v) < mn
+          }
+          val out = if (mis) (sel.flatMap(nbrs) & undec) -- sel
+            else Set.empty[String]
+          rows ++= sel.map(_ -> (if (mis) "in" else "colored", r)) ++
+            out.map(_ -> ("out", r))
+          undec = undec -- sel -- out
+        }
+        rows.result() ++
+          undec.map(_ -> (if (mis) "undecided" else "uncolored", 0))
+      }
+      def run(mis: Boolean, edges: org.apache.spark.sql.DataFrame,
+              rounds: Int, undirected: Boolean) =
+        if (mis) GraphAnalytics.maximalIndependentSet(edges, rounds,
+            undirectedPairs = undirected)
+          .collect().map(r => r.getString(0) -> (r.getString(1), r.getInt(2)))
+        else GraphAnalytics.greedyColoring(edges, rounds,
+            undirectedPairs = undirected)
+          .collect().map(r => r.getString(0) -> (r.getString(2), r.getInt(1)))
+      for (mis <- Seq(true, false)) {
+        // the fewest rounds that decide every node, and one round fewer,
+        // which leaves some undecided
+        val all = Iterator.from(1)
+          .find(r => replay(r, mis).values.forall(_._2 > 0)).get
+        assert(all >= 2, s"seed=$seed decides every node in one round")
+        for (rounds <- Seq(all - 1, all)) {
+          val want = replay(rounds, mis)
+          bothInputs(pairs) { (input, edges, undirected) =>
+            val where = s"mis=$mis, seed=$seed, rounds=$rounds, $input"
+            val got = run(mis, edges, rounds, undirected)
+            assert(got.length === want.size, where)
+            assert(got.toMap === want, where)
+          }
+        }
+      }
+    }
+  }
+
   test("pagerank family: mass bounds, rank ordering and exact integer replay") {
     import graft.graph.GraphAnalytics
     val scale = 1000000000000L

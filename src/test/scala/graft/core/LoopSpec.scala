@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -73,6 +74,43 @@ class LoopSpec extends SparkSpec {
     }
     assert(released(b1) && !released(a2))
     assert(out.as[Long].collect().sorted === Array(4L, 5L, 6L))
+  }
+
+  test("an eager carry's one job checkpoints the lazy carries it computes and releases what they read") {
+    val sc = spark.sparkContext
+    val (group, flush) = ("loopspec_truncate", "loopspec_flush")
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    var live0, live1, state1: DataFrame = null
+    sc.addSparkListener(listener)
+    try {
+      val out = Loop.run(spark, Loop.Eager) { loop =>
+        live0 = loop.seed("loopspec_live", Seq(1L, 2L, 3L).toDF("x"))
+        live1 = loop.carry("loopspec_live", step(live0), eager = false)
+        assert(!materialized(live1) && !released(live0))
+        // only the state frame's job computes live1, in another chain
+        sc.setJobGroup(group, group)
+        try state1 = loop.carry("loopspec_state", step(live1))
+        finally sc.clearJobGroup()
+        assert(materialized(state1) && materialized(live1))
+        assert(released(live0) && !released(live1))
+        state1
+      }
+      assert(released(live1) && !released(state1))
+      assert(out.as[Long].collect().sorted === Array(3L, 4L, 5L))
+      // the bus delivers job starts in order: once the flush job's start
+      // is seen, so is every start of the carry's group
+      sc.setJobGroup(flush, flush)
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!starts.contains(flush) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(starts.contains(flush))
+      assert(starts.toArray.count(_ == group) === 1)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("AQE and the shuffle width are restored after a normal exit and a mid-round exception") {

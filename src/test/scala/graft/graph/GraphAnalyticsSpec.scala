@@ -798,14 +798,21 @@ class GraphAnalyticsSpec extends SparkSpec {
       "connectedComponents" -> ((e, u) => GraphAnalytics.connectedComponents(
         e, rounds = 6, undirectedPairs = u)),
       "coreness" -> ((e, u) => GraphAnalytics.coreness(e, rounds = 12,
-        undirectedPairs = u)))
+        undirectedPairs = u)),
+      "maximalIndependentSet" -> ((e, u) => GraphAnalytics.maximalIndependentSet(
+        e, rounds = 4, undirectedPairs = u)),
+      "greedyColoring" -> ((e, u) => GraphAnalytics.greedyColoring(e,
+        rounds = 6, undirectedPairs = u)),
+      "randomWalks" -> ((e, u) => GraphAnalytics.randomWalks(e, steps = 3,
+        pairsDistinct = u)))
     try {
       for ((name, run) <- loops; (input, edges, u) <-
              Seq(("raw", raw, false), ("persisted", und, true))) {
         val before = spark.sparkContext.getPersistentRDDs.keySet
         val out = run(edges, u)
-        // each loop converges on this graph before its last round, so
-        // its output reads its final, checkpointed frame alone
+        // the output reads checkpointed frames only: the final frame of a
+        // loop that converges on this graph before its last round, every
+        // round's state frame of the Luby loops
         val reads = out.queryExecution.analyzed
           .collect { case lr: LogicalRDD => lr.rdd }
         assert(reads.nonEmpty && reads.forall(_.isCheckpointed), s"$name on $input")

@@ -8,7 +8,7 @@ the reference captures operator for operator. Capture, then compare:
 
   SPARK_GRAFT_PLAN_TRACE=/tmp/rounds sbt "runMain graft.tools.PlanAudit \
       graph_pagerank graph_ppr graph_pagerank_weighted graph_hits \
-      graph_feature_prop graph_walks"
+      graph_feature_prop"
   python3 tools/round_plans.py /tmp/rounds [plans/r14/rounds]
 
 Components, k-core, coreness and label propagation trace their rounds
@@ -18,6 +18,15 @@ propagation, and only the first two rounds of each tag are written.
   SPARK_GRAFT_PLAN_TRACE=/tmp/rounds2 sbt "runMain graft.tools.PlanAudit \
       graph_components_fresh graph_kcore graph_coreness graph_lpa"
   python3 tools/round_plans.py /tmp/rounds2
+
+MIS, coloring and random walks trace their rounds together. The mis_*
+and coloring_* references are captures on the sf0.01 fixture
+(PlanAudit's default), whose loops read the stored undirected index;
+walks_step reads the stored pair view.
+
+  SPARK_GRAFT_PLAN_TRACE=/tmp/rounds3 sbt "runMain graft.tools.PlanAudit \
+      graph_mis graph_coloring graph_walks"
+  python3 tools/round_plans.py /tmp/rounds3
 
 Every file in the capture directory is compared with the reference file
 of the same name. Ignored: plan node ids, expression ids (`#123`),
