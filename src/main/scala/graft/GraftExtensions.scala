@@ -34,6 +34,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // declarative similarity API → codegen vec_dot, automatically
     // (see graft.plans.FuseDotProduct for why this is a Rule)
     ext.injectOptimizerRule(_ => graft.plans.FuseDotProduct)
+    // a global sort over driver-held rows sorts on the driver, no job
+    // (see graft.plans.SortLocalRelation)
+    ext.injectOptimizerRule(_ => graft.plans.SortLocalRelation)
     ext.injectFunction((
       FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotProductFloat].getName, "vec_dot"),

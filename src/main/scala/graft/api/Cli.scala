@@ -238,9 +238,15 @@ object Cli {
           case "imports" => (Direction.Outgoing, EdgeFilter.Only("imports"))
           case "exports" => (Direction.Incoming, EdgeFilter.Only("imports"))
         }
-        Traversal.bfs(edges, seedDf, TraversalSpec(dir, depth, 1000, filt))
-          .join(blocks, Seq("id"))
-          .select("id", "depth", "unit_type", "unit_id")
+        // the traversal is capped at 1,000 rows: collect it and look its
+        // ids up in `blocks` by a filter, not a join, so driver-held
+        // blocks fold to one local relation and distributed ones take
+        // one narrow scan
+        val depthOf = Traversal.bfs(edges, seedDf, TraversalSpec(dir, depth, 1000, filt))
+          .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+        blocks.filter(col("id").isin(depthOf.keys.toSeq: _*))
+          .select(col("id"), element_at(typedLit(depthOf), col("id")).as("depth"),
+            col("unit_type"), col("unit_id"))
           .orderBy("depth", "id")
       case TraceCmd(dirName, target, depth, _, _) =>
         val seedDf = blocks.filter(
@@ -324,7 +330,10 @@ object Cli {
     */
   def render(df: DataFrame, format: String): String = format match {
     case "llm" => renderLlm(df)
-    case "json" => df.toJSON.collect().mkString("[", ",", "]")
+    // a projection, not `toJSON`: over driver-held rows it folds into
+    // the relation and renders without a job
+    case "json" => df.select(to_json(struct(col("*"))))
+      .collect().map(_.getString(0)).mkString("[", ",", "]")
     case "csv" =>
       val cols = df.columns
       def esc(s: String): String =

@@ -5,10 +5,17 @@ import graft.ingest.{DispatchParser, Ingest, SemanticResolver, SourceParser}
 import graft.query.QueryCache
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Parquet-backed persistent workspace state for the CLI's
   * `link/unlink/sync/status` commands — the Spark analogue of the
@@ -247,14 +254,25 @@ object WorkspaceStore {
     * and the commit from being served after it. The key assumes the
     * writers serialize on [[withWriteLock]].
     *
-    * The registry rows are driver-sized and held on the driver; blocks
-    * and edges are a persisted row RDD each, and every call returns
-    * FRESH frames over them (`createDataFrame(rdd, schema)`). Two
-    * Spark behaviours therefore leave it alone:
+    * The registry rows are driver-sized and held on the driver. Blocks
+    * and edges are each held where Spark would put a table of their
+    * size, gated independently on the bytes measured when the entry is
+    * built:
+    *   - at most `spark.sql.autoBroadcastJoinThreshold` (Spark's own
+    *     "small enough to copy everywhere"): copied `UnsafeRow`s on the
+    *     driver. Every call returns a fresh `LocalRelation` frame over
+    *     them ([[org.apache.spark.sql.graft.Frames]]), so Spark's
+    *     `ConvertToLocalRelation` and [[graft.plans.SortLocalRelation]]
+    *     evaluate a served plan's filters, projections and sorts on the
+    *     driver and the plan runs no job; [[graft.graph.Traversal]]
+    *     expands BFS levels over the same rows on the driver;
+    *   - above it: a persisted RDD of internal rows, and every call
+    *     returns a fresh `LogicalRDD` frame over it.
+    * Two Spark behaviours therefore leave the entry alone:
     *   - [[load]]'s `refreshByPath` re-caches every persisted plan that
-    *     reads the store path; an RDD-rooted plan reads no path;
+    *     reads the store path; neither frame reads a path;
     *   - a caller's `persist` or `unpersist(true)` of a returned frame
-    *     caches or drops that frame's own plan, never the RDD below it.
+    *     caches or drops that frame's own plan, never the rows below it.
     * The RDDs are named, so harness storage sweeps of anonymous RDDs
     * ([[graft.core.Checkpoints.sweepAnonymous]]) skip them too. Should
     * their blocks be lost anyway, they recompute from the epoch's own
@@ -265,12 +283,16 @@ object WorkspaceStore {
     (g.blocks.frame(spark), g.edges.frame(spark))
   }
 
-  /** One table of the resident current graph: persisted rows, their
-    * schema and the live row count per workspace.
+  /** One table of the resident current graph: its rows, held on the
+    * driver or persisted, their schema, and the live row count per
+    * workspace.
     */
-  private final case class Pinned(rows: RDD[Row], schema: StructType,
+  private final case class Pinned(rows: Either[LocalRelation, RDD[InternalRow]],
+                                  schema: StructType,
                                   perWorkspace: scala.collection.Map[String, Long]) {
-    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(rows, schema)
+    def frame(spark: SparkSession): DataFrame =
+      rows.fold(Frames.local(spark, _), Frames.distributed(spark, _, schema))
+    def release(): Unit = rows.foreach(_.unpersist(blocking = false))
   }
 
   /** A live registry row, as `status` reports it. */
@@ -278,17 +300,40 @@ object WorkspaceStore {
 
   private final case class Resident(workspaces: Seq[Workspace], blocks: Pinned,
                                     edges: Pinned) {
-    def release(): Unit =
-      Seq(blocks, edges).foreach(_.rows.unpersist(blocking = false))
+    def release(): Unit = { blocks.release(); edges.release() }
   }
 
-  /** Persist `df`'s rows; the one job that materializes them also
-    * counts them per workspace.
+  /** Persist `df`'s rows as copied `UnsafeRow`s; the one job that
+    * materializes them also counts them per workspace and sums their
+    * bytes. Rows of at most `maxBytes` then move to the driver (a second
+    * job, over the persisted copy) and the persisted copy is dropped.
     */
-  private def pin(df: DataFrame, name: String): Pinned = {
-    val rows = df.rdd.setName(name).persist(StorageLevel.MEMORY_AND_DISK)
-    val ws = df.schema.fieldIndex("workspace")
-    Pinned(rows, df.schema, rows.map(_.getString(ws)).countByValue())
+  private def pin(df: DataFrame, name: String, maxBytes: Long): Pinned = {
+    val schema = df.schema
+    val ws = schema.fieldIndex("workspace")
+    val rows = df.queryExecution.toRdd.mapPartitions { it =>
+      val unsafe = UnsafeProjection.create(schema)
+      it.map(r => unsafe(r).copy(): InternalRow)
+    }.setName(name).persist(StorageLevel.MEMORY_AND_DISK)
+    val parts = rows.mapPartitions { it =>
+      val n = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+      var bytes = 0L
+      for (r <- it) {
+        n(if (r.isNullAt(ws)) null else r.getUTF8String(ws).toString) += 1
+        bytes += r.asInstanceOf[UnsafeRow].getSizeInBytes
+      }
+      Iterator((n.toSeq, bytes))
+    }.collect()
+    val perWorkspace = parts.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
+    val held =
+      if (parts.map(_._2).sum > maxBytes) Right(rows)
+      else {
+        val local = LocalRelation(DataTypeUtils.toAttributes(schema),
+          rows.collect().toSeq)
+        rows.unpersist(blocking = false)
+        Left(local)
+      }
+    Pinned(held, schema, perWorkspace)
   }
 
   /** The committed epoch the query graph reads: the sorted part-file
@@ -316,10 +361,11 @@ object WorkspaceStore {
         .map { case (id, root, at) => Workspace(id, root, at) }
       val live = broadcast(workspaces.map(_.id).toDF("workspace"))
       val tag = s"graft current graph $stateDir"
+      val maxBytes = spark.sessionState.conf.autoBroadcastJoinThreshold
       Resident(workspaces,
         pin(Schemas.currentView(st.blocks).join(live, Seq("workspace"), "left_semi"),
-          s"$tag blocks"),
-        pin(st.edges.join(live, Seq("workspace"), "left_semi"), s"$tag edges"))
+          s"$tag blocks", maxBytes),
+        pin(st.edges.join(live, Seq("workspace"), "left_semi"), s"$tag edges", maxBytes))
     }(_.release())
 
   /** INCREMENTAL-sync delta (r8): rows of `fresh` that are NEW or

@@ -3,6 +3,9 @@ package graft.graph
 import org.apache.spark.SparkException
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,6 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** Direction of a traversal, reference `src/query/traversal.zig:162-173`. */
 sealed trait Direction
@@ -48,11 +52,15 @@ final case class TraversalSpec(
   * already knows:
   *  - **driver levels**, while the visited set and the frontier stay
   *    under a 100k-row gate (the frontier gate divided by depth + 1 when
-  *    paths are tracked). A level is ONE narrow Spark job: the visited
-  *    ids go out as a broadcast map that ranks the frontier, each edge
-  *    partition returns the new ids it reaches with their best
-  *    predecessor rank, and the driver merges them and picks the
-  *    canonical path. The result is a local frame. This is the served
+  *    paths are tracked). When the hop projection plans to a
+  *    `LocalRelation` (edges held on the driver, as the store's current
+  *    graph holds a small table), a level runs on the driver over those
+  *    rows and no job runs; the seeds likewise. Otherwise a level is ONE
+  *    narrow Spark job: the visited ids go out as a broadcast map that
+  *    ranks the frontier, each edge partition returns the new ids it
+  *    reaches with their best predecessor rank, and the driver merges
+  *    them and picks the canonical path. Both read the rows through the
+  *    same expansion. The result is a local frame. This is the served
   *    `show`/`trace` case: frontiers of a few dozen ids.
   *  - **distributed levels**, from the level where the state or an
   *    expansion would cross the gate: frontier ⋈ edges → next frontier,
@@ -312,10 +320,11 @@ object Traversal {
                              edgeFilter: EdgeFilter = EdgeFilter.All,
                              trackPaths: Boolean = false,
                              localRows: Long = BcastRows): DataFrame = {
-    // If the edges table is already persisted (the normal case: a
-    // materialized graph), the hop projection is a cheap in-memory scan
-    // per level — re-persisting it would copy the whole table per query.
-    val parentCached = edges.storageLevel != StorageLevel.NONE
+    // If the edges are already resident (the normal case: a
+    // materialized graph or the store's current graph), the hop
+    // projection is a cheap in-memory scan per level — re-persisting it
+    // would copy the whole table per query.
+    val parentCached = resident(edges)
     val hop0 = hops(filterEdges(edges, edgeFilter), direction)
     val hop = if (parentCached) hop0 else hop0.persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -331,6 +340,18 @@ object Traversal {
       start.fold(identity, distributedLevels(hop, _, maxDepth, maxResults, trackPaths))
     } finally if (!parentCached) hop.unpersist()
   }
+
+  /** Whether `df`'s rows are already held in memory: a persisted frame,
+    * rows on the driver (a `LocalRelation`) or a frame straight over a
+    * persisted RDD, as [[graft.api.WorkspaceStore.currentGraph]] hands
+    * out. Persisting such a source again would only copy it.
+    */
+  private def resident(df: DataFrame): Boolean =
+    df.storageLevel != StorageLevel.NONE || (df.queryExecution.analyzed match {
+      case _: LocalRelation => true
+      case r: LogicalRDD => r.rdd.getStorageLevel != StorageLevel.NONE
+      case _ => false
+    })
 
   /** Row gate of the BFS loop: below it a frame is broadcast (distributed
     * levels) or held on the driver (driver levels). For driver levels
@@ -436,13 +457,13 @@ object Traversal {
 
   /** Levels on the driver while the visited set and the frontier stay
     * under `gate` rows (the frontier gate scaled as in [[frontierCap]]).
-    * A level is ONE narrow job: the visited ids go out as a broadcast
-    * map that also carries each frontier id's path rank (TorrentBroadcast
-    * runs no job; an `isin` list would grow the plan with the frontier),
-    * and each hop partition returns the new ids its hops reach from the
-    * frontier, each with its best predecessor rank. The driver merges
-    * them and builds the canonical paths. The seeds are collected first,
-    * in one job.
+    * A level maps the visited ids to -1 and each frontier id to its path
+    * rank, and the hop rows return the new ids they reach from the
+    * frontier, each with its best predecessor rank ([[gathered]]): on the
+    * driver when the hops are held there, else in ONE narrow job, the map
+    * going out as a broadcast (an `isin` list would grow the plan with
+    * the frontier). The driver merges them and builds the canonical
+    * paths. The seeds are gathered first, the same way.
     *
     * Returns the result as a local frame with the distributed loop's
     * schema, sorted by (depth, id) and capped like it; or, when the
@@ -454,11 +475,10 @@ object Traversal {
                            maxDepth: Int, maxResults: Long, trackPaths: Boolean,
                            gate: Long): Either[DataFrame, BfsState] = {
     val spark = hop.sparkSession
-    import spark.implicits._
     val cap = if (gate >= Int.MaxValue) Int.MaxValue - 1 else gate.toInt
-    val seedIds = collectBounded(
-      seeds.select(col("id")).as[String].rdd
-        .mapPartitions(it => minRankUpTo(it.map(_ -> 0), cap)), gate) match {
+    val seedIds = gathered(seeds.select(col("id")), gate, ()) { (_, rows) =>
+      minRankUpTo(rows.map(r => str(r, 0) -> 0), cap)
+    } match {
       case Some(found) => found
       case None => return Right(seeded(seed0))
     }
@@ -510,15 +530,12 @@ object Traversal {
       for (id <- ids if id != null) marks(id) = -1
       for ((i, r) <- frontier.zipWithIndex if ids(i) != null)
         marks(ids(i)) = if (trackPaths) r else 0
-      val bc = spark.sparkContext.broadcast(marks.toMap)
-      val found = try collectBounded(
-        hop.as[(String, String)].rdd.mapPartitions { it =>
-          val m = bc.value
-          minRankUpTo(it.flatMap { case (a, b) =>
-            m.get(a).filter(_ >= 0 && !m.contains(b)).map(b -> _)
-          }, cap)
-        }, gate)
-      finally bc.destroy()
+      val found = gathered(hop, gate, marks.toMap) { (m, rows) =>
+        minRankUpTo(rows.flatMap { r =>
+          val to = str(r, 1)
+          m.get(str(r, 0)).filter(_ >= 0 && !m.contains(to)).map(to -> _)
+        }, cap)
+      }
       if (found.isEmpty) return handOff
       val prev = frontier
       depth += 1
@@ -567,6 +584,27 @@ object Traversal {
     finally sc.removeJobTag(tag)
     if (n > gate) None else Some(parts.toArray.flatten)
   }
+
+  /** What `expand` makes of `df`'s rows, while its count stays within
+    * `gate`; else None. Rows `df` holds on the driver (its plan folds to
+    * a `LocalRelation`) expand there, without a job; others in ONE job
+    * ([[collectBounded]]), each partition reading `shared` from a
+    * broadcast (TorrentBroadcast runs no job).
+    */
+  private def gathered[T: ClassTag](df: DataFrame, gate: Long, shared: T)(
+      expand: (T, Iterator[InternalRow]) => Iterator[(String, Int)])
+      : Option[Array[(String, Int)]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        Some(expand(shared, l.data.iterator).toArray).filter(_.length <= gate)
+      case _ =>
+        val bc = df.sparkSession.sparkContext.broadcast(shared)
+        try collectBounded(df.queryExecution.toRdd.mapPartitions(expand(bc.value, _)), gate)
+        finally bc.destroy()
+    }
+
+  private def str(r: InternalRow, i: Int): String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
 
   /** Spark's string order: UTF-8 bytes, unsigned, unlike `String` order,
     * which compares UTF-16 units. Nulls first, as in an ascending sort.

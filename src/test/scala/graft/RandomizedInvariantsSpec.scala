@@ -64,7 +64,10 @@ class RandomizedInvariantsSpec extends SparkSpec {
     val edgeRows = (1 to 70).map { _ =>
       (names(rnd.nextInt(24)), names(rnd.nextInt(24)), types(rnd.nextInt(3)))
     }
-    val edges = edgeRows.toDF("src", "dst", "edge_type")
+    // the same edges held on the driver (a LocalRelation: levels expand
+    // there, without a job) and as an RDD-backed frame (one job a level)
+    val localEdges = edgeRows.toDF("src", "dst", "edge_type")
+    val rddEdges = spark.createDataFrame(localEdges.rdd, localEdges.schema)
 
     // (id, depth, lexicographically smallest shortest path), sorted by
     // (depth, id) and capped, over whole levels like the engine
@@ -113,13 +116,14 @@ class RandomizedInvariantsSpec extends SparkSpec {
       (Both, F.Exclude(Seq("refs")), Seq(names(2), names(3), names(2)), 4, 10000, true, 12L),
       (Outgoing, F.All, Seq(names(4), names(5)), 5, 6, false, 8L),
       (Both, F.All, Seq(names(6)), 3, 9, true, 8L))
-    for ((dir, filt, seeds, depth, cap, paths, small) <- cases) {
+    for ((dir, filt, seeds, depth, cap, paths, small) <- cases;
+         (edges, form) <- Seq(localEdges -> "local", rddEdges -> "rdd")) {
       val want = reference(dir, filt, seeds.distinct, depth, cap)
       val runs = Seq(0L, small, Long.MaxValue).map { gate =>
         gate -> Traversal.bfsLoop(edges, seeds.toDF("id"), dir, depth, cap.toLong,
           filt, paths, localRows = gate)
       }
-      val label = s"$dir $filt seeds=$seeds"
+      val label = s"$form $dir $filt seeds=$seeds"
       for ((gate, df) <- runs) {
         val got = df.collect().toSeq.map { r =>
           (r.getAs[String]("id"), r.getAs[Int]("depth"),

@@ -251,6 +251,80 @@ class CliServerSpec extends SparkSpec {
     }
   }
 
+  /** RDD blocks stored while `f` runs. */
+  private def rddBlocksStored(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusDrain.drain(sc)
+    val stored = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onBlockUpdated(
+          e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit = {
+        val b = e.blockUpdatedInfo
+        if (b.blockId.isRDD && b.storageLevel.isValid) stored.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.graft.ListenerBusDrain.drain(sc); stored.get }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("warm find/show/trace/status: no job over driver-held tables; threshold -1 answers the same") {
+    import BinaryProtocol._
+    val l = linked
+    def binary(port: Int, msgType: Int, payload: Array[Byte]): Any = {
+      val sock = new java.net.Socket("127.0.0.1", port)
+      try {
+        writeMessage(sock.getOutputStream, msgType, payload)
+        val (h, p) = readMessage(sock.getInputStream).toOption.get
+        // a status reply carries the server's uptime; the rest is compared
+        if (h.msgType == MsgType.StatusResponse)
+          decodeStatusResponse(p).toOption.get.copy(uptimeSeconds = 0L)
+        else (h.msgType, p.toSeq)
+      } finally sock.close()
+    }
+    val lines = Seq("find --type function --name alpha",
+      "show --relation callers --target beta --max-depth 3",
+      "trace --direction callers --target beta --max-depth 3",
+      "status")
+    val frames = Seq(
+      MsgType.FindRequest -> encodeFindRequest(FindRequest("alpha", 10)),
+      MsgType.ShowCallersRequest -> encodeShowRequest(ShowRequest("beta", 3)),
+      MsgType.TraceRequest -> encodeTraceRequest(TraceRequest("", "beta", 3)),
+      MsgType.StatusRequest -> Array.emptyByteArray)
+    def requests(port: Int): Seq[(String, () => Any)] =
+      lines.map(q => q -> (() => CliServer.request("127.0.0.1", port, q))) ++
+        frames.map { case (t, p) => f"binary 0x$t%04X" -> (() => binary(port, t, p)) }
+    // every request once cold, then (name, warm response, warm jobs)
+    def warm(port: Int): Seq[(String, Any, Int)] = requests(port).map { case (name, r) =>
+      r()
+      val (resp, jobs, _) = measured(r())
+      (name, resp, jobs)
+    }
+
+    val held = warm(l.srv.boundPort)
+    for ((name, resp, jobs) <- held) assert(jobs == 0, s"$name: $jobs jobs, $resp")
+    assert(json(held(1)._2.toString).path("result").size == 2, held(1))
+
+    // the same store behind a session whose threshold holds no table on
+    // the driver: the resident entry keeps blocks and edges distributed
+    val dist = spark.newSession()
+    dist.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val srv = new CliServer(dist, l.state).start()
+    try {
+      val far = warm(srv.boundPort)
+      for (((name, want, _), (_, got, jobs)) <- held.zip(far)) {
+        assert(got == want, name)
+        assert(jobs <= 8, s"$name: $jobs jobs")
+      }
+      assert(far.exists(_._3 > 0), "the distributed tables run jobs")
+      // the resident edges are not persisted again per traversal
+      assert(rddBlocksStored(requests(srv.boundPort)(1)._2()) == 0)
+    } finally {
+      srv.stop()
+      graft.query.QueryCache.forSession(dist).invalidateAll()
+    }
+  }
+
   test("resident graph follows every commit: server sync, another session's write") {
     val l = linked
     assert(l.find("alpha").contains("lib.zig:alpha"))

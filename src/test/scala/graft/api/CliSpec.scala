@@ -91,6 +91,22 @@ class CliSpec extends SparkSpec {
     assert(csv.linesIterator.toSeq == Seq("name,n", "a,1", "\"b,c\",2"))
   }
 
+  test("render json equals a toJSON join on local and distributed frames") {
+    import org.apache.spark.sql.functions.{col, struct}
+    val rows = Seq(
+      (1L, 1.5, "plain", Seq("a", null), java.sql.Timestamp.valueOf("2024-02-29 12:34:56.123456")),
+      (Long.MaxValue, Double.NaN, "quote \" back \\ tab \t nl \n ctl \u0001",
+        Seq.empty[String], java.sql.Timestamp.valueOf("1969-12-31 23:59:59")),
+      (-7L, -0.0, "é 😀 �", null, null),
+      (0L, Double.PositiveInfinity, null, Seq("x\"y"), java.sql.Timestamp.valueOf("2000-01-01 00:00:00")))
+    val local = rows.toDF("n", "d", "s", "arr", "ts")
+      .withColumn("nested", struct(col("n"), col("arr")))
+    val distributed = spark.createDataFrame(local.rdd, local.schema).repartition(2)
+    for (df <- Seq(local, distributed))
+      assert(Cli.render(df, "json") == df.toJSON.collect().mkString("[", ",", "]"))
+    assert(Cli.render(local.limit(0), "json") == "[]")
+  }
+
   test("render llm frames blocks like format_for_llm") {
     // full block shape: source_uri + sequence print directly, the
     // remaining non-core columns become the Metadata JSON in column
