@@ -85,6 +85,13 @@ final class Loop private (spark: SparkSession, mode: Loop.Carry) {
   private var owned = Vector.empty[RDD[_]]
   private val newest = scala.collection.mutable.Map.empty[String, RDD[_]]
   private var pinned = List.empty[RDD[_]]
+  // the SQL metrics of each owned frame's plan, by frame. A job that was
+  // submitted before a lazy frame's checkpoint truncated its lineage
+  // still runs the frame's operators and reports their metrics; once the
+  // truncation drops the last driver reference to those metrics and
+  // they are garbage-collected, the driver discards the updates and
+  // logs "Failed to update accumulator" for every task.
+  private val metrics = scala.collection.mutable.Map.empty[Int, Seq[AnyRef]]
 
   /** Checkpoint a set-up frame the rounds read (an edge view, a degree
     * table); it is held until the loop returns.
@@ -146,6 +153,9 @@ final class Loop private (spark: SparkSession, mode: Loop.Carry) {
     val frame = try df.localCheckpoint(eager = false)
       finally sc.setLocalProperty(key, prev)
     owned :+= rdd(frame)
+    metrics(rdd(frame).id) =
+      df.queryExecution.executedPlan.collectWithSubqueries {
+        case p => p.metrics.values }.flatten
     if (eager) rdd(frame).count()
     frame
   }
@@ -162,7 +172,10 @@ final class Loop private (spark: SparkSession, mode: Loop.Carry) {
       if (live.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
     held.foreach(walk)
     val (kept, dead) = owned.partition(r => live(r.id))
-    dead.foreach(_.unpersist(blocking = true))
+    dead.foreach { r =>
+      r.unpersist(blocking = true)
+      metrics -= r.id
+    }
     owned = kept
   }
 

@@ -3104,26 +3104,71 @@ object GraphAnalytics {
     */
   def louvainOneLevel(edges: DataFrame, rounds: Int = 3,
                       pairsDistinct: Boolean = false,
-                      undirectedPairs: Boolean = false): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    require(rounds >= 1, "louvainOneLevel needs rounds >= 1")
-    val und = undView(edges, pairsDistinct, undirectedPairs,
-      _.localCheckpoint(false))
-    val deg = und.groupBy(col("a").as("id"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    // both orientations stored → row count IS 2m (and materializes und)
+                      undirectedPairs: Boolean = false): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
+      require(rounds >= 1, "louvainOneLevel needs rounds >= 1")
+      louvainLevel1(loop,
+          undView(edges, pairsDistinct, undirectedPairs, loop.pin(_)), rounds)
+        .select(col("id"), col("lbl").as("community"))
+    }
+
+  /** Level 1 of [[louvainOneLevel]] and [[louvainLevels]] in the
+    * caller's loop: the [[louvainMove]] phase over the undirected view
+    * with unit weights. Self-loops count in k_{i,C}, as in the
+    * oracle's `kic`. Returns the last round's (id, lbl) frame.
+    */
+  private def louvainLevel1(loop: Loop, und: DataFrame,
+                            rounds: Int): DataFrame = {
+    val deg = loop.pin(und.groupBy(col("a").as("id"))
+      .agg(count(lit(1)).as("deg")), eager = true)
+    // both orientations stored → row count IS 2m
     val twoM = und.count()
-    var labels = deg.select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(false)
     val nV = deg.count()
-    // the LPA broadcast pattern: every per-round join against O(V)
-    // state ships the STATE, never re-exchanges the stored edge index
-    // or the (node, community) candidate table
-    val small = nV <= Loop.BroadcastStateRows
+    loop.rounds(nV, twoM) {
+      louvainMove(loop, "louvain_move_round", 1,
+        und.select(col("a"), col("b"), lit(1L).as("w")), deg, twoM,
+        rounds, small = nV <= Loop.BroadcastStateRows, eager = false)
+    }
+  }
+
+  /** The weighted move phase every Louvain level runs: `rounds` rounds
+    * over the (a, b, w) frame `e` that k_{i,C} sums, the (id, deg)
+    * table and the total weight 2m, from the singleton partition.
+    * Returns the last round's (id, lbl) frame, carried under `tag` in a
+    * chain of its own per `level` (a deeper level's output still reads
+    * it).
+    *
+    * One round: the community mass `tot`; k_{i,C} with the STAY
+    * candidate riding the same aggregation as weight-0 rows (the own
+    * community is always a candidate, at k_{i,own∖i}); the exact
+    * integer score, in LONG while 2m ≤ 10⁹ (every term is bounded by
+    * (2m)², so it equals the DECIMAL(38,0) value, and a Decimal128
+    * multiply and compare cost most of a round), else DECIMAL(38,0);
+    * the (−score, lbl) argmax fold, which carries `la` so the update
+    * needs no join back against the labels; the md5 (id, round) parity
+    * that lets half the nodes move. The V-sized sides broadcast while
+    * `small`.
+    *
+    * CARRY POLICY, measured at sf0.1 on a 32-core host (fresh-JVM
+    * single-entry probes):
+    *  - `eager = false` (level 1): each round's frame materializes in
+    *    the next round's broadcast builds. One checkpoint job per round
+    *    was slower (`graph_louvain_deep` 13.5 → 18.4 s): at V-sized
+    *    frames the serial round barrier costs more than the duplicated
+    *    lazy builds save.
+    *  - `eager = true` (meta levels): the frame feeds three broadcast
+    *    builds of the next round (kic's b side, tot, la), and while it
+    *    is lazy each concurrent build re-ran the round's cand chain, 2-3
+    *    times per round.
+    *  - the last round is eager either way: the output reads a
+    *    materialized frame, so the loop releases the rest before it
+    *    returns.
+    */
+  private def louvainMove(loop: Loop, tag: String, level: Int,
+                          e: DataFrame, deg: DataFrame, twoM: Long,
+                          rounds: Int, small: Boolean,
+                          eager: Boolean): DataFrame = {
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // exact-integer score in LONG while it provably fits — identical
-    // values to the DECIMAL(38,0) path for 2m ≤ 10^9 (every term is
-    // bounded by (2m)²; see weightedMetaMove), far cheaper per row.
     val scoreExpr =
       if (twoM <= 1000000000L)
         expr(s"${twoM}L * kic - ka * (tot - IF(la = lbl, ka, 0L))")
@@ -3131,57 +3176,34 @@ object GraphAnalytics {
         expr(s"CAST(${twoM}L AS DECIMAL(38,0)) * kic" +
           " - CAST(ka AS DECIMAL(38,0))" +
           " * (tot - IF(la = lbl, ka, 0L))")
-    graft.core.Checkpoints.withLoopShuffle(edges.sparkSession,
-      nV, twoM) {
-      for (r <- 1 to rounds) {
-        // community degree mass under the current partition
-        val tot = labels.join(deg, Seq("id"))
-          .groupBy("lbl").agg(sum("deg").as("tot"))
-        // k_{i,C}: edges from i into each neighbor community, with the
-        // STAY candidate (r9) riding the SAME aggregation as 0-count
-        // rows (own community is always a candidate, at k_{i,own∖i} —
-        // 0 for a singleton — so a node with only negative-gain moves
-        // keeps its community instead of being forced to the
-        // least-bad neighbor); one exchange, not a union + re-agg
-        val cand0 = und
-          .join(bc(labels.select(col("id").as("b"), col("lbl"))), Seq("b"))
-          .select(col("a").as("id"), col("lbl"), lit(1L).as("cnt"))
-          .unionByName(labels.select(col("id"), col("lbl"),
-            lit(0L).as("cnt")))
-          .groupBy("id", "lbl").agg(sum("cnt").as("kic"))
-        val cand = cand0
-          .join(bc(tot), Seq("lbl"))
-          .join(bc(deg.select(col("id"), col("deg").as("ka"))), Seq("id"))
-          .join(bc(labels.select(col("id"), col("lbl").as("la"))), Seq("id"))
-          .select(col("id"), col("lbl"), col("la"), scoreExpr.as("score"))
-        // hash-parity move gate (r9): only half the nodes (portable
-        // md5 parity of (id, round)) adopt their argmax — the
-        // Jones-Plassmann-style schedule parallel Louvain uses to
-        // stop the synchronous two-node swap oscillation that plain
-        // simultaneous argmax produces on symmetric structures (a
-        // bridged pair would otherwise trade labels forever). `la`
-        // rides the argmax fold (constant per id), so the update
-        // needs no join back against the label table.
-        // LAZY round frame (r14, measured): an eager variant (one
-        // blocking materialization per round, superseded frame
-        // dropped) was tried for the concurrent-broadcast-build
-        // recomputation and REGRESSED the deep entry 13.5→18.4 s in
-        // fresh-JVM probes — the serial round barrier costs more than
-        // the duplicated lazy-chain builds save at this frame size.
-        val labels0 = cand
-          .groupBy("id")
-          .agg(min(struct((-col("score")).as("ns"), col("lbl").as("l"))).as("w"),
-            max(col("la")).as("la"))
-          .select(col("id"),
-            when(pmod(graft.pipeline.Sketches.hash32(
-              concat(col("id"), lit(s"#$r"))), lit(2L)) === lit(0L),
-              col("w.l"))
-              .otherwise(col("la")).as("lbl"))
-        graft.core.PlanTrace.round("louvain_move_round", labels0)
-        labels = labels0.localCheckpoint(false)
-      }
+    val chain = s"${tag}_$level"
+    var labels = loop.seed(chain, deg.select(col("id"), col("id").as("lbl")))
+    for (r <- 1 to rounds) {
+      val tot = labels.join(deg, Seq("id"))
+        .groupBy("lbl").agg(sum("deg").as("tot"))
+      val cand0 = e
+        .join(bc(labels.select(col("id").as("b"), col("lbl"))), Seq("b"))
+        .select(col("a").as("id"), col("lbl"), col("w").as("cnt"))
+        .unionByName(labels.select(col("id"), col("lbl"),
+          lit(0L).as("cnt")))
+        .groupBy("id", "lbl").agg(sum("cnt").as("kic"))
+      val cand = cand0
+        .join(bc(tot), Seq("lbl"))
+        .join(bc(deg.select(col("id"), col("deg").as("ka"))), Seq("id"))
+        .join(bc(labels.select(col("id"), col("lbl").as("la"))), Seq("id"))
+        .select(col("id"), col("lbl"), col("la"), scoreExpr.as("score"))
+      labels = loop.carry(tag, cand
+        .groupBy("id")
+        .agg(min(struct((-col("score")).as("ns"), col("lbl").as("l"))).as("w"),
+          max(col("la")).as("la"))
+        .select(col("id"),
+          when(pmod(graft.pipeline.Sketches.hash32(
+            concat(col("id"), lit(s"#$r"))), lit(2L)) === lit(0L),
+            col("w.l"))
+            .otherwise(col("la")).as("lbl")),
+        eager = eager || r == rounds, chain = chain)
     }
-    labels.select(col("id"), col("lbl").as("community"))
+    labels
   }
 
   /** DuckDB oracle for [[louvainOneLevel]] — the identical rounds
@@ -3265,24 +3287,26 @@ object GraphAnalytics {
       pairsDistinct = pairsDistinct, undirectedPairs = undirectedPairs,
       metaDriverMax = metaDriverMax, l1Precomputed = l1Precomputed)
 
-  /** FULL Blondel recursion (r10 — generalizes the r9 two-level pass):
-    * contract-then-move LEVELS until no meta-node moves or `maxLevels`
-    * is reached, the published algorithm's outer loop (Blondel et al.
-    * 2008 §2). Level k ≥ 3 contracts the LEVEL-(k−1) META GRAPH by its
-    * own move labels — meta-edge-scale work, never a second pass over
-    * the original edges — so a deep community hierarchy (billion-node
-    * web graphs) costs one E-scale contraction total plus
-    * geometrically-shrinking meta phases. Early exit is safe for the
-    * unrolled oracle: a level that moves nothing yields the identity
-    * mapping, and every subsequent unrolled level replays that
-    * identity (same meta graph, same parity schedule), so engine and
-    * oracle agree whether or not the engine kept looping.
+  /** FULL Blondel recursion: contract-then-move LEVELS until no
+    * meta-node moves or `maxLevels` is reached, the published
+    * algorithm's outer loop (Blondel et al. 2008 §2). Level k ≥ 3
+    * contracts the LEVEL-(k−1) META GRAPH by its own move labels —
+    * meta-edge-scale work, never a second pass over the original
+    * edges — so a deep community hierarchy (billion-node web graphs)
+    * costs one E-scale contraction total plus geometrically-shrinking
+    * meta phases. Early exit is safe for the unrolled oracle: a level
+    * that moves nothing yields the identity mapping, and every
+    * subsequent unrolled level replays that identity (same meta graph,
+    * same parity schedule), so engine and oracle agree whether or not
+    * the engine kept looping.
     *
-    * Each level's move phase carries the r9 stabilizers (STAY
+    * Every level runs [[louvainMove]]: the same stabilizers (STAY
     * candidate, md5 (id, round) hash-parity half-move gate) and the
     * same exact-integer score; the round parity is per (meta-id,
     * round) and deliberately level-independent, replayed identically
-    * by [[louvainLevelsSql]].
+    * by [[louvainLevelsSql]]. `l1Precomputed` (must be
+    * louvainOneLevel(same edges, rounds1)'s (id, community) output,
+    * typically the session-cached stored partition) skips level 1.
     */
   def louvainLevels(edges: DataFrame, rounds1: Int = 3,
                     roundsMeta: Int = 4,
@@ -3290,103 +3314,72 @@ object GraphAnalytics {
                     pairsDistinct: Boolean = false,
                     undirectedPairs: Boolean = false,
                     metaDriverMax: Long = 1000000L,
-                    l1Precomputed: Option[DataFrame] = None): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    require(rounds1 >= 1 && roundsMeta >= 1 && maxLevels >= 2,
-      "louvainLevels needs rounds1, roundsMeta >= 1 and maxLevels >= 2")
-    val parentCached = storedIndex(edges, undirectedPairs)
-    val und = undView(edges, pairsDistinct, undirectedPairs,
-      _.localCheckpoint(true))
-    // level 1 gets the ORIGINAL frame + flags: a derived select would
-    // lose the parent's storage level and force louvainOneLevel to
-    // re-materialize the E-sized undirected view a second time.
-    // `l1Precomputed` (must be louvainOneLevel(same edges, rounds1)'s
-    // (id, community) output, typically the session-cached stored
-    // partition) skips the level-1 chain entirely — the caller's frame
-    // is already persisted, so no re-checkpoint.
-    val l1 = l1Precomputed match {
-      case Some(pre) => pre.select(col("id"), col("community").as("c1"))
-      case None => louvainOneLevel(
-          if (parentCached) edges
-          else und.select(col("a").as("src"), col("b").as("dst")),
-          rounds = rounds1, pairsDistinct = pairsDistinct,
-          undirectedPairs = undirectedPairs ||
-            !parentCached) // und is already the symmetrized view
-        .select(col("id"), col("community").as("c1"))
-        .localCheckpoint(true)
-    }
-    // contraction (level 2): meta edge weight = count of
-    // (both-orientation) und rows between the two communities;
-    // self-loops (ca = cb) carry the intra-community mass, so Σw = 2m
-    // and wdeg(C) = Σ_{u∈C} deg(u). The ONE E-scale probe of the run.
-    // The V-sized (id, community) mapping broadcasts under the same
-    // 1M gate the meta phase uses (r11): the static planner sees a
-    // ~V-row side above the 10 MB auto threshold and plans TWO
-    // E-scale shuffle joins plus the groupBy shuffle — broadcasting
-    // cuts the contraction to map-side joins + one shuffle (isolated
-    // 3-iter warm median 14.2 → 11.7 s for the level-3 resume); past
-    // the gate the shuffle
-    // plan is the correct 100-TB shape and stands.
-    val l1Bc = l1.count() <= metaDriverMax
-    def bcL1(df: DataFrame): DataFrame = if (l1Bc) broadcast(df) else df
-    var metaE = und
-      .join(bcL1(l1.select(col("id").as("a"), col("c1").as("ca"))), Seq("a"))
-      .join(bcL1(l1.select(col("id").as("b"), col("c1").as("cb"))), Seq("b"))
-      .groupBy(col("ca").as("a"), col("cb").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .localCheckpoint(true)
-    // mapping: original id → community at the deepest finished level
-    var mapping = l1
-    var level = 2
-    var continueLoop = true
-    while (continueLoop) {
-      val (lbl, small) = weightedMetaMove(
-        edges.sparkSession, metaE, roundsMeta, metaDriverMax)
-      def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-      mapping = mapping
-        .join(bc(lbl.select(col("id").as("c1"), col("lbl").as("cnext"))),
-          Seq("c1"))
-        .select(col("id"), col("cnext").as("c1"))
-      level += 1
-      if (level > maxLevels) continueLoop = false
-      else {
+                    l1Precomputed: Option[DataFrame] = None): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
+      require(rounds1 >= 1 && roundsMeta >= 1 && maxLevels >= 2,
+        "louvainLevels needs rounds1, roundsMeta >= 1 and maxLevels >= 2")
+      val und = undView(edges, pairsDistinct, undirectedPairs, loop.pin(_))
+      // mapping: original id → community at the deepest finished level
+      var mapping = l1Precomputed match {
+        case Some(pre) => pre.select(col("id"), col("community").as("c1"))
+        case None => louvainLevel1(loop, und, rounds1)
+          .select(col("id"), col("lbl").as("c1"))
+      }
+      // contraction: meta edge weight = Σw between the two communities;
+      // self-loops (ca = cb) carry the intra-community mass, so Σw = 2m
+      // and wdeg(C) = Σ_{u∈C} deg(u). Without the broadcast of the
+      // id → community sides the static planner sees a ~V-row side
+      // above its 10 MB threshold and plans two E-scale shuffle joins.
+      def contract(e: DataFrame, comm: DataFrame, small: Boolean) = {
+        def side(end: String) = {
+          val s = comm.toDF(end, s"c$end")
+          if (small) broadcast(s) else s
+        }
+        loop.pin(e.join(side("a"), Seq("a")).join(side("b"), Seq("b"))
+          .groupBy(col("ca").as("a"), col("cb").as("b"))
+          .agg(sum("w").as("w")), eager = true)
+      }
+      // the level-2 contraction is the one E-scale probe of the run
+      var metaE = contract(und.select(col("a"), col("b"), lit(1L).as("w")),
+        mapping, mapping.count() <= Loop.BroadcastStateRows)
+      var level = 2
+      var moved = true
+      while (moved) {
+        val (lbl, small) = weightedMetaMove(loop, metaE, roundsMeta,
+          metaDriverMax, level)
+        val next = lbl.toDF("c1", "cnext")
+        mapping = mapping.join(if (small) broadcast(next) else next, Seq("c1"))
+          .select(col("id"), col("cnext").as("c1"))
         // fixpoint test: a level where NO meta node adopted a different
-        // community cannot enable further merges — stop. One tiny
-        // driver action on the meta-V-sized label table.
-        val moved = lbl.filter(col("id") =!= col("lbl")).limit(1).count() > 0
-        if (!moved) continueLoop = false
-        else {
-          // contract the META graph by its own labels — meta-scale only
-          metaE = metaE
-            .join(bc(lbl.select(col("id").as("a"), col("lbl").as("ca"))), Seq("a"))
-            .join(bc(lbl.select(col("id").as("b"), col("lbl").as("cb"))), Seq("b"))
-            .groupBy(col("ca").as("a"), col("cb").as("b"))
-            .agg(sum("w").as("w"))
-            .localCheckpoint(true)
+        // community cannot enable further merges. One tiny driver
+        // action on the meta-V-sized label table.
+        moved = level < maxLevels &&
+          lbl.filter(col("id") =!= col("lbl")).limit(1).count() > 0
+        if (moved) {
+          metaE = contract(metaE, lbl, small)
+          level += 1
         }
       }
+      mapping.select(col("id"), col("c1").as("community"))
     }
-    mapping.select(col("id"), col("c1").as("community"))
-  }
 
-  /** One weighted modularity-ascending move phase over a meta graph
-    * (a, b, w) — the loop body of [[louvainLevels]], with the r9
-    * driver finisher: a metadata-sized contracted graph (≤
+  /** One weighted move phase over a meta graph (a, b, w) — the loop
+    * body of [[louvainLevels]]. A metadata-sized contracted graph (≤
     * `metaDriverMax` meta-edges, the minimumSpanningForest convention)
-    * is collected once and the rounds run locally instead of paying
-    * ~5 tiny distributed stages × rounds of pure driver latency —
-    * identical semantics (exact integer score in BigInt, same
+    * is collected once and the rounds run on the driver instead of
+    * paying ~5 tiny distributed stages × rounds of pure driver latency
+    * — identical semantics (exact integer score in BigInt, same
     * tie-break, same (id, round) md5 parity), spec-pinned equal to the
-    * distributed fallback that runs past the gate. Returns the final
-    * (id, lbl) label table and whether it is broadcast-small.
+    * distributed [[louvainMove]] rounds that run past the gate, which
+    * exclude self-loops from k_{i,C} and keep their mass in the degree.
+    * Returns the final (id, lbl) label table and whether it is
+    * broadcast-small.
     */
-  private def weightedMetaMove(spark: org.apache.spark.sql.SparkSession,
-                               metaE: DataFrame, rounds: Int,
-                               metaDriverMax: Long): (DataFrame, Boolean) = {
-    // ONE fused size scan (r14): edge count (the driver-path gate) and
-    // total weight 2m ride the same job — and the V-meta degree table
-    // plus the label init are built only on the path that reads them
-    // (the driver finisher computes degrees locally; building mdeg's
-    // eager checkpoint before the gate was a wasted job there).
+  private def weightedMetaMove(loop: Loop, metaE: DataFrame, rounds: Int,
+                               metaDriverMax: Long,
+                               level: Int): (DataFrame, Boolean) = {
+    // ONE fused size scan: edge count (the driver-path gate) and total
+    // weight 2m; the degree table is built only on the path that reads it
     val szRow = metaE.agg(count(lit(1)), coalesce(sum("w"), lit(0L))).first()
     val nMetaE = szRow.getLong(0)
     val twoM = szRow.getLong(1)
@@ -3434,74 +3427,19 @@ object GraphAnalytics {
         }
         next.foreach { case (k, v) => lbl(k) = v }
       }
+      val spark = metaE.sparkSession
       import spark.implicits._
       (broadcast(lbl.toSeq.toDF("id", "lbl")), true)
     } else {
-      val mdeg = metaE.groupBy(col("a").as("id"))
-        .agg(sum("w").as("deg"))
-        .localCheckpoint(true)
-      var lbl2 = mdeg.select(col("id"), col("id").as("lbl"))
-        .localCheckpoint(false)
+      val mdeg = loop.pin(metaE.groupBy(col("a").as("id"))
+        .agg(sum("w").as("deg")), eager = true)
       val small = nMetaE <= 8000000L
-      def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-      // exact-integer score in LONG while it provably fits (r14): every
-      // term is bounded by 2m·kic and ka·tot ≤ (2m)², so for
-      // 2m ≤ 10^9 the LONG result equals the DECIMAL(38,0) one bit for
-      // bit (integer arithmetic, no overflow) at a fraction of the
-      // per-row cost — Decimal128 multiply/compare dominated the
-      // meta-round stages in the r14 JobProbe. Past the gate (a 100-TB
-      // graph) the DECIMAL path stands.
-      val scoreExpr =
-        if (twoM <= 1000000000L)
-          expr(s"${twoM}L * kic - ka * (tot - IF(la = lbl, ka, 0L))")
-        else
-          expr(s"CAST(${twoM}L AS DECIMAL(38,0)) * kic" +
-            " - CAST(ka AS DECIMAL(38,0))" +
-            " * (tot - IF(la = lbl, ka, 0L))")
-      for (r <- 1 to rounds) {
-        val tot = lbl2.join(mdeg, Seq("id"))
-          .groupBy("lbl").agg(sum("deg").as("tot"))
-        // stay rows ride the kic aggregation as weight-0 rows; `la`
-        // rides the argmax fold — same one-exchange shape as level 1
-        val cand0 = metaE.filter(col("a") =!= col("b"))
-          .join(bc(lbl2.select(col("id").as("b"), col("lbl"))), Seq("b"))
-          .select(col("a").as("id"), col("lbl"), col("w").as("cnt"))
-          .unionByName(lbl2.select(col("id"), col("lbl"),
-            lit(0L).as("cnt")))
-          .groupBy("id", "lbl").agg(sum("cnt").as("kic"))
-        val cand = cand0
-          .join(bc(tot), Seq("lbl"))
-          .join(bc(mdeg.select(col("id"), col("deg").as("ka"))), Seq("id"))
-          .join(bc(lbl2.select(col("id"), col("lbl").as("la"))), Seq("id"))
-          .select(col("id"), col("lbl"), col("la"), scoreExpr.as("score"))
-        // EAGER round frame on the DISTRIBUTED meta path (r14,
-        // re-measured): the round frame feeds THREE broadcast builds
-        // next round (kic's b-side, tot, la), and with a lazy
-        // checkpoint the concurrent builds raced the unfilled cache and
-        // re-executed the whole cand chain 2-3× per round — the r14
-        // JobProbe showed paired 50-80 executor-s duplicate stages
-        // every round. One blocking materialization removes the
-        // duplicates; the superseded frame drops immediately. (The r13
-        // eager experiment that regressed bundled louvainOneLevel's
-        // V-scale rounds too — the level-1 frames keep the lazy
-        // variant, see louvainOneLevel.)
-        val prev = lbl2
-        val lbl2Next = cand
-          .groupBy("id")
-          .agg(min(struct((-col("score")).as("ns"), col("lbl").as("l"))).as("w"),
-            max(col("la")).as("la"))
-          .select(col("id"),
-            when(pmod(graft.pipeline.Sketches.hash32(
-              concat(col("id"), lit(s"#$r"))), lit(2L)) === lit(0L),
-              col("w.l"))
-              .otherwise(col("la")).as("lbl"))
-        graft.core.PlanTrace.round("louvain_meta_round", lbl2Next)
-        lbl2 = lbl2Next.localCheckpoint(true)
-        graft.core.Checkpoints.drop(prev)
-      }
-      (lbl2, small)
+      (louvainMove(loop, "louvain_meta_round", level,
+        metaE.filter(col("a") =!= col("b")), mdeg, twoM, rounds, small,
+        eager = true), small)
     }
   }
+
   /** Driver-side replica of [[graft.pipeline.Sketches.hash32]]:
     * first 8 hex chars of md5(s) parsed base-16, + 1. Used by the
     * louvainTwoLevel driver finisher so its move parity is

@@ -555,6 +555,86 @@ class RandomizedInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("louvainOneLevel and louvainLevels equal an exact in-memory Louvain replay on random graphs") {
+    import graft.graph.GraphAnalytics
+    // the half-move gate: md5 hex of "id#round", first 8 digits + 1, even
+    def moves(id: String, r: Int) = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$id#$r".getBytes("UTF-8")).map(b => f"$b%02x").mkString
+      (java.lang.Long.parseLong(hex.take(8), 16) + 1L) % 2L == 0L
+    }
+    // one move phase from the singleton partition over weighted rows
+    // (a, b) -> w, both orientations. A node scores each neighbour
+    // community and its own (STAY) by 2m·k_{i,C} − k_i·(tot_C − [C own]·k_i)
+    // in BigInt; the best score wins, ties to the smaller community.
+    // Self-loop rows count in the degree always, in k_{i,C} only with
+    // `selfInKic` (level 1 counts them, as its oracle does; the meta
+    // levels keep them as intra-community mass only)
+    def movePhase(w: Map[(String, String), Long], rounds: Int,
+                  selfInKic: Boolean): Map[String, String] = {
+      val deg = w.groupMapReduce(_._1._1)(_._2)(_ + _)
+      val twoM = BigInt(w.values.sum)
+      var lbl = deg.keys.map(v => v -> v).toMap
+      for (r <- 1 to rounds) {
+        val tot = deg.groupMapReduce(d => lbl(d._1))(_._2)(_ + _)
+        val kic = w.toSeq.collect { case ((a, b), x) if selfInKic || a != b =>
+          (a, lbl(b)) -> x }.groupMapReduce(_._1)(_._2)(_ + _)
+        lbl = lbl.map { case (v, own) =>
+          val cands = kic.keys.collect { case (`v`, c) => c }.toSet + own
+          val best = cands.toSeq.map { c =>
+            val k = BigInt(deg(v))
+            val score = twoM * BigInt(kic.getOrElse((v, c), 0L)) -
+              k * (BigInt(tot(c)) - (if (c == own) k else BigInt(0)))
+            (-score, c)
+          }.min._2
+          v -> (if (moves(v, r)) best else own)
+        }
+      }
+      lbl
+    }
+    def contract(w: Map[(String, String), Long], comm: Map[String, String]) =
+      w.toSeq.map { case ((a, b), x) => (comm(a), comm(b)) -> x }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+    var metaMoved = false
+    for (seed <- Seq(71, 72, 73)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 36
+      def node() = f"n${rnd.nextInt(n)}%02d"
+      // duplicate pairs, both orientations and self-loops included
+      val base = (1 to 70).map(_ => (node(), node()))
+      val pairs = base ++ base.take(10) ++ base.slice(10, 20).map(_.swap) ++
+        (1 to 4).map { _ => val x = node(); (x, x) }
+      val und = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
+        .map(_ -> 1L).toMap
+      val (rounds1, roundsMeta) = (4, 4)
+      val l1 = movePhase(und, rounds1, selfInKic = true)
+      // level 2 and 3: contract by the previous level's communities and
+      // move again; no early exit (a level that moves nothing is the
+      // identity, so the engine's early exit must not change the result)
+      val l2 = movePhase(contract(und, l1), roundsMeta, selfInKic = false)
+      val l3 = movePhase(contract(contract(und, l1), l2), roundsMeta,
+        selfInKic = false)
+      metaMoved ||= l2.exists { case (c, d) => c != d }
+      val want1 = l1
+      val want3 = l1.map { case (v, c) => v -> l3(l2(c)) }
+      bothInputs(pairs) { (input, edges, undirected) =>
+        val got1 = GraphAnalytics.louvainOneLevel(edges, rounds1,
+            undirectedPairs = undirected)
+          .as[(String, String)].collect().toMap
+        assert(got1 === want1, s"louvainOneLevel, seed=$seed, $input")
+        for (gate <- Seq(1000000L, 0L)) {
+          val got3 = GraphAnalytics.louvainLevels(edges, rounds1, roundsMeta,
+              maxLevels = 3, undirectedPairs = undirected,
+              metaDriverMax = gate)
+            .as[(String, String)].collect().toMap
+          assert(got3 === want3,
+            s"louvainLevels, metaDriverMax=$gate, seed=$seed, $input")
+        }
+      }
+    }
+    assert(metaMoved, "no seed merges communities at level 2")
+  }
+
   test("pagerank family: mass bounds, rank ordering and exact integer replay") {
     import graft.graph.GraphAnalytics
     val scale = 1000000000000L

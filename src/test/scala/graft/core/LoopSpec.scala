@@ -113,6 +113,28 @@ class LoopSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a materialized lazy carry keeps its plan's metrics while the loop holds it") {
+    // a job submitted before the carry was materialized still reports
+    // these metrics, and the driver drops the updates of collected ones
+    def carried(loop: Loop, prev: DataFrame) = {
+      val next = step(prev)
+      val frame = loop.carry("loopspec_metrics", next)
+      val metric = next.queryExecution.executedPlan
+        .collectFirst { case p if p.metrics.nonEmpty => p.metrics.values.head }
+      (frame, new java.lang.ref.WeakReference[AnyRef](metric.get))
+    }
+    val out = Loop.run(spark, Loop.Lazy) { loop =>
+      val seed = loop.seed("loopspec_metrics", Seq(1L, 2L, 3L).toDF("x"))
+      val (r1, metric) = carried(loop, seed)
+      loop.settle(r1.count())
+      assert(materialized(r1))
+      for (_ <- 1 to 3) { System.gc(); Thread.sleep(50) }
+      assert(metric.get != null)
+      r1
+    }
+    assert(out.as[Long].collect().sorted === Array(2L, 3L, 4L))
+  }
+
   test("AQE and the shuffle width are restored after a normal exit and a mid-round exception") {
     val aqe = "spark.sql.adaptive.enabled"
     val width = "spark.sql.shuffle.partitions"

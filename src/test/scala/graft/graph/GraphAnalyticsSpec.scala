@@ -804,7 +804,15 @@ class GraphAnalyticsSpec extends SparkSpec {
       "greedyColoring" -> ((e, u) => GraphAnalytics.greedyColoring(e,
         rounds = 6, undirectedPairs = u)),
       "randomWalks" -> ((e, u) => GraphAnalytics.randomWalks(e, steps = 3,
-        pairsDistinct = u)))
+        pairsDistinct = u)),
+      "louvainOneLevel" -> ((e, u) => GraphAnalytics.louvainOneLevel(e,
+        rounds = 3, undirectedPairs = u)),
+      // the meta rounds on the driver, then distributed
+      "louvainLevels" -> ((e, u) => GraphAnalytics.louvainLevels(e,
+        rounds1 = 3, roundsMeta = 3, undirectedPairs = u)),
+      "louvainLevels at metaDriverMax = 0" -> ((e, u) =>
+        GraphAnalytics.louvainLevels(e, rounds1 = 3, roundsMeta = 3,
+          undirectedPairs = u, metaDriverMax = 0L)))
     try {
       for ((name, run) <- loops; (input, edges, u) <-
              Seq(("raw", raw, false), ("persisted", und, true))) {
@@ -812,7 +820,8 @@ class GraphAnalyticsSpec extends SparkSpec {
         val out = run(edges, u)
         // the output reads checkpointed frames only: the final frame of a
         // loop that converges on this graph before its last round, every
-        // round's state frame of the Luby loops
+        // round's state frame of the Luby loops, the last frame of each
+        // Louvain level
         val reads = out.queryExecution.analyzed
           .collect { case lr: LogicalRDD => lr.rdd }
         assert(reads.nonEmpty && reads.forall(_.isCheckpointed), s"$name on $input")

@@ -28,6 +28,17 @@ walks_step reads the stored pair view.
       graph_mis graph_coloring graph_walks"
   python3 tools/round_plans.py /tmp/rounds3
 
+The msf_*, louvain_move_round_* and louvain_meta_round_* references are
+captures on the sf0.1 fixture: at sf0.01 MSF and the Louvain meta levels
+run on the driver and trace no rounds. Compare only those files; the
+components_* rounds this run writes come from MSF's contraction, not
+from the sf0.01 graph_components_fresh references.
+
+  SPARK_DRIVER_MEM=6g SPARK_GRAFT_SF_DIR=path/to/sf0.1 \
+      SPARK_GRAFT_PLAN_TRACE=/tmp/rounds4 sbt "runMain \
+      graft.tools.PlanAudit graph_msf_fresh graph_louvain_deep"
+  rm /tmp/rounds4/components_*; python3 tools/round_plans.py /tmp/rounds4
+
 Every file in the capture directory is compared with the reference file
 of the same name. Ignored: plan node ids, expression ids (`#123`),
 `Statistics(...)` annotations, `plan_id`s, RDD ids and source call sites
