@@ -27,7 +27,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * tag: k-core carries its degree table and its edge set side by side,
   * and a per-round peeled layer; components alternates its min and
   * jump frames in one chain, each superseding the other; hits keeps
-  * two chains because its output reads the newest of both. It holds
+  * two chains because its output reads the newest of both. A kernel
+  * run inside another loop's round nests its chains under one of the
+  * caller's, as `<chain>/<name>`: the caller's next frame of `<chain>`
+  * supersedes them too, so the caller owns them (MSF's contraction
+  * runs the components kernel under its own chain). It holds
   * the newest frame of every chain and every pinned frame. At each
   * release point — an eager [[carry]], after its checkpoint job, and
   * [[settle]], after its action — every other frame is released
@@ -107,7 +111,7 @@ final class Loop private (spark: SparkSession, mode: Loop.Carry) {
     */
   def seed(chain: String, df: DataFrame): DataFrame = {
     val frame = checkpoint(df, eagerByDefault)
-    newest(chain) = rdd(frame)
+    hold(chain, frame)
     frame
   }
 
@@ -124,7 +128,7 @@ final class Loop private (spark: SparkSession, mode: Loop.Carry) {
             chain: String = ""): DataFrame = {
     PlanTrace.round(tag, next)
     val frame = checkpoint(next, eager)
-    newest(if (chain.isEmpty) tag else chain) = rdd(frame)
+    hold(if (chain.isEmpty) tag else chain, frame)
     if (eager) release(newest.values ++ pinned)
     frame
   }
@@ -158,6 +162,14 @@ final class Loop private (spark: SparkSession, mode: Loop.Carry) {
         case p => p.metrics.values }.flatten
     if (eager) rdd(frame).count()
     frame
+  }
+
+  /** Make `frame` the newest of `chain`, superseding the chains nested
+    * under it.
+    */
+  private def hold(chain: String, frame: DataFrame): Unit = {
+    newest.filterInPlace((c, _) => !c.startsWith(chain + "/"))
+    newest(chain) = rdd(frame)
   }
 
   private def rdd(frame: DataFrame): RDD[_] =

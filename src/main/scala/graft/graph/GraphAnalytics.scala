@@ -1,8 +1,9 @@
 package graft.graph
 
-import graft.core.Loop
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.{Loop, UnionFind}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Whole-graph analytics beyond the reference's traversal surface —
@@ -536,92 +537,102 @@ object GraphAnalytics {
   def connectedComponents(edges: DataFrame, rounds: Int = 6,
                           pairsDistinct: Boolean = false,
                           undirectedPairs: Boolean = false): DataFrame =
-    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
-      // both orientations, NOT deduped: min-propagation is idempotent
-      // over duplicate edges (unlike k-core's degree counts), so the 2|E|
-      // dedup shuffle would buy nothing — the msgs groupBy folds dupes.
-      val und0raw = if (undirectedPairs)
-        edges.select(col("src").as("a"), col("dst").as("b"))
-      else {
-        val pairs0 =
-          if (pairsDistinct) edges.select(col("src"), col("dst"))
-          else edges.select(col("src"), col("dst")).distinct()
-        pairs0.select(col("src").as("a"), col("dst").as("b"))
-          .union(pairs0.select(col("dst").as("a"), col("src").as("b")))
-      }
-      val und0 = if (storedIndex(edges, undirectedPairs)) und0raw
-        else loop.pin(und0raw)
-      val init = loop.seed("components",
-        und0.select(col("a").as("id")).distinct().withColumn("lbl", col("id")))
-      // the single up-front action: sizes the broadcast decision (and
-      // materializes und/init)
-      val nV = init.count()
-      val small = nV <= Loop.BroadcastStateRows
-      // non-broadcast path: hash-partition the edge set by the probe side
-      // once, so per-round joins exchange only the O(V) label table
-      val und = if (small) und0 else loop.pin(und0.repartition(col("a")))
-      // DELTA propagation: only nodes whose label CHANGED last round send
-      // messages this round. Labels are monotone non-increasing (both the
-      // neighbor-min and the jump only shrink them), so an unchanged
-      // neighbor's label was already folded into v's min in the round
-      // after it last changed — re-sending it can never lower anything.
-      // By induction the per-round states are IDENTICAL to the
-      // full-message version (which is what the unrolled oracle replays);
-      // what changes is the cost: late rounds send only the convergence
-      // tail (measured at sf0.1: round 4 touches 3k of 186k nodes), and
-      // on a 100-TB graph the O(log diameter) tail rounds become nearly
-      // free instead of re-shuffling E-sized votes. A round with zero
-      // changes IS the fixpoint — every later round is a no-op, so the
-      // loop exits early with the oracle-identical state.
-      // FUSED round frames (r6): the old round materialized THREE eager
-      // checkpoints (min-agg m, jumped, nextChanged) — 3 persist jobs +
-      // a count per round, and the round's fixed job overhead, not its
-      // shuffles, dominated the bench. Now the previous label rides the
-      // min-agg union as a third column (label rows carry prev = own lbl,
-      // message rows carry prev = NULL; max(prev) recovers it since every
-      // node has exactly one label row), so the pointer jump + changed
-      // filter become ONE cheap join over the min-agg frame. m is still
-      // checkpointed — the jump reads it from BOTH sides, and feeding a
-      // lazy m into a broadcast build + the main pass would run the
-      // E-sized message aggregation twice per round (measured: the two
-      // copies were 0.5 s + 0.8 s of a 1.6 s round).
-      val lblType = init.schema("lbl").dataType
-      var labels = init
-      var changed = init // round 1: every node is fresh
-      var converged = false
-      // per-round m/nf frames are V-sized, the round-1 message shuffle
-      // is E-scale — size from both (und is materialized by init's count)
-      loop.rounds(nV, und.count()) {
-        for (_ <- 1 to rounds if !converged) {
-          val chA = changed.withColumnRenamed("id", "a")
-          val msgs = und.join(if (small) broadcast(chA) else chA, Seq("a"))
-            .select(col("b").as("id"), col("lbl"))
-          // LAZY on the broadcast path (r14): the jump join's broadcast
-          // build (mSide's executeCollect — its own job) necessarily runs
-          // BEFORE the probe stage, so it materializes m's cache and the
-          // probe reads it — sequential consumers, no duplicate compute.
-          // The shuffled big-V path keeps the eager checkpoint: there both
-          // jump sides are independent shuffle-map stages that would race
-          // on an unmaterialized frame.
-          val m = loop.carry("components_min_round",
-            labels.select(col("id"), col("lbl"), col("lbl").as("prev"))
-              .unionByName(msgs.withColumn("prev", lit(null).cast(lblType)))
-              .groupBy("id").agg(min("lbl").as("lbl"), max("prev").as("prev")),
-            eager = !small, chain = "components")
-          // every label value is a node id with its own row in m → inner
-          // join is total; l'(v) = l(l(v))
-          val mSide = m.select(col("id").as("lbl"), col("lbl").as("lbl2"))
-          val nf = loop.carry("components_jump_round",
-            m.join(if (small) broadcast(mSide) else mSide, Seq("lbl"))
-              .select(col("id"), col("lbl2").as("lbl"), col("prev")),
-            chain = "components")
-          converged = loop.settle(nf.filter(col("lbl") =!= col("prev")).count() == 0L)
-          labels = nf.select("id", "lbl")
-          changed = nf.filter(col("lbl") =!= col("prev")).select("id", "lbl")
-        }
-      }
-      labels.select(col("id"), col("lbl").as("component"))
+    Loop.run(edges.sparkSession, Loop.Lazy)(
+      components(_, "components", edges, rounds, pairsDistinct, undirectedPairs))
+
+  /** The [[connectedComponents]] rounds in the caller's loop, with the
+    * labels carried in `chain` and the edge view in `<chain>_und`; a
+    * caller that runs it once per round of its own nests `chain` under
+    * one of its chains ([[Loop]]). Returns (id, component).
+    */
+  private def components(loop: Loop, chain: String, edges: DataFrame,
+                         rounds: Int, pairsDistinct: Boolean,
+                         undirectedPairs: Boolean): DataFrame = {
+    // both orientations, NOT deduped: min-propagation is idempotent
+    // over duplicate edges (unlike k-core's degree counts), so the 2|E|
+    // dedup shuffle would buy nothing — the msgs groupBy folds dupes.
+    val und0raw = if (undirectedPairs)
+      edges.select(col("src").as("a"), col("dst").as("b"))
+    else {
+      val pairs0 =
+        if (pairsDistinct) edges.select(col("src"), col("dst"))
+        else edges.select(col("src"), col("dst")).distinct()
+      pairs0.select(col("src").as("a"), col("dst").as("b"))
+        .union(pairs0.select(col("dst").as("a"), col("src").as("b")))
     }
+    val und0 = if (storedIndex(edges, undirectedPairs)) und0raw
+      else loop.seed(s"${chain}_und", und0raw)
+    val init = loop.seed(chain,
+      und0.select(col("a").as("id")).distinct().withColumn("lbl", col("id")))
+    // the single up-front action: sizes the broadcast decision (and
+    // materializes und/init)
+    val nV = init.count()
+    val small = nV <= Loop.BroadcastStateRows
+    // non-broadcast path: hash-partition the edge set by the probe side
+    // once, so per-round joins exchange only the O(V) label table
+    val und = if (small) und0 else loop.seed(s"${chain}_und", und0.repartition(col("a")))
+    // DELTA propagation: only nodes whose label CHANGED last round send
+    // messages this round. Labels are monotone non-increasing (both the
+    // neighbor-min and the jump only shrink them), so an unchanged
+    // neighbor's label was already folded into v's min in the round
+    // after it last changed — re-sending it can never lower anything.
+    // By induction the per-round states are IDENTICAL to the
+    // full-message version (which is what the unrolled oracle replays);
+    // what changes is the cost: late rounds send only the convergence
+    // tail (measured at sf0.1: round 4 touches 3k of 186k nodes), and
+    // on a 100-TB graph the O(log diameter) tail rounds become nearly
+    // free instead of re-shuffling E-sized votes. A round with zero
+    // changes IS the fixpoint — every later round is a no-op, so the
+    // loop exits early with the oracle-identical state.
+    // FUSED round frames (r6): the old round materialized THREE eager
+    // checkpoints (min-agg m, jumped, nextChanged) — 3 persist jobs +
+    // a count per round, and the round's fixed job overhead, not its
+    // shuffles, dominated the bench. Now the previous label rides the
+    // min-agg union as a third column (label rows carry prev = own lbl,
+    // message rows carry prev = NULL; max(prev) recovers it since every
+    // node has exactly one label row), so the pointer jump + changed
+    // filter become ONE cheap join over the min-agg frame. m is still
+    // checkpointed — the jump reads it from BOTH sides, and feeding a
+    // lazy m into a broadcast build + the main pass would run the
+    // E-sized message aggregation twice per round (measured: the two
+    // copies were 0.5 s + 0.8 s of a 1.6 s round).
+    val lblType = init.schema("lbl").dataType
+    var labels = init
+    var changed = init // round 1: every node is fresh
+    var converged = false
+    // per-round m/nf frames are V-sized, the round-1 message shuffle
+    // is E-scale — size from both (und is materialized by init's count)
+    loop.rounds(nV, und.count()) {
+      for (_ <- 1 to rounds if !converged) {
+        val chA = changed.withColumnRenamed("id", "a")
+        val msgs = und.join(if (small) broadcast(chA) else chA, Seq("a"))
+          .select(col("b").as("id"), col("lbl"))
+        // LAZY on the broadcast path (r14): the jump join's broadcast
+        // build (mSide's executeCollect — its own job) necessarily runs
+        // BEFORE the probe stage, so it materializes m's cache and the
+        // probe reads it — sequential consumers, no duplicate compute.
+        // The shuffled big-V path keeps the eager checkpoint: there both
+        // jump sides are independent shuffle-map stages that would race
+        // on an unmaterialized frame.
+        val m = loop.carry("components_min_round",
+          labels.select(col("id"), col("lbl"), col("lbl").as("prev"))
+            .unionByName(msgs.withColumn("prev", lit(null).cast(lblType)))
+            .groupBy("id").agg(min("lbl").as("lbl"), max("prev").as("prev")),
+          eager = !small, chain = chain)
+        // every label value is a node id with its own row in m → inner
+        // join is total; l'(v) = l(l(v))
+        val mSide = m.select(col("id").as("lbl"), col("lbl").as("lbl2"))
+        val nf = loop.carry("components_jump_round",
+          m.join(if (small) broadcast(mSide) else mSide, Seq("lbl"))
+            .select(col("id"), col("lbl2").as("lbl"), col("prev")),
+          chain = chain)
+        converged = loop.settle(nf.filter(col("lbl") =!= col("prev")).count() == 0L)
+        labels = nf.select("id", "lbl")
+        changed = nf.filter(col("lbl") =!= col("prev")).select("id", "lbl")
+      }
+    }
+    labels.select(col("id"), col("lbl").as("component"))
+  }
 
   /** Minimum spanning forest by Borůvka's algorithm, deterministic:
     * edge "weights" are totally ordered as (w, a, b), which makes the
@@ -629,9 +640,7 @@ object GraphAnalytics {
     * the same order (RandomizedInvariantsSpec pins that equivalence).
     * Per round, every component selects its minimum outgoing edge
     * (struct-min partial agg — no per-component sort), selected edges
-    * join the forest, and touched components contract via
-    * [[connectedComponents]] over the component graph (which is ≤ V/2
-    * nodes after the first round and shrinks geometrically).
+    * join the forest, and touched components contract.
     *
     * Scale shape: per round one edges⋈labels equi-join + one O(V)
     * struct-min, then contraction over the META-graph (one chosen edge
@@ -641,270 +650,199 @@ object GraphAnalytics {
     * metadata scale, exactly like Mvcc's partition offsets — a dozen
     * distributed jobs to merge a few thousand labels is pure
     * overhead); above that, the distributed pointer-jumping
-    * [[connectedComponents]] contracts it. Borůvka halves component
-    * count per round → `rounds` = O(log V); early exit when no
-    * crossing edges remain.
+    * [[components]] kernel contracts it inside this loop. Borůvka
+    * halves component count per round → `rounds` = O(log V); early
+    * exit when no crossing edges remain.
     *
     * No DuckDB oracle — MSF needs iterated contraction, which SQL
     * can't replay faithfully; verification is the spec's Kruskal
     * equivalence on random graphs (same strategy a native engine
     * would use).
     *
-    * Driver tail (r7): once the contracted meta-graph has ≤
-    * `driverTailMax` crossing edges it is COLLECTED and finished with
-    * one driver-side Kruskal — the same metadata-scale argument as the
-    * `metaDriverMax` union-find gate (≤1M five-field rows ≈ tens of MB, the same order as the `metaDriverMax` pair collect;
-    * a geometric tail of 4+ distributed rounds at ~5 jobs each to
-    * merge that is pure scheduling overhead). The MSF is UNIQUE under
-    * the (w, a, b) total order, so finishing with a different
-    * algorithm (Kruskal vs more Borůvka rounds) cannot change the
-    * result. At 100 TB the early E-scale rounds still run distributed;
-    * Borůvka's ≥2× per-round component shrink guarantees the tail is
-    * reached in O(log V) rounds. Pass `driverTailMax = 0` to force the
-    * all-rounds distributed path (specs exercise both).
+    * Driver tail: once the contracted meta-graph has ≤ `driverTailMax`
+    * crossing edges it is COLLECTED and finished with one driver-side
+    * Kruskal — the same metadata-scale argument as the `metaDriverMax`
+    * gate (≤1M five-field rows ≈ tens of MB; a geometric tail of 4+
+    * distributed rounds at ~5 jobs each to merge that is pure
+    * scheduling overhead). The MSF is UNIQUE under the (w, a, b) total
+    * order, and the driver paths compare ids and weights as Spark does
+    * ([[UnionFind.SqlOrder]]), so finishing with a different algorithm
+    * (Kruskal vs more Borůvka rounds) cannot change the result. At
+    * 100 TB the early E-scale rounds still run distributed; Borůvka's
+    * ≥2× per-round component shrink guarantees the tail is reached in
+    * O(log V) rounds. Pass `driverTailMax = 0` to force the all-rounds
+    * distributed path (specs exercise both).
+    *
+    * Every round's chosen frame is a carry in a chain of its own (the
+    * forest reads all of them) and the contracted graph one chain; both
+    * are eager: the chosen count and the crossing count are their
+    * rounds' actions.
     *
     * Returns forest edges (a, b, w) with a < b.
     */
   def minimumSpanningForest(edges: DataFrame, rounds: Int = 8,
                             metaDriverMax: Long = 1000000L,
                             canonicalInput: Boolean = false,
-                            driverTailMax: Long = 1000000L): DataFrame = graft.core.Checkpoints.withoutAqe(edges.sparkSession) {
-    // canonical undirected edge list: a < b, min weight per pair.
-    // `canonicalInput` lets a caller that KNOWS its pairs are already
-    // unique per undirected pair (e.g. a stored distinct edge index of
-    // a DAG with no reverse edges) skip the one dedup groupBy + its
-    // checkpoint — on such input the agg is row-preserving, a pure
-    // E-scale shuffle for nothing.
-    val canonRaw = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"), col("w"))
-      .filter(col("a") =!= col("b"))
-    val canon =
-      if (canonicalInput) {
-        // canonical input still MATERIALIZES once unless the caller's
-        // frame is already persisted: the canonical projection may sit
-        // on expensive per-row expressions (graph_msf packs string ids
-        // into checked LONGs here), and without a checkpoint EVERY
-        // consumer re-executes them — measured at sf0.1 (r14 JobProbe):
-        // round-1 chosen burned 334 executor-s, ~320 of it CPU,
-        // because the size scan, the round-1 struct-min (two scans via
-        // the union) and the contraction probe each re-packed the full
-        // edge list. One eager E-sized checkpoint (3 LONG columns)
-        // replaces all of that with cache reads.
-        if (edges.storageLevel ==
-            org.apache.spark.storage.StorageLevel.NONE)
-          canonRaw.localCheckpoint(true)
-        else canonRaw
-      }
-      else canonRaw.groupBy("a", "b").agg(min("w").as("w"))
-        .localCheckpoint(true)
-    // TRUE Borůvka contraction: after each round the graph is
-    // re-expressed over component labels — (ca, cb) meta-endpoints with
-    // the original endpoints (oa, ob) carried so forest edges stay
-    // real. Only the lightest edge between each component pair
-    // survives contraction (any heavier parallel edge closes a
-    // 2-cycle once contracted — cycle property — so it can never join
-    // the MSF). The working set therefore shrinks geometrically:
-    // round 1 touches E, later rounds touch the meta-graph only.
-    var live = canon.select(col("a").as("ca"), col("b").as("cb"),
-      col("w"), col("a").as("oa"), col("b").as("ob"))
-    var forest = canon.limit(0)
-    var r = 0
-    var crossing = -1L // unknown before the first materialization
-    // the chosen table is ≤ V rows (one minimal edge per component)
-    // but round-1 chooseMin and the contraction groupBy shuffle
-    // edge-scale inputs whose combine only pays off on sparse graphs —
-    // size from both V and E. Both sizes come from ONE fused scan
-    // (r7; was a count + an O(E) distinct+count = two jobs, ~3 s cold
-    // at sf0.1): count is exact; V is bounded by the sum of per-side
-    // approx distincts (≤2× over when most nodes appear on both
-    // sides) — sizing only needs the magnitude, and withLoopShuffle
-    // rounds to a partition count anyway.
-    val sizeRow = canon.agg(count(lit(1)), approx_count_distinct(col("a")),
-      approx_count_distinct(col("b"))).head()
-    val nEdges = sizeRow.getLong(0)
-    val nNodes = math.min(sizeRow.getLong(1) + sizeRow.getLong(2),
-      2 * nEdges)
-    // shared by the driver-tail and the total-order forest assembly:
-    // deterministic cross-type compare for the generic id column
-    val anyOrd: Ordering[Any] = {
-      case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-      case (x: Int, y: Int) => Integer.compare(x, y)
-      case (x: Double, y: Double) => java.lang.Double.compare(x, y)
-      case (x: String, y: String) => x.compareTo(y)
-      case (x, y) => x.toString.compareTo(y.toString)
-    }
-    // Kruskal over a collected meta-graph under the global (w, oa, ob)
-    // total order — the driver tail's finisher. Returns the chosen
-    // (oa, ob, w) rows as a frame in the live schema's id/w types.
-    def kruskalTail(rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-      val parent = scala.collection.mutable.Map.empty[Any, Any]
-      def find(x: Any): Any = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r0 = find(p); parent(x) = r0; r0 }
-      }
-      val ordered = rows.sortWith { (x, y) =>
-        val c = anyOrd.compare(x.get(2), y.get(2)) // w at ordinal 2
-        if (c != 0) c < 0
-        else {
-          val c2 = anyOrd.compare(x.get(3), y.get(3)) // oa
-          if (c2 != 0) c2 < 0 else anyOrd.compare(x.get(4), y.get(4)) < 0
-        }
-      }
-      val picked = ordered.flatMap { row =>
-        val (ca, cb) = (row.get(0), row.get(1))
-        val (ra, rb) = (find(ca), find(cb))
-        if (ra == rb) None
-        else { parent(ra) = rb
-          Some(org.apache.spark.sql.Row(row.get(3), row.get(4), row.get(2))) }
-      }
+                            driverTailMax: Long = 1000000L): DataFrame =
+    Loop.run(edges.sparkSession, Loop.Lazy) { loop =>
       val spark = edges.sparkSession
-      val lt = live.schema
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(picked.toIndexedSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("a", lt("oa").dataType),
-          org.apache.spark.sql.types.StructField("b", lt("ob").dataType),
-          org.apache.spark.sql.types.StructField("w", lt("w").dataType))))
-    }
-    // metadata-scale input: no distributed rounds at all, one Kruskal
-    if (driverTailMax > 0 && nEdges <= driverTailMax) {
-      val rows = live.select("ca", "cb", "w", "oa", "ob").collect()
-      forest = forest.unionByName(kruskalTail(rows))
-      crossing = 0
-    }
-    graft.core.Checkpoints.withLoopShuffle(edges.sparkSession, nNodes,
-      nEdges) {
-    while (r < rounds && crossing != 0) {
-      r += 1
-      // each component's minimal incident edge under the (w, oa, ob)
-      // total order — seen from both endpoints. An edge chosen by BOTH
-      // its components appears twice; that duplicate is deliberately
-      // NOT dropped here (a per-round distinct is an extra shuffle
-      // stage inside every materialization) — union-find and the
-      // contraction are duplicate-insensitive, and the forest dedups
-      // ONCE at assembly.
-      val e = struct(col("w"), col("oa"), col("ob"), col("ca"), col("cb"))
-      val ch = live.select(col("ca").as("comp"), e.as("e"))
-        .union(live.select(col("cb").as("comp"), e.as("e")))
-        .groupBy("comp").agg(min("e").as("e"))
-        .select(col("e.w").as("w"), col("e.oa").as("oa"),
-          col("e.ob").as("ob"), col("e.ca").as("ca"), col("e.cb").as("cb"))
-      graft.core.PlanTrace.round("msf_chosen_round", ch)
-      val chosen = ch.localCheckpoint(true)
-      forest = forest.unionByName(
-        chosen.select(col("oa").as("a"), col("ob").as("b"), col("w")))
-      // nChosen counts CHOOSING components (a doubly-chosen edge rides
-      // twice since the per-round distinct was dropped), so it is up to
-      // 2x the distinct chosen edges; using it for the metaDriverMax
-      // gate is therefore CONSERVATIVE — overcounting can only push the
-      // merge to the distributed path early, never collect too much.
-      val nChosen = chosen.count() // materialized: free
-      if (nChosen == 0) crossing = 0
-      else {
-        // merged-set relabeling (set -> its MIN member, the same
-        // labeling connectedComponents yields). The chosen meta-graph
-        // has ≤ one edge per component; while it is metadata-sized it
-        // is union-found on the driver (like Mvcc's partition offsets
-        // — a dozen distributed jobs to merge a few thousand labels is
-        // pure overhead); past metaDriverMax the distributed
-        // pointer-jumping CC takes over.
-        val mapping =
-          if (nChosen <= metaDriverMax) {
-            // id-type-generic (String ids OR a caller's packed LONG
-            // encoding — narrow integer keys make every loop shuffle
-            // cheaper, see graph_msf's entry): rows collect as Any,
-            // the representative choice just needs a DETERMINISTIC
-            // order, and the mapping frame is rebuilt with the input's
-            // own id type.
-            val es = chosen.select("ca", "cb")
-              .collect().map(x => (x.get(0), x.get(1)))
-            val parent = scala.collection.mutable.Map.empty[Any, Any]
-            def find(x: Any): Any = {
-              val p = parent.getOrElse(x, x)
-              if (p == x) x else { val r0 = find(p); parent(x) = r0; r0 }
+      // canonical undirected edge list: a < b, min weight per pair.
+      // `canonicalInput` lets a caller that KNOWS its pairs are already
+      // unique per undirected pair (e.g. a stored distinct edge index of
+      // a DAG with no reverse edges) skip the one dedup groupBy — on
+      // such input the agg is row-preserving, a pure E-scale shuffle for
+      // nothing.
+      val canonRaw = edges
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"), col("w"))
+        .filter(col("a") =!= col("b"))
+      // canonical input still MATERIALIZES once unless the caller's
+      // frame is already persisted: the canonical projection may sit on
+      // expensive per-row expressions (graph_msf packs string ids into
+      // checked LONGs here), and without a copy EVERY consumer
+      // re-executes them — at sf0.1 the size scan, the round-1
+      // struct-min (two scans via the union) and the contraction probe
+      // each re-packed the full edge list, ~320 executor-s of CPU.
+      val canon =
+        if (canonicalInput && edges.storageLevel != StorageLevel.NONE) canonRaw
+        else loop.pin(if (canonicalInput) canonRaw
+          else canonRaw.groupBy("a", "b").agg(min("w").as("w")), eager = true)
+      // TRUE Borůvka contraction: after each round the graph is
+      // re-expressed over component labels — (ca, cb) meta-endpoints with
+      // the original endpoints (oa, ob) carried so forest edges stay
+      // real. Only the lightest edge between each component pair
+      // survives contraction (any heavier parallel edge closes a
+      // 2-cycle once contracted — cycle property — so it can never join
+      // the MSF). The working set therefore shrinks geometrically:
+      // round 1 touches E, later rounds touch the meta-graph only.
+      var live = canon.select(col("a").as("ca"), col("b").as("cb"),
+        col("w"), col("a").as("oa"), col("b").as("ob"))
+      // an empty local relation: the forest names no canon frame, so the
+      // loop releases canon when it returns
+      var forest = spark.createDataFrame(java.util.List.of[Row](), canon.schema)
+      var (r, crossing) = (0, -1L) // crossing: unknown before round 1
+      // the chosen table is ≤ V rows (one minimal edge per component)
+      // but round-1 chooseMin and the contraction groupBy shuffle
+      // edge-scale inputs whose combine only pays off on sparse graphs —
+      // size from both V and E, from ONE fused scan: count is exact; V
+      // is bounded by the sum of per-side approx distincts (≤2× over
+      // when most nodes appear on both sides) — sizing only needs the
+      // magnitude, and the loop width rounds to a partition count anyway.
+      val sizeRow = canon.agg(count(lit(1)), approx_count_distinct(col("a")),
+        approx_count_distinct(col("b"))).head()
+      val nEdges = sizeRow.getLong(0)
+      val nNodes = math.min(sizeRow.getLong(1) + sizeRow.getLong(2),
+        2 * nEdges)
+      // id-type-generic (String ids OR a caller's packed LONG encoding —
+      // narrow integer keys make every loop shuffle cheaper, see
+      // graph_msf's entry): driver rows collect as Any, and frames built
+      // from them take the input's own id type.
+      val idType = canon.schema("a").dataType
+      def driverFrame(rows: Seq[Row], slices: Int,
+                      cols: (String, DataType)*): DataFrame =
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, slices),
+          StructType(cols.map { case (n, t) => StructField(n, t) }))
+      // Kruskal over a collected meta-graph under the global (w, oa, ob)
+      // total order — the driver tail's finisher
+      def kruskalTail(): Unit = {
+        val sets = new UnionFind[Any]()(UnionFind.SqlOrder)
+        val picked = live.select("ca", "cb", "w", "oa", "ob").collect()
+          .sortBy(x => (x.get(2), x.get(3), x.get(4)))(Ordering.Tuple3(
+            UnionFind.SqlOrder, UnionFind.SqlOrder, UnionFind.SqlOrder))
+          .collect { case x if sets.union(x.get(0), x.get(1)) =>
+            Row(x.get(3), x.get(4), x.get(2)) }
+        forest = forest.unionByName(driverFrame(picked.toIndexedSeq, 1,
+          "a" -> idType, "b" -> idType, "w" -> canon.schema("w").dataType))
+        crossing = 0
+      }
+      // metadata-scale input: no distributed rounds at all, one Kruskal
+      if (driverTailMax > 0 && nEdges <= driverTailMax) kruskalTail()
+      loop.rounds(nNodes, nEdges) {
+        while (r < rounds && crossing != 0) {
+          r += 1
+          // each component's minimal incident edge under the (w, oa, ob)
+          // total order — seen from both endpoints. An edge chosen by
+          // BOTH its components appears twice; that duplicate is
+          // deliberately NOT dropped here (a per-round distinct is an
+          // extra shuffle stage inside every materialization) —
+          // union-find and the contraction are duplicate-insensitive, and
+          // the forest dedups ONCE at assembly.
+          val e = struct(col("w"), col("oa"), col("ob"), col("ca"), col("cb"))
+          val chosen = loop.carry("msf_chosen_round",
+            live.select(col("ca").as("comp"), e.as("e"))
+              .union(live.select(col("cb").as("comp"), e.as("e")))
+              .groupBy("comp").agg(min("e").as("e"))
+              .select(col("e.w").as("w"), col("e.oa").as("oa"),
+                col("e.ob").as("ob"), col("e.ca").as("ca"), col("e.cb").as("cb")),
+            eager = true, chain = s"msf_chosen_$r")
+          forest = forest.unionByName(
+            chosen.select(col("oa").as("a"), col("ob").as("b"), col("w")))
+          // nChosen counts CHOOSING components (a doubly-chosen edge rides
+          // twice), so it is up to 2x the distinct chosen edges; the
+          // metaDriverMax gate is therefore CONSERVATIVE — overcounting
+          // can only push the merge to the distributed path early, never
+          // collect too much.
+          val nChosen = chosen.count() // materialized: free
+          val small = nChosen <= metaDriverMax
+          if (nChosen == 0) crossing = 0
+          else {
+            // merged-set relabeling: set -> its MIN member, the labeling
+            // the components kernel yields
+            val mapping =
+              if (small) {
+                val sets = new UnionFind[Any]()(UnionFind.SqlOrder)
+                chosen.select("ca", "cb").collect()
+                  .foreach(x => sets.union(x.get(0), x.get(1)))
+                val rows = sets.labels.map { case (m, root) => Row(m, root) }
+                // RDD-backed, NOT a local relation: a round-1 mapping is
+                // V-sized (every node picks an edge in round 1), and a
+                // LocalRelation that size would be embedded in the plan
+                // LITERALLY — re-analyzed and re-serialized by every
+                // downstream job that touches either join side.
+                // Parallelized, the mapping is task data like any other
+                // frame and the broadcast below ships it once.
+                driverFrame(rows, math.max(1, rows.length / 50000),
+                  "c" -> idType, "c2" -> idType)
+              } else
+                components(loop, "msf_contract_round/components",
+                  chosen.select(col("ca").as("src"), col("cb").as("dst")),
+                  rounds = 6, pairsDistinct = false, undirectedPairs = false)
+                  .select(col("id").as("c"), col("component").as("c2"))
+            // contract: relabel endpoints, drop intra-component edges,
+            // keep the lightest (w, oa, ob) edge per component pair. The
+            // broadcast hint only applies to the driver-sized mapping;
+            // the distributed branch's mapping shuffles normally. This
+            // carry supersedes the kernel's chains nested under it.
+            val m = struct(col("w"), col("oa"), col("ob"))
+            def side(from: String, to: String) = {
+              val s0 = mapping.select(col("c").as(from), col("c2").as(to))
+              if (small) broadcast(s0) else s0
             }
-            es.foreach { case (x, y) =>
-              val (rx, ry) = (find(x), find(y)); if (rx != ry) parent(rx) = ry
-            }
-            val members = (es.map(_._1) ++ es.map(_._2)).distinct
-            val minOfRoot = members.groupBy(find).map { case (root, ms) =>
-              root -> ms.min(anyOrd)
-            }
-            val spark = edges.sparkSession
-            // RDD-backed, NOT .toSeq.toDF: a round-1 mapping is
-            // V-sized (every node picks an edge in round 1), and a
-            // LocalRelation that size would be embedded in the plan
-            // LITERALLY — re-analyzed and re-serialized by every
-            // downstream job that touches either join side.
-            // Parallelized, the mapping is task data like any other
-            // frame and the broadcast below ships it once.
-            val idType = chosen.schema("ca").dataType
-            val rows = members.map(m =>
-              org.apache.spark.sql.Row(m, minOfRoot(find(m))))
-            spark.createDataFrame(
-              spark.sparkContext.parallelize(rows.toIndexedSeq,
-                math.max(1, members.length / 50000)),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("c", idType),
-                org.apache.spark.sql.types.StructField("c2", idType))))
-          } else
-            connectedComponents(
-              chosen.select(col("ca").as("src"), col("cb").as("dst")),
-              rounds = 6, pairsDistinct = false)
-              .select(col("id").as("c"), col("component").as("c2"))
-        // contract: relabel endpoints, drop intra-component edges, keep
-        // the lightest (w, oa, ob) edge per component pair. The
-        // broadcast hint only applies to the driver-sized mapping; the
-        // distributed-CC branch's mapping shuffles normally.
-        val m = struct(col("w"), col("oa"), col("ob"))
-        def side(from: String, to: String) = {
-          val s0 = mapping.select(col("c").as(from), col("c2").as(to))
-          if (nChosen <= metaDriverMax) broadcast(s0) else s0
-        }
-        val prevLive = live
-        val ct = live
-          .join(side("ca", "ma"), Seq("ca"), "left")
-          .join(side("cb", "mb"), Seq("cb"), "left")
-          .select(coalesce(col("ma"), col("ca")).as("na"),
-            coalesce(col("mb"), col("cb")).as("nb"),
-            col("w"), col("oa"), col("ob"))
-          .filter(col("na") =!= col("nb"))
-          .select(least(col("na"), col("nb")).as("ca"),
-            greatest(col("na"), col("nb")).as("cb"),
-            col("w"), col("oa"), col("ob"))
-          .groupBy("ca", "cb").agg(min(m).as("m"))
-          .select(col("ca"), col("cb"), col("m.w").as("w"),
-            col("m.oa").as("oa"), col("m.ob").as("ob"))
-        graft.core.PlanTrace.round("msf_contract_round", ct)
-        live = ct.localCheckpoint(true)
-        crossing = live.count()
-        // prev round's live frame is dead (chosen frames stay: forest
-        // is a lazy union over them; round 1's prev is a projection of
-        // canon, where drop() is a strict no-op)
-        graft.core.Checkpoints.drop(prevLive)
-        // driver tail: the meta-graph is metadata-scale — collect the
-        // (already materialized) live frame and finish with Kruskal
-        // instead of paying ~5 more jobs per geometric-tail round
-        if (crossing > 0 && crossing <= driverTailMax) {
-          val rows = live.select("ca", "cb", "w", "oa", "ob").collect()
-          forest = forest.unionByName(kruskalTail(rows))
-          graft.core.Checkpoints.drop(live)
-          crossing = 0
+            live = loop.carry("msf_contract_round", live
+              .join(side("ca", "ma"), Seq("ca"), "left")
+              .join(side("cb", "mb"), Seq("cb"), "left")
+              .select(coalesce(col("ma"), col("ca")).as("na"),
+                coalesce(col("mb"), col("cb")).as("nb"),
+                col("w"), col("oa"), col("ob"))
+              .filter(col("na") =!= col("nb"))
+              .select(least(col("na"), col("nb")).as("ca"),
+                greatest(col("na"), col("nb")).as("cb"),
+                col("w"), col("oa"), col("ob"))
+              .groupBy("ca", "cb").agg(min(m).as("m"))
+              .select(col("ca"), col("cb"), col("m.w").as("w"),
+                col("m.oa").as("oa"), col("m.ob").as("ob")), eager = true)
+            crossing = live.count()
+            // driver tail: the meta-graph is metadata-scale — collect the
+            // (already materialized) live frame and finish with Kruskal
+            // instead of paying ~5 more jobs per geometric-tail round
+            if (crossing > 0 && crossing <= driverTailMax) kruskalTail()
+          }
         }
       }
+      // ONE forest-sized dedup replaces the per-round distinct: the only
+      // duplicates possible are the doubly-chosen (both-endpoint) edges
+      forest.select("a", "b", "w").distinct()
     }
-    } // withLoopShuffle
-    // canon is dead once the loop exits: round 1 and the driver tail
-    // are materialized, and forest's `canon.limit(0)` seed is folded
-    // to an empty LocalRelation by OptimizeLimitZero before execution.
-    // (A caller-persisted canonical frame is not a bare checkpoint
-    // LogicalRDD, so drop() is a strict no-op there.)
-    graft.core.Checkpoints.drop(canon)
-    // ONE forest-sized dedup replaces the per-round distinct: the only
-    // duplicates possible are the doubly-chosen (both-endpoint) edges
-    forest.select("a", "b", "w").distinct()
-  }
 
   /** Community detection by synchronous label propagation (LPA):
     * every node simultaneously adopts the most frequent label among its

@@ -315,31 +315,6 @@ object Dedup {
       .select("id_a", "id_b", "hamming")
   }
 
-  /** Duplicate GROUPS from verified near-dup pairs — the final step of
-    * the dedup pipeline (candidates → verify → cluster → keep one per
-    * group): connected components over the pair graph, each doc labelled
-    * with the minimum doc id of its group (that min IS the canonical
-    * survivor; ids cast to long, so the min is numeric).
-    *
-    * r9 retires the former GraphX Pregel twin; the one semantic now has
-    * the repo's standard hybrid shape (the
-    * [[graft.graph.GraphAnalytics.minimumSpanningForest]]
-    * `metaDriverMax` argument): VERIFIED near-dup pairs are the tiny
-    * tail of the dedup pipeline — banding already collapsed the corpus
-    * to collision candidates and Jaccard verification pruned those —
-    * so at ≤ `driverMax` pairs (two longs each, tens of MB) the
-    * component labelling is metadata-scale and runs as ONE collect +
-    * driver union-find (path-halving), exactly like the MSF driver
-    * tail and the distributed-rank offset collects. Above the gate
-    * (a 100-TB corpus with pathological duplication), the
-    * DataFrame-native pointer-jumping
-    * [[graft.graph.GraphAnalytics.connectedComponents]] takes over —
-    * the same engine `graph_components` benches and the randomized
-    * union-find spec pins (near-dup components have diameter ~2-3;
-    * the default 6 rounds cover any diameter up to ~126). Both paths
-    * produce the identical min-label answer (DedupSpec pins them
-    * against each other on the same pair set).
-    */
   /** Eval-set contamination scan (the decontamination step every
     * training pipeline runs before a data release): train docs sharing
     * at least `minShared` distinct word n-gram shingles with any eval
@@ -363,6 +338,31 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
+  /** Duplicate GROUPS from verified near-dup pairs — the final step of
+    * the dedup pipeline (candidates → verify → cluster → keep one per
+    * group): connected components over the pair graph, each doc labelled
+    * with the minimum doc id of its group (that min IS the canonical
+    * survivor; ids cast to long, so the min is numeric).
+    *
+    * r9 retires the former GraphX Pregel twin; the one semantic now has
+    * the repo's standard hybrid shape (the
+    * [[graft.graph.GraphAnalytics.minimumSpanningForest]]
+    * `metaDriverMax` argument): VERIFIED near-dup pairs are the tiny
+    * tail of the dedup pipeline — banding already collapsed the corpus
+    * to collision candidates and Jaccard verification pruned those —
+    * so at ≤ `driverMax` pairs (two longs each, tens of MB) the
+    * component labelling is metadata-scale and runs as ONE collect +
+    * driver [[graft.core.UnionFind]], exactly like the MSF driver
+    * tail and the distributed-rank offset collects. Above the gate
+    * (a 100-TB corpus with pathological duplication), the
+    * DataFrame-native pointer-jumping
+    * [[graft.graph.GraphAnalytics.connectedComponents]] takes over —
+    * the same engine `graph_components` benches and the randomized
+    * union-find spec pins (near-dup components have diameter ~2-3;
+    * the default 6 rounds cover any diameter up to ~126). Both paths
+    * produce the identical min-label answer (DedupSpec pins them
+    * against each other on the same pair set).
+    */
   def dupGroups(pairs: DataFrame, idACol: String = "id_a",
                 idBCol: String = "id_b",
                 driverMax: Int = 1000000): DataFrame = {
@@ -374,19 +374,9 @@ object Dedup {
     // costs exactly one pipeline pass with no checkpoint/count round
     val got = e.head(driverMax + 1)
     if (got.length <= driverMax) {
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = parent.getOrElseUpdate(x, x)
-        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-        r
-      }
-      got.foreach { r =>
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      // roots are unioned min-first, so find() is already the group min
-      val labelled = parent.keysIterator.map(id => (id, find(id))).toSeq
-      spark.createDataFrame(labelled).toDF("doc_id", "group_id")
+      val sets = new graft.core.UnionFind[Long]
+      got.foreach(r => sets.union(r.getLong(0), r.getLong(1)))
+      spark.createDataFrame(sets.labels).toDF("doc_id", "group_id")
     } else
       // over the gate: the full pair set re-derives distributed (the
       // head() above stopped early, so nothing is reusable anyway)
@@ -394,24 +384,6 @@ object Dedup {
         .select(col("id").as("doc_id"), col("component").as("group_id"))
   }
 
-  /** n-gram Jaccard verification of an explicit candidate-pair set —
-    * the post-LSH shape at scale: `pairs` (id_a, id_b) comes from
-    * [[minhashPairs]] (or any blocked candidate generator), and work is
-    * linear in |pairs| × shingles-per-doc, never quadratic in the
-    * corpus. |A∩B| = count of shared distinct shingles per pair (two
-    * equi-joins: pairs⋈shingles_a on id, then ⋈shingles_b on (id, sh));
-    * pairs with an empty intersection score 0 via the left join.
-    */
-  /** Incremental dedup — flag INCOMING batch documents that near-match
-    * the EXISTING corpus: band the batch, equi-join the corpus's banded
-    * index on (band_idx, band_key), verify candidates with n-gram
-    * Jaccard. This is the production shape at 100 TB: the corpus's
-    * banded projection is computed once and stored (bucketed by band
-    * key), each incoming crawl batch bands only ITSELF and probes the
-    * index — no batch×batch and no corpus×corpus pairing ever happens,
-    * so ingest cost is O(batch × collisions), independent of corpus
-    * re-pairing.
-    */
   /** The long-form banded index (id, band_idx, band_key) — the
     * projection a production corpus STORES (bucketed by band key) so
     * incoming batches probe it without re-banding the corpus. Pass its
@@ -423,6 +395,16 @@ object Dedup {
       posexplode(array((0 until bands).map(b => col(s"band$b")): _*))
         .as(Seq("band_idx", "band_key")))
 
+  /** Incremental dedup — flag INCOMING batch documents that near-match
+    * the EXISTING corpus: band the batch, equi-join the corpus's banded
+    * index on (band_idx, band_key), verify candidates with n-gram
+    * Jaccard. This is the production shape at 100 TB: the corpus's
+    * banded projection is computed once and stored (bucketed by band
+    * key), each incoming crawl batch bands only ITSELF and probes the
+    * index — no batch×batch and no corpus×corpus pairing ever happens,
+    * so ingest cost is O(batch × collisions), independent of corpus
+    * re-pairing.
+    */
   def incrementalDedup(batch: DataFrame, corpus: DataFrame,
                        idCol: String, textCol: String,
                        n: Int = 3, k: Int = 16, bands: Int = 4,
@@ -567,6 +549,14 @@ object Dedup {
           .as("jaccard"))
   }
 
+  /** n-gram Jaccard verification of an explicit candidate-pair set —
+    * the post-LSH shape at scale: `pairs` (id_a, id_b) comes from
+    * [[minhashPairs]] (or any blocked candidate generator), and work is
+    * linear in |pairs| × shingles-per-doc, never quadratic in the
+    * corpus. |A∩B| = count of shared distinct shingles per pair (two
+    * equi-joins: pairs⋈shingles_a on id, then ⋈shingles_b on (id, sh));
+    * pairs with an empty intersection score 0 via the left join.
+    */
   def jaccardForPairs(pairs: DataFrame, df: DataFrame, idCol: String,
                       textCol: String, n: Int = 2,
                       threshold: Double = 0.05): DataFrame = {

@@ -709,6 +709,17 @@ class RandomizedInvariantsSpec extends SparkSpec {
 
   test("minimumSpanningForest equals in-memory Kruskal under the same total order") {
     import graft.graph.GraphAnalytics
+    import org.apache.spark.sql.DataFrame
+    def forest(edges: DataFrame, tail: Long, meta: Long = 1000000L,
+               canonical: Boolean = false) =
+      GraphAnalytics.minimumSpanningForest(edges, driverTailMax = tail,
+          metaDriverMax = meta, canonicalInput = canonical)
+        .as[(String, String, Long)].collect().toSet
+    // every execution path must agree with Kruskal: tail = 0 forces every
+    // round distributed (Borůvka contraction all the way); the default
+    // takes the whole-graph driver tail on this size; a mid-size
+    // threshold runs distributed rounds, then the tail
+    val tails = Seq(0L, 200000L, 20L)
     for (seed <- Seq(91, 92, 93)) {
       val rnd = new scala.util.Random(seed)
       val n = 40
@@ -716,21 +727,6 @@ class RandomizedInvariantsSpec extends SparkSpec {
         (f"n${rnd.nextInt(n)}%02d", f"n${rnd.nextInt(n)}%02d",
           (1 + rnd.nextInt(9)).toLong)
       }.distinct
-      // both execution paths must agree with Kruskal: tail=0 forces
-      // every round distributed (Borůvka contraction all the way);
-      // the default takes the whole-graph driver tail on this size
-      val gotPerPath = Seq(0L, 200000L).map { tail =>
-        GraphAnalytics.minimumSpanningForest(
-            raw.toDF("src", "dst", "w"), driverTailMax = tail)
-          .as[(String, String, Long)].collect().toSet
-      }
-      // and a mid-size threshold exercises distributed-rounds-then-tail
-      val gotMixed = GraphAnalytics.minimumSpanningForest(
-          raw.toDF("src", "dst", "w"), driverTailMax = 20L)
-        .as[(String, String, Long)].collect().toSet
-      val got = gotPerPath.head
-      assert(gotPerPath(1) === got, s"seed=$seed (driver tail path)")
-      assert(gotMixed === got, s"seed=$seed (mixed path)")
       // reference Kruskal over the canonical (a, b, min w) edges with
       // the (w, a, b) total order — the unique MSF under that order
       val canon = raw.filter(e => e._1 != e._2)
@@ -748,8 +744,30 @@ class RandomizedInvariantsSpec extends SparkSpec {
           val (ra, rb) = (find(a), find(b))
           if (ra == rb) None else { parent(ra) = rb; Some((a, b, w)) }
       }.toSet
-      assert(got === want, s"seed=$seed")
+      val edges = raw.toDF("src", "dst", "w")
+      for (tail <- tails)
+        assert(forest(edges, tail) === want, s"seed=$seed driverTailMax=$tail")
+      // every contraction on the components kernel
+      assert(forest(edges, 0L, meta = 0L) === want, s"seed=$seed metaDriverMax=0")
+      // one row per undirected pair, a < b: the input skips the dedup
+      val canonEdges = canon.toDF("src", "dst", "w")
+      assert(forest(canonEdges, 0L, canonical = true) === want,
+        s"seed=$seed canonicalInput")
+      val persisted = canonEdges.persist()
+      try {
+        persisted.count()
+        assert(forest(persisted, 0L, canonical = true) === want,
+          s"seed=$seed canonicalInput, persisted")
+      } finally persisted.unpersist(blocking = true)
     }
+    // ids past U+FFFF: UTF-16 order puts P above Q and T, code point
+    // order (UTF-8 bytes, Spark's) below them; every path breaks the
+    // weight tie by Spark's order
+    val (p, q, t) = ("\uFFFF", "\uD83D\uDE00", "\uD83D\uDE01")
+    val triangle = Seq((p, q, 1L), (q, t, 1L), (t, p, 1L)).toDF("src", "dst", "w")
+    for (tail <- tails)
+      assert(forest(triangle, tail) === Set((p, q, 1L), (p, t, 1L)),
+        s"triangle driverTailMax=$tail")
   }
 
   test("funnelSteps equals an in-memory greedy walk on random event streams") {

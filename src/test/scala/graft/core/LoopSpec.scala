@@ -76,6 +76,23 @@ class LoopSpec extends SparkSpec {
     assert(out.as[Long].collect().sorted === Array(4L, 5L, 6L))
   }
 
+  test("a frame of a chain supersedes the chains nested under it") {
+    var outer0, inner, innerUnd, outer1: DataFrame = null
+    val out = Loop.run(spark, Loop.Lazy) { loop =>
+      outer0 = loop.seed("loopspec_outer", Seq(1L, 2L, 3L).toDF("x"))
+      innerUnd = loop.seed("loopspec_outer/inner_und", step(outer0))
+      inner = loop.carry("loopspec_inner", step(innerUnd), eager = true,
+        chain = "loopspec_outer/inner")
+      // a nested frame leaves the outer chain's newest frame held
+      assert(!released(outer0) && !released(innerUnd) && !released(inner))
+      outer1 = loop.carry("loopspec_outer", outer0.join(inner, "x"), eager = true)
+      assert(released(inner) && released(innerUnd) && released(outer0))
+      outer1
+    }
+    assert(!released(outer1))
+    assert(out.as[Long].collect().sorted === Array(3L))
+  }
+
   test("an eager carry's one job checkpoints the lazy carries it computes and releases what they read") {
     val sc = spark.sparkContext
     val (group, flush) = ("loopspec_truncate", "loopspec_flush")

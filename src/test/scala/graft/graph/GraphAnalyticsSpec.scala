@@ -781,6 +781,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("kcore, connectedComponents and coreness leave only the frames their output reads") {
+    import org.apache.spark.graft.StoredBlocks
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.LogicalRDD
     // a 4-clique with a 5-node pendant path (five peel rounds at k = 2)
@@ -792,6 +793,10 @@ class GraphAnalyticsSpec extends SparkSpec {
     val und = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
       .toDF("src", "dst").persist()
     und.count()
+    // MSF reads weighted edges; the weights tie, so (a, b) order decides
+    def msf(e: DataFrame, tail: Long, meta: Long) =
+      GraphAnalytics.minimumSpanningForest(e.withColumn("w", lit(1L)),
+        driverTailMax = tail, metaDriverMax = meta)
     val loops = Seq[(String, (DataFrame, Boolean) => DataFrame)](
       "kcore" -> ((e, u) => GraphAnalytics.kcore(e, k = 2, rounds = 8,
         undirectedPairs = u)),
@@ -812,23 +817,39 @@ class GraphAnalyticsSpec extends SparkSpec {
         rounds1 = 3, roundsMeta = 3, undirectedPairs = u)),
       "louvainLevels at metaDriverMax = 0" -> ((e, u) =>
         GraphAnalytics.louvainLevels(e, rounds1 = 3, roundsMeta = 3,
-          undirectedPairs = u, metaDriverMax = 0L)))
+          undirectedPairs = u, metaDriverMax = 0L)),
+      // the whole-graph driver tail; distributed rounds with the driver
+      // contraction; distributed rounds with the components kernel
+      "minimumSpanningForest" -> ((e, _) => msf(e, 1000000L, 1000000L)),
+      "minimumSpanningForest at driverTailMax = 0" -> ((e, _) =>
+        msf(e, 0L, 1000000L)),
+      "minimumSpanningForest at driverTailMax = 0, metaDriverMax = 0" ->
+        ((e, _) => msf(e, 0L, 0L)))
     try {
       for ((name, run) <- loops; (input, edges, u) <-
              Seq(("raw", raw, false), ("persisted", und, true))) {
-        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val before = StoredBlocks.rddBlocks().keySet
         val out = run(edges, u)
         // the output reads checkpointed frames only: the final frame of a
         // loop that converges on this graph before its last round, every
         // round's state frame of the Luby loops, the last frame of each
-        // Louvain level
+        // Louvain level, every round's chosen edges of MSF; besides them,
+        // MSF's Kruskal tail is a frame built on the driver
         val reads = out.queryExecution.analyzed
           .collect { case lr: LogicalRDD => lr.rdd }
-        assert(reads.nonEmpty && reads.forall(_.isCheckpointed), s"$name on $input")
+        val frames = reads.filterNot(r => name.startsWith("minimumSpanningForest") &&
+          StoredBlocks.driverBuilt(r))
+        assert(reads.nonEmpty && frames.forall(_.isCheckpointed), s"$name on $input")
         assert(out.collect().nonEmpty)
-        val left = spark.sparkContext.getPersistentRDDs.keySet -- before
-        assert(left.subsetOf(reads.map(_.id).toSet),
-          s"$name on $input pairs left ${(left -- reads.map(_.id)).size} frames it does not read")
+        // counted from the block manager, after the output's action: a
+        // frame the output does not read holds no block, one it reads
+        // holds every partition
+        val stored = StoredBlocks.rddBlocks()
+        val left = stored.keySet -- before
+        assert(left.subsetOf(frames.map(_.id).toSet),
+          s"$name on $input pairs left ${(left -- frames.map(_.id)).size} frames it does not read")
+        assert(frames.forall(r => stored.get(r.id).contains(r.partitions.length)),
+          s"$name on $input pairs reads a released frame")
       }
     } finally und.unpersist(blocking = true)
   }

@@ -31,8 +31,10 @@ walks_step reads the stored pair view.
 The msf_*, louvain_move_round_* and louvain_meta_round_* references are
 captures on the sf0.1 fixture: at sf0.01 MSF and the Louvain meta levels
 run on the driver and trace no rounds. Compare only those files; the
-components_* rounds this run writes come from MSF's contraction, not
-from the sf0.01 graph_components_fresh references.
+components_* rounds this run writes come from graph_msf_fresh's own
+connectedComponents pass over the sf0.1 undirected index (MSF contracts
+on the driver at sf0.1), not from the sf0.01 graph_components_fresh
+references.
 
   SPARK_DRIVER_MEM=6g SPARK_GRAFT_SF_DIR=path/to/sf0.1 \
       SPARK_GRAFT_PLAN_TRACE=/tmp/rounds4 sbt "runMain \
